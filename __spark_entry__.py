@@ -180,7 +180,9 @@ def _compose_union(
     recomputed from the parquet inputs on EVERY invocation (the
     checkpoint lives and dies inside one builder call — no cross-run
     reuse), the per-arm rows are bit-identical, and the union keeps
-    the arm order, so the oracle hash is unchanged. Opt-in per battery:
+    the arm order, so the oracle hash is unchanged. The checkpointed
+    blocks are unreplicated: an executor lost mid-battery fails the job
+    instead of recomputing the arm. Opt-in per battery:
     NOT safe when any arm mutates process-global state (ivf_topk's
     maint arm patches os.rename for crash injection, and its pred
     would see a concurrent arm's manifest commit), and pointless when
@@ -193,38 +195,7 @@ def _compose_union(
 
     if overlap_eager:
         def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # SPARK_GRAFT_OVERLAP (r17, r16 verdict #8): cluster profiles
-            # pick the materialization tier. ``eager`` (default) =
-            # localCheckpoint — fastest, but lineage-truncated blocks are
-            # unreplicated (an executor loss mid-battery fails the job
-            # instead of recomputing). ``reliable`` = checkpoint() against
-            # $SPARK_GRAFT_CHECKPOINT_DIR (set it to replicated storage on
-            # a cluster) — survives executor loss, costs a write+read.
-            # ``lazy`` = the plain lazy union (full lineage, AQE
-            # materializes independent subtrees concurrently at force
-            # time) — the zero-risk fallback. Rows are bit-identical in
-            # every mode; only failure-recovery semantics differ.
-            mode = os.environ.get("SPARK_GRAFT_OVERLAP", "eager")
-            if mode == "lazy":
-                return _pad_union([(tag, f(spark, sf_dir)) for tag, f in fns])
             from concurrent.futures import ThreadPoolExecutor
-
-            if mode == "reliable":
-                import tempfile
-
-                ck = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-                if ck:
-                    spark.sparkContext.setCheckpointDir(ck)
-                elif spark.sparkContext.getCheckpointDir() is None:
-                    spark.sparkContext.setCheckpointDir(
-                        os.path.join(tempfile.gettempdir(), "pps_reliable_ck")
-                    )
-
-                def _mat(df):
-                    return df.checkpoint(eager=True)
-            else:
-                def _mat(df):
-                    return df.localCheckpoint(eager=True)
 
             # lazy_arms (r17, r16 verdict #7): arms whose output is
             # ROW-SCALED (proportional to the input table) must never be
@@ -233,7 +204,7 @@ def _compose_union(
             # aggregate-sized / driver-fed-protocol arms overlap eagerly.
             def build(tag, f):
                 df = f(spark, sf_dir)
-                return df if tag in lazy_arms else _mat(df)
+                return df if tag in lazy_arms else df.localCheckpoint(eager=True)
 
             with ThreadPoolExecutor(max_workers=len(fns)) as pool:
                 futs = [(tag, pool.submit(build, tag, f)) for tag, f in fns]

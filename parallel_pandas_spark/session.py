@@ -25,11 +25,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with scale-aware defaults."""
+    """Build (or fetch) a SparkSession with scale-aware defaults.
+
+    ``extra_conf`` is applied last, so it overrides any conf set here."""
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(DEFAULT_SHUFFLE_PARTITIONS))
-    )
+    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -45,13 +45,9 @@ def get_spark(
         # by BYTES and cannot see per-row compute density; a lower floor
         # only binds in the shuffle-smaller-than-cluster regime, where
         # keeping the slots busy is the right call. At 100 TB shuffle
-        # sizes put every partition far above either floor, so the knob
-        # is inert there (advisory size governs); parameterised for
-        # cluster profiles that want the 1m default back.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # sizes put every partition far above either floor, so the floor
+        # is inert there (advisory size governs).
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Spark 4 enables ANSI mode by default, which makes division by a
@@ -75,11 +71,8 @@ def get_spark(
         # super-linear slope on stats_battery/apply_demean). 16m engages
         # every core wherever the file's row-group layout allows a split.
         # On a real multi-file 100 TB layout the default is fine — this
-        # knob matters exactly when file count < core count.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        # setting matters exactly when file count < core count.
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.worker.reuse", "true")
         # streaming drain-proof latency (r16): the harness proves a

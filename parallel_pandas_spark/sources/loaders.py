@@ -37,7 +37,7 @@ TABLES = (
 # handles instead — this cache is that, keyed by (path, file mtime) and
 # bound to the creating session. It holds a LAZY plan handle only (file
 # index + schema); all data is still computed from parquet on every
-# action. SPARK_GRAFT_TABLE_CACHE=0 disables it.
+# action.
 _TABLE_DFS: dict[tuple, tuple[float, DataFrame]] = {}
 
 
@@ -59,24 +59,20 @@ def load_table(
     scan layout. (The cached base handle is pre-spread; spread is
     re-applied per call.)"""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    use_cache = os.environ.get("SPARK_GRAFT_TABLE_CACHE", "1") not in (
-        "", "0",
-    )
     key = os.path.abspath(path)
-    if use_cache:
-        try:
-            stamp = os.path.getmtime(path)
-        except OSError:
-            stamp = None
-        hit = _TABLE_DFS.get(key)
-        if (
-            hit is not None
-            and stamp is not None
-            and hit[0] == stamp
-            and hit[1].sparkSession is spark
-        ):
-            df = hit[1]
-            return spread_scan(df, spread) if spread is not None else df
+    try:
+        stamp = os.path.getmtime(path)
+    except OSError:
+        stamp = None
+    hit = _TABLE_DFS.get(key)
+    if (
+        hit is not None
+        and stamp is not None
+        and hit[0] == stamp
+        and hit[1].sparkSession is spark
+    ):
+        df = hit[1]
+        return spread_scan(df, spread) if spread is not None else df
     try:
         df = spark.read.parquet(path)
     except Exception as e:
@@ -89,7 +85,7 @@ def load_table(
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if use_cache and stamp is not None:
+    if stamp is not None:
         _TABLE_DFS[key] = (stamp, df)
     if spread is not None:
         df = spread_scan(df, spread)

@@ -57,7 +57,11 @@ storage layer (SURVEY.md §1.1) — extension-tier scale infrastructure.
 from __future__ import annotations
 
 import glob
+import logging
 import os
+import shutil
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +69,8 @@ from pyspark.sql import types as T
 
 from parallel_pandas_spark.operators import cdc, incremental, rollup
 from parallel_pandas_spark.streaming.events import run_foreach_batch
+
+log = logging.getLogger(__name__)
 
 #: CDC change-record schema for the documents corpus: the docindex
 #: columns plus the CDC (ts, op) pair. ``fp`` arrives precomputed — the
@@ -254,10 +260,7 @@ def run_corpus_refresh_stream(
     co_schema = spark.read.parquet(base_corpus).schema
 
     def write_batch(batch_df, batch_id: int) -> None:
-        import time as _time
-
-        _prof = os.environ.get("SPARK_GRAFT_BATCH_PROF", "") not in ("", "0")
-        _t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         # fence anchor (r14 verdict #3): the txn this batch resolved its
         # input snapshots at — the commit refuses if it moved meanwhile
         begun_txn = int(_init_manifest(work_dir)["txn"])
@@ -286,75 +289,53 @@ def run_corpus_refresh_stream(
         # schema and overlaps on a second driver thread (guide §2.6).
         # The commit point is still ONLY the manifest rename below: a
         # crash between renames leaves orphan directories no reader
-        # resolves, exactly as before. Shared lineage (aff_fps' lazy
-        # localCheckpoint) is cached on first materialization; fusing
-        # di+co also evaluates that shared subtree once per batch
-        # instead of once per artifact job.
-        import shutil as _sh
-        from concurrent.futures import ThreadPoolExecutor
-
-        _t1 = _time.perf_counter()
-        if os.environ.get("SPARK_GRAFT_FUSED_ARTIFACTS", "1") in ("", "0"):
-            # 3-independent-writes form (the r16 shape): kept as the
-            # comparison arm and as a profile fallback — identical
-            # on-disk artifacts either way
-            writes = [
-                (di2, _art_dir(work_dir, "docindex", batch_id)),
-                (co2, _art_dir(work_dir, "corpus", batch_id)),
-                (delta, _art_dir(work_dir, "delta", batch_id)),
+        # resolves. Shared lineage (aff_fps' lazy localCheckpoint) is
+        # cached on first materialization; fusing di+co also evaluates
+        # that shared subtree once per batch instead of once per
+        # artifact job.
+        t1 = time.perf_counter()
+        staging = os.path.join(work_dir, f".staging_b{batch_id:05d}")
+        shutil.rmtree(staging, ignore_errors=True)
+        # structural: corpus rows are keeper rows OF the docindex, so the
+        # column sets always match; the assert guards a future refactor
+        # that would silently break the fused layout
+        assert set(co2.columns) == set(di2.columns), (di2.columns, co2.columns)
+        fused = di2.withColumn("__art", F.lit("di")).unionByName(
+            co2.select(*di2.columns).withColumn("__art", F.lit("co"))
+        )
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [
+                pool.submit(
+                    lambda: fused.write.mode("overwrite")
+                    .partitionBy("__art").parquet(staging)
+                ),
+                pool.submit(
+                    lambda: delta.write.mode("overwrite").parquet(
+                        _art_dir(work_dir, "delta", batch_id))
+                ),
             ]
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                list(pool.map(
-                    lambda t: t[0].write.mode("overwrite").parquet(t[1]),
-                    writes,
-                ))
-        else:
-            staging = os.path.join(work_dir, f".staging_b{batch_id:05d}")
-            _sh.rmtree(staging, ignore_errors=True)
-            # structural: corpus rows are keeper rows OF the docindex,
-            # so the column sets always match; the assert guards a
-            # future refactor that would silently break the fused layout
-            assert set(co2.columns) == set(di2.columns), (
-                di2.columns, co2.columns,
-            )
-            fused = di2.withColumn("__art", F.lit("di")).unionByName(
-                co2.select(*di2.columns).withColumn("__art", F.lit("co"))
-            )
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(
-                        lambda: fused.write.mode("overwrite")
-                        .partitionBy("__art").parquet(staging)
-                    ),
-                    pool.submit(
-                        lambda: delta.write.mode("overwrite").parquet(
-                            _art_dir(work_dir, "delta", batch_id))
-                    ),
-                ]
-                for f in futs:
-                    f.result()
-            for part, art, frame in (
-                ("di", "docindex", di2), ("co", "corpus", co2),
-            ):
-                src = os.path.join(staging, f"__art={part}")
-                dst = _art_dir(work_dir, art, batch_id)
-                _sh.rmtree(dst, ignore_errors=True)
-                if os.path.isdir(src):
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.rename(src, dst)
-                    # staging write completed above => data is
-                    # complete; the marker keeps the legacy commit
-                    # invariant
-                    open(os.path.join(dst, "_SUCCESS"), "w").close()
-                else:
-                    # dynamic partitioning emits no directory for an
-                    # EMPTY artifact — fall back to the direct write
-                    # (rare; a feed that deletes every doc), which
-                    # produces the empty-but-readable parquet dir the
-                    # old form did
-                    frame.write.mode("overwrite").parquet(dst)
-            _sh.rmtree(staging, ignore_errors=True)
-        _t2 = _time.perf_counter()
+            for f in futs:
+                f.result()
+        for part, art, frame in (
+            ("di", "docindex", di2), ("co", "corpus", co2),
+        ):
+            src = os.path.join(staging, f"__art={part}")
+            dst = _art_dir(work_dir, art, batch_id)
+            shutil.rmtree(dst, ignore_errors=True)
+            if os.path.isdir(src):
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
+                # staging write completed above => data is complete; the
+                # marker keeps the legacy commit invariant
+                open(os.path.join(dst, "_SUCCESS"), "w").close()
+            else:
+                # dynamic partitioning emits no directory for an EMPTY
+                # artifact (a feed that deletes every doc) — write it
+                # directly, which produces an empty-but-readable parquet
+                # dir
+                frame.write.mode("overwrite").parquet(dst)
+        shutil.rmtree(staging, ignore_errors=True)
+        t2 = time.perf_counter()
         # the manifest rename is the batch's COMMIT POINT: a crash
         # anywhere above leaves orphan directories no reader resolves;
         # the foreachBatch replay rewrites them and commits then. A
@@ -368,15 +349,10 @@ def run_corpus_refresh_stream(
                 man[k] = sorted(man[k] + [batch_id])
         man["txn"] += 1
         _commit_manifest(work_dir, man, expect_txn=begun_txn)
-        if _prof:
-            import sys as _sys
-
-            print(
-                f"BATCH_PROF b{batch_id}: plan={_t1 - _t0:.3f}s "
-                f"writes={_t2 - _t1:.3f}s "
-                f"commit={_time.perf_counter() - _t2:.3f}s",
-                file=_sys.stderr, flush=True,
-            )
+        log.debug(
+            "corpus batch b%d: plan=%.3fs writes=%.3fs commit=%.3fs",
+            batch_id, t1 - t0, t2 - t1, time.perf_counter() - t2,
+        )
 
     return run_foreach_batch(
         spark, make_stream, write_batch, checkpoint_dir,
@@ -460,8 +436,6 @@ def compact_corpus_artifacts(
     it — harmless, because read-outs ignore deltas at or below the
     snapshot id. Returns ``{"folded_to", "deltas_folded",
     "versions_deleted"}``."""
-    import shutil
-
     if keep_last < 2:
         raise ValueError(
             "keep_last must be >= 2: a restart replay of the newest "

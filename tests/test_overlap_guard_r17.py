@@ -5,12 +5,11 @@ only while every overlapped arm's output is aggregate-sized. A future
 arm with row-scaled output (proportional to the input table) would
 silently reintroduce a copy cost that grows with data. This test
 discovers every overlapped battery via the ``__overlap_eager__`` flag
-and pins the per-arm row-count bound, plus the knob's three modes.
+and pins the per-arm row-count bound, plus row parity with the
+sequential union.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -70,8 +69,9 @@ def test_every_overlapped_arm_output_is_aggregate_sized(spark):
 
 
 def test_overlap_mode_knob_rows_identical(spark):
-    """eager / lazy / reliable return bit-identical rows (the knob only
-    changes failure-recovery semantics)."""
+    """The eager battery returns bit-identical rows to the sequential
+    lazy union of its arms (checkpointing changes only failure-recovery
+    semantics)."""
     qs = entry.queries()
     fn = qs["pivot_battery"]
 
@@ -88,15 +88,5 @@ def test_overlap_mode_knob_rows_identical(spark):
             key=repr,
         )
 
-    prev = os.environ.get("SPARK_GRAFT_OVERLAP")
-    try:
-        os.environ["SPARK_GRAFT_OVERLAP"] = "eager"
-        base = _canon(fn(spark, SF))
-        for mode in ("lazy", "reliable"):
-            os.environ["SPARK_GRAFT_OVERLAP"] = mode
-            assert _canon(fn(spark, SF)) == base, mode
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_OVERLAP", None)
-        else:
-            os.environ["SPARK_GRAFT_OVERLAP"] = prev
+    reference = entry._pad_union([(t, f(spark, SF)) for t, f in fn.__arms__])
+    assert _canon(fn(spark, SF)) == _canon(reference)

@@ -146,26 +146,19 @@ def test_load_table_cache_identity_and_invalidation(spark, sf_small):
     _TABLE_DFS[key] = (stamp - 1.0, df)
     c = load_table(spark, sf_small, "region")
     assert c is not a
-    # kill-switch bypasses the cache entirely
-    os.environ["SPARK_GRAFT_TABLE_CACHE"] = "0"
-    try:
-        d = load_table(spark, sf_small, "region")
-        e = load_table(spark, sf_small, "region")
-        assert d is not e
-    finally:
-        os.environ.pop("SPARK_GRAFT_TABLE_CACHE", None)
+    # the cached handle is the same table a direct read yields
+    direct = spark.read.parquet(key)
+    assert a.schema == direct.schema
+    assert _rows(a) == _rows(direct)
 
 
 def test_load_table_cache_rows_identical(spark, sf_small):
     from parallel_pandas_spark.sources import load_table
 
-    cached = _rows(load_table(spark, sf_small, "nation"))
-    os.environ["SPARK_GRAFT_TABLE_CACHE"] = "0"
-    try:
-        fresh = _rows(load_table(spark, sf_small, "nation"))
-    finally:
-        os.environ.pop("SPARK_GRAFT_TABLE_CACHE", None)
-    assert cached == fresh
+    path = os.path.join(sf_small, "nation.parquet")
+    cached = load_table(spark, sf_small, "nation")
+    assert load_table(spark, sf_small, "nation") is cached
+    assert _rows(cached) == _rows(spark.read.parquet(path))
 
 
 # -------------------------------------------------------- tune_probes --

@@ -7,6 +7,7 @@ document set: the streaming composition of the r11 maintenance theorem."""
 
 from __future__ import annotations
 
+import glob
 import os
 import pathlib
 import sys
@@ -55,9 +56,9 @@ def _slices():
     ]
 
 
-def _write_slices(spark, d):
+def _write_slices(spark, d, slices=None):
     seen: set = set()
-    for k, rows in enumerate(_slices(), start=1):
+    for k, rows in enumerate(slices or _slices(), start=1):
         spark.createDataFrame(rows, sc.DOC_CHANGES_SCHEMA).coalesce(1).write \
             .mode("append").parquet(d)
         now = set(pathlib.Path(d).glob("part-*.parquet")) - seen
@@ -66,10 +67,10 @@ def _write_slices(spark, d):
         seen = set(pathlib.Path(d).glob("part-*.parquet"))
 
 
-def _rebuild(spark, base_di):
+def _rebuild(spark, base_di, slices=None):
     """From-scratch truth: apply ALL changes per global ts compaction,
     then keepers."""
-    allch = [r for s in _slices() for r in s]
+    allch = [r for s in slices or _slices() for r in s]
     feed = spark.createDataFrame(allch, sc.DOC_CHANGES_SCHEMA)
     from parallel_pandas_spark.operators import cdc
     comp = cdc.cdc_compact(feed, ["doc_id"], ["ts"], drop_deleted=False)
@@ -84,6 +85,18 @@ def _rebuild(spark, base_di):
 
 def _members(df):
     return sorted((r.doc_id, r.fp, r.n_chars) for r in df.collect())
+
+
+def _assert_committed_layout(work):
+    """Layout invariants the readers (and the legacy _versions scan) rely
+    on: per-version directories with a _SUCCESS marker, and no staging
+    leftovers from the fused docindex+corpus write."""
+    for art in ("docindex", "corpus", "delta"):
+        vers = glob.glob(os.path.join(work, art, "b*"))
+        assert vers, art
+        for d in vers:
+            assert os.path.isfile(os.path.join(d, "_SUCCESS")), d
+    assert not glob.glob(os.path.join(work, ".staging_b*"))
 
 
 def test_live_corpus_loop_restart_bit_equals_batch_rebuild(spark, tmp_path):
@@ -111,6 +124,7 @@ def test_live_corpus_loop_restart_bit_equals_batch_rebuild(spark, tmp_path):
     n1 = run(stop=2)
     assert n1 >= 2
     run()
+    _assert_committed_layout(work)
 
     di, co, final = sc.corpus_stream_readout(
         spark, base_state, work, _SPEC)
@@ -132,6 +146,34 @@ def test_live_corpus_loop_restart_bit_equals_batch_rebuild(spark, tmp_path):
     assert run() == 0
     _, _, again = sc.corpus_stream_readout(spark, base_state, work, _SPEC)
     assert {r["lang"]: tuple(r)[1:] for r in again.collect()} == want
+
+
+def test_feed_deleting_every_doc_writes_empty_artifacts(spark, tmp_path):
+    """A batch that deletes every doc leaves docindex and corpus empty;
+    dynamic partitioning then emits no staging directory for them, and
+    the direct-write fallback must still produce committed, readable,
+    empty version directories."""
+    base_di = _base(spark)
+    di_p, co_p = str(tmp_path / "base_di"), str(tmp_path / "base_co")
+    base_di.write.parquet(di_p)
+    incremental.keepers(base_di).write.parquet(co_p)
+    base_state = rollup.agg_state(spark.read.parquet(co_p), ["lang"], _SPEC)
+    wipe = [[(r.doc_id, None, None, r.fp, 10, "D") for r in base_di.collect()]]
+    feed_dir = str(tmp_path / "changes")
+    _write_slices(spark, feed_dir, wipe)
+    work = str(tmp_path / "work")
+    assert sc.run_corpus_refresh_stream(
+        spark, lambda: sc.stream_doc_changes(spark, feed_dir, max_files=1),
+        di_p, co_p, work, str(tmp_path / "ckpt"), _SPEC) == 1
+
+    _assert_committed_layout(work)
+    for art in ("docindex", "corpus"):
+        for d in glob.glob(os.path.join(work, art, "b*")):
+            assert spark.read.parquet(d).count() == 0, d
+    di, co, _ = sc.corpus_stream_readout(spark, base_state, work, _SPEC)
+    eff, keep = _rebuild(spark, base_di, wipe)
+    assert _members(di) == _members(eff) == []
+    assert _members(co) == _members(keep) == []
 
 
 def _setup_loop(spark, tmp_path):
