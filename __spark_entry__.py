@@ -8692,8 +8692,9 @@ FROM keep GROUP BY lang
 def corpus_incremental_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus maintenance end-to-end (operators/
     incremental.py): a compacted CDC feed (cdc.cdc_compact) is applied to
-    the standing deduplicated corpus via merge_upsert's broadcast
-    decomposition, keepers are recomputed ONLY for affected fingerprints,
+    the standing deduplicated corpus under broadcast joins only (the
+    feed — compaction, gate and fingerprints — is evaluated once, inside
+    refresh_corpus), keepers are recomputed ONLY for affected fingerprints,
     and the per-language rollup refreshes by exact integer RETRACTION
     (rollup.negate_state) — the snapshot is scanned but never shuffled,
     and nothing rescans the corpus to refresh the stats. The oracle is
@@ -8726,7 +8727,7 @@ def corpus_incremental_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("n_chars") < _INC_GATE),
             F.lit("D"),
         ).otherwise(F.lit("U")).alias("op"),
-    ).localCheckpoint(eager=False)
+    )
     _, corpus2, added, removed = incremental.refresh_corpus(
         docindex, corpus, src
     )
@@ -8803,15 +8804,17 @@ def corpus_livepost_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (r15 verdict #4 — formerly the rows-only '__corpusloop__'
     self-check in stream_tumbling_live). The full streaming lifecycle
     runs here: standing (docindex, corpus, rollup-state) artifacts from
-    doc_id%3!=0, a three-slice ts-ordered CDC feed (deletes / updates /
-    inserts) through the CHECKPOINTED foreachBatch refresh stream
-    (streaming/corpus.py), stopped after ONE data batch, changelog-
-    COMPACTED at the restart point (deltas folded into a snapshot,
-    superseded versions vacuumed), restarted to the drain — then the
-    read-out (per-lang corpus membership + finalized rollup INCLUDING
-    retraction-refreshed extrema) is returned for the driver to hash
-    against a DuckDB from-scratch rebuild over the same feed. Only
-    watermark TIMING remains rows-only in stream_tumbling_live."""
+    doc_id%3!=0 and a three-slice ts-ordered CDC feed (deletes /
+    updates / inserts) through the CHECKPOINTED foreachBatch refresh
+    stream (streaming/corpus.py). Slice 1 arrives first and is drained
+    in one micro-batch; the loop is changelog-COMPACTED at that restart
+    point (deltas folded into a snapshot, superseded versions vacuumed);
+    slices 2-3 then arrive and a restart from the same checkpoint drains
+    them in one more micro-batch. The read-out (per-lang corpus
+    membership + finalized rollup INCLUDING retraction-refreshed
+    extrema) is returned for the driver to hash against a DuckDB
+    from-scratch rebuild over the same feed. Only watermark TIMING
+    remains rows-only in stream_tumbling_live."""
     import pathlib as _pl
     import shutil as _sh
     import tempfile as _tf
@@ -8828,8 +8831,9 @@ def corpus_livepost_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing = docs.where(F.col("doc_id") % 3 != 0)
     base_di_p, base_co_p = f"{cbase}/di", f"{cbase}/co"
     cspec = {"n_chars": (0, 0)}
-    # three ts-ordered slices, written sequentially with forced mtimes
-    # (the FILE source orders part files by MODIFICATION time)
+    # three ts-ordered slices, each written as one file with a forced,
+    # ascending mtime (the FILE source orders part files by MODIFICATION
+    # time)
     moved = docs.where(F.col("doc_id") % 3 == 0)
     slices = [
         standing.where(F.col("doc_id") % 5 == 1).select(
@@ -8860,52 +8864,48 @@ def corpus_livepost_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
             base_co_p
         )
 
-    def _write_slices() -> None:
-        # sequential WITHIN this thread — the mtime order is the feed's
-        # arrival contract
-        seen: set = set()
-        for si, sl in enumerate(slices, start=1):
-            sl.coalesce(1).write.mode("append").parquet(cfeed)
+    def _append_slices(first: int, last: int) -> None:
+        # sequential — the mtime order is the feed's arrival contract
+        for si in range(first, last + 1):
+            seen = set(_pl.Path(cfeed).glob("part-*.parquet"))
+            slices[si - 1].coalesce(1).write.mode("append").parquet(cfeed)
             now = set(_pl.Path(cfeed).glob("part-*.parquet")) - seen
             os.utime(now.pop(), (1700000000 + si, 1700000000 + si))
-            seen = set(_pl.Path(cfeed).glob("part-*.parquet"))
 
-    # the standing-artifact chain and the slice feed are independent
-    # fixture writes — overlap them (guide §2.6); contents identical to
-    # the former sequential form
+    # the standing-artifact chain and the first slice are independent
+    # fixture writes — overlap them (guide §2.6)
     from concurrent.futures import ThreadPoolExecutor as _TPE
 
     with _TPE(max_workers=2) as _pool:
-        futs = [_pool.submit(_write_base), _pool.submit(_write_slices)]
+        futs = [
+            _pool.submit(_write_base), _pool.submit(_append_slices, 1, 1),
+        ]
         for f in futs:
             f.result()
     base_state = _ru.agg_state(
         spark.read.parquet(base_co_p), ["lang"], cspec
     ).localCheckpoint(eager=False)
 
-    def _mk_changes_crash():
-        return _sc.stream_doc_changes(spark, cfeed, max_files=1)
-
-    def _mk_changes_drain():
-        # the restarted drain run admits the remaining slices in one
+    def _mk_changes():
+        # every file present at a run's start is admitted in one
         # micro-batch: cdc_compact resolves ops by ts within the batch
         # and the slice key sets are disjoint, so the applied change set
-        # — and the hash-oracled final read-out — is identical to the
-        # one-file-per-batch form; only the per-batch fixed cost halves
+        # — and the hash-oracled read-out — equals the one-file-per-
+        # batch form
         return _sc.stream_doc_changes(spark, cfeed, max_files=len(slices))
 
     cwork, cck = f"{cbase}/work", f"{cbase}/ckpt"
     _sc.run_corpus_refresh_stream(
-        spark, _mk_changes_crash, base_di_p, base_co_p, cwork, cck, cspec,
-        stop_after_batches=1,
+        spark, _mk_changes, base_di_p, base_co_p, cwork, cck, cspec
     )
     # changelog-compact at the restart point — fold the committed delta
     # into a state snapshot and vacuum superseded versions, so the final
     # read-out is served from snapshot + post-compaction deltas (the
     # bounded-state path a long-running loop depends on)
     _sc.compact_corpus_artifacts(spark, base_state, cwork, cspec)
+    _append_slices(2, len(slices))
     _sc.run_corpus_refresh_stream(
-        spark, _mk_changes_drain, base_di_p, base_co_p, cwork, cck, cspec
+        spark, _mk_changes, base_di_p, base_co_p, cwork, cck, cspec
     )
     _, co_live, fin_live = _sc.corpus_stream_readout(
         spark, base_state, cwork, cspec

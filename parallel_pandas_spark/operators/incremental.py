@@ -16,11 +16,14 @@ A corpus build (see ``corpus_build_pipeline``) maintains two artifacts:
 artifacts with the invariant that the result is ROW-IDENTICAL to a
 from-scratch rebuild on the changed input (driver-oracled against
 exactly that recompute). The 100 TB plan shape: the snapshot side is
-scanned but NEVER shuffled — every join against ``docindex``/``corpus``
-broadcasts the feed-derived side (merge_upsert's broadcast anti/semi
-decomposition, cdc.py:116; plan-fenced in tests/test_incremental_r11.py)
-— and keeper recomputation touches only the fingerprints the feed
-affected (feed-sized, not corpus-sized).
+scanned but NEVER shuffled — the new doc index is the standing index
+LEFT ANTI a broadcast of the feed's keys, unioned with the feed's live
+rows, and every other join against ``docindex``/``corpus`` broadcasts a
+feed-derived side (plan-fenced in tests/test_incremental_r11.py) — and
+keeper recomputation touches only the fingerprints the feed affected
+(feed-sized, not corpus-sized). Each feed-sized intermediate (the change
+set, the affected-fingerprint set, the recomputed keepers) is evaluated
+once per call, whatever number of downstream writes read it.
 
 Rollup refresh composes via RETRACTION (rollup.negate_state): the det
 fixed-point power sums are exact integers, so ``state + state(added
@@ -40,8 +43,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from parallel_pandas_spark.operators.cdc import merge_upsert
 
 
 def keepers(docindex: DataFrame, fp_col: str = "fp", id_col: str = "doc_id") -> DataFrame:
@@ -78,34 +79,46 @@ def refresh_corpus(
     deduplicated corpus) — exactly the inputs rollup retraction needs.
 
     Plan contract (fenced in tests): the snapshot (docindex/corpus) is
-    never shuffled — merge_upsert runs its broadcast anti/semi
-    decomposition, the affected-fingerprint set is feed-sized and
-    broadcast back, and only feed-sized intermediates (the affected
-    docs, the keeper delta) ever hit an exchange.
+    never shuffled. ``docindex2`` is the standing rows whose id the feed
+    does not carry (a null-safe LEFT ANTI against the broadcast feed
+    keys, as a MERGE ON ``<=>`` clause matches) unioned with the feed's
+    live rows; the affected-fingerprint set is feed-sized and broadcast
+    back; and only feed-sized intermediates (the affected docs, the
+    keeper delta) ever hit an exchange. The change set, the affected
+    fingerprints and the recomputed keepers are each materialised once
+    (``localCheckpoint``): every consumer below reads the stored rows
+    instead of re-running the caller's compaction window or the keeper
+    window per subtree.
     """
-    docindex2 = merge_upsert(
-        docindex, changes, [id_col], op_col=op_col, delete_op=delete_op,
-        broadcast_source=True,
-    ).drop("action")
+    # feed-sized by contract: evaluate the caller's plan (typically a
+    # cdc_compact window over a micro-batch) once for every leg below
+    changes = changes.localCheckpoint(eager=False)
+    live = changes.where(
+        ~F.col(op_col).eqNullSafe(F.lit(delete_op))
+    ).select(*docindex.columns)
+    keys = F.broadcast(changes.select(id_col).alias("__ch"))
+    on_key = F.col(f"__di.{id_col}").eqNullSafe(F.col(f"__ch.{id_col}"))
+    keep = docindex.alias("__di").join(keys, on_key, "left_anti")
+    docindex2 = keep.unionByName(live)
     # fingerprints whose keeper can change: those introduced by live feed
     # rows, plus those of standing rows the feed touched (deleted,
     # updated, or overwritten) — both feed-sized
-    live_fps = changes.where(
-        ~F.col(op_col).eqNullSafe(F.lit(delete_op))
+    touched_fps = docindex.alias("__di").join(
+        keys, on_key, "left_semi"
     ).select(fp_col)
-    touched_fps = docindex.join(
-        F.broadcast(changes.select(id_col)), on=id_col, how="left_semi"
-    ).select(fp_col)
-    # checkpoint: aff_fps feeds THREE broadcast joins below, and without
-    # a barrier each one would recompute it — including touched_fps's
-    # full docindex scan, i.e. two extra corpus scans at 100 TB. The
-    # materialized set is feed-sized.
-    aff_fps = live_fps.unionByName(touched_fps).distinct().localCheckpoint(
-        eager=False
+    # checkpoint: aff_fps feeds three broadcast joins below; the
+    # materialized set is feed-sized, and without a barrier each join
+    # would re-run touched_fps's docindex scan
+    aff_fps = (
+        live.select(fp_col)
+        .unionByName(touched_fps)
+        .distinct()
+        .localCheckpoint(eager=False)
     )
-    # recompute keepers ONLY within affected fingerprints (feed-sized)
+    # recompute keepers ONLY within affected fingerprints (feed-sized);
+    # both the corpus write and the rollup delta read them
     aff_docs = docindex2.join(F.broadcast(aff_fps), on=fp_col, how="left_semi")
-    new_keep = keepers(aff_docs, fp_col, id_col)
+    new_keep = keepers(aff_docs, fp_col, id_col).localCheckpoint(eager=False)
     old_keep = corpus.join(F.broadcast(aff_fps), on=fp_col, how="left_semi")
     untouched = corpus.join(F.broadcast(aff_fps), on=fp_col, how="left_anti")
     corpus2 = untouched.unionByName(

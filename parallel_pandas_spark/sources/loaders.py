@@ -34,11 +34,32 @@ TABLES = (
 # query builder re-reading the same immutable table paid one fixed-cost
 # job per load (measured: ~0.1-0.15 s/job locally; it was 1 of the 3
 # build jobs in EVERY ANN arm). A resident engine holds catalog table
-# handles instead — this cache is that, keyed by (path, file mtime) and
-# bound to the creating session. It holds a LAZY plan handle only (file
-# index + schema); all data is still computed from parquet on every
-# action.
-_TABLE_DFS: dict[tuple, tuple[float, DataFrame]] = {}
+# handles instead — this cache is that, keyed by (path, content stamp)
+# and bound to the creating session. It holds a LAZY plan handle only
+# (file index + schema); all data is still computed from parquet on
+# every action.
+_TABLE_DFS: dict[str, tuple[tuple[int, int], DataFrame]] = {}
+
+
+def _content_stamp(path: str) -> "tuple[int, int] | None":
+    """(newest ``st_mtime_ns``, total bytes) over a table's files — one
+    file, or every file under a ``<name>.parquet`` directory. A part
+    file rewritten in place moves this stamp while the directory's own
+    mtime stays put (rewriting a file does not touch its directory
+    entry), so a directory-mtime key would serve a stale file index."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (st.st_mtime_ns, st.st_size)
+        newest = total = 0
+        for root, _, files in os.walk(path):
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                newest = max(newest, st.st_mtime_ns)
+                total += st.st_size
+        return (newest, total)
+    except OSError:
+        return None
 
 
 def load_table(
@@ -60,10 +81,7 @@ def load_table(
     re-applied per call.)"""
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = os.path.abspath(path)
-    try:
-        stamp = os.path.getmtime(path)
-    except OSError:
-        stamp = None
+    stamp = _content_stamp(path)
     hit = _TABLE_DFS.get(key)
     if (
         hit is not None

@@ -13,7 +13,7 @@ idempotent per batch id):
   when none) and OVERWRITES version *i*. A replay of batch *i* after a
   crash re-reads the same *j < i* snapshot — never its own partial
   output — and rewrites *i* identically. Membership application
-  (merge_upsert + keeper recompute) is deterministic, so replays are
+  (anti-join + union, keeper recompute) is deterministic, so replays are
   bit-identical.
 - **Rollup refresh is delta-based, not in-place**: each batch writes a
   MERGEABLE delta state (``agg_state(added) ∪ negate_state(state(
@@ -34,8 +34,9 @@ micro-batches and there is no event-time aggregation state to bound; a
 "late" change is simply a later CDC record and applies in arrival order.
 
 100 TB shape: every per-batch plan is the refresh_corpus plan — the
-snapshot is scanned but never shuffled (broadcast merge decomposition,
-feed-sized intermediates; plan fence in tests/test_incremental_r11.py).
+snapshot is scanned but never shuffled (broadcast anti/semi joins,
+feed-sized intermediates each evaluated once; plan fences in
+tests/test_incremental_r11.py and tests/test_streaming_corpus_r12.py).
 Snapshot versioning here rewrites the full artifact per batch for
 byte-level simplicity; visibility is SNAPSHOT-ISOLATED by a single-file
 JSON manifest (r13): the atomic ``_MANIFEST.json`` rename is the commit
@@ -227,6 +228,47 @@ def _latest_dir(work_dir: str, art: str, below: int) -> "str | None":
     return _art_dir(work_dir, art, ids[-1]) if ids else None
 
 
+def _batch_frames(
+    di: DataFrame,
+    co: DataFrame,
+    batch_df: DataFrame,
+    keys: list,
+    spec: dict,
+    id_col: str = "doc_id",
+    fp_col: str = "fp",
+    ts_col: str = "ts",
+) -> tuple:
+    """One micro-batch's plan against the snapshot ``(di, co)``: compact
+    the batch's changes, apply them
+    (:func:`~parallel_pandas_spark.operators.incremental.refresh_corpus`,
+    which evaluates the compacted batch and its keeper recompute once),
+    and build the two writes — the docindex+corpus pair FUSED into one
+    frame tagged by ``__art`` (corpus rows are docindex keeper rows, so
+    the pair shares a schema and is written as one partitioned job),
+    and the rollup delta ``agg_state(added) ∪ negate_state(
+    agg_state(removed))``. Returns ``(fused, delta, di2, co2)``."""
+    cols = list(spec)
+    changes = cdc.cdc_compact(
+        batch_df, [id_col], [ts_col], drop_deleted=False
+    ).drop(ts_col)
+    di2, co2, added, removed = incremental.refresh_corpus(
+        di, co, changes, id_col=id_col, fp_col=fp_col
+    )
+    delta = rollup.agg_state(added, keys, spec).unionByName(
+        rollup.negate_state(
+            rollup.agg_state(removed, keys, spec), cols, keys=keys
+        )
+    )
+    # structural: corpus rows are keeper rows OF the docindex, so the
+    # column sets always match; the assert guards a future refactor
+    # that would silently break the fused layout
+    assert set(co2.columns) == set(di2.columns), (di2.columns, co2.columns)
+    fused = di2.withColumn("__art", F.lit("di")).unionByName(
+        co2.select(*di2.columns).withColumn("__art", F.lit("co"))
+    )
+    return fused, delta, di2, co2
+
+
 def run_corpus_refresh_stream(
     spark: SparkSession,
     make_stream,
@@ -245,12 +287,14 @@ def run_corpus_refresh_stream(
     """Drive the live maintenance loop (see module docstring): per
     micro-batch, compact the batch's changes, apply them to the snapshot
     at the greatest version below this batch id, and overwrite version
-    ``b<batch_id>`` of ``<work_dir>/{docindex,corpus,delta}``. Returns
-    the number of data batches committed in this run; call again with
-    the same checkpoint to resume after a stop (restart recovery is the
+    ``b<batch_id>`` of ``<work_dir>/{docindex,corpus,delta}``. Runs to
+    the drain of the changes present at start, or stops after
+    ``stop_after_batches`` committed batches
+    (:func:`~parallel_pandas_spark.streaming.events.run_foreach_batch`).
+    Returns the number of data batches committed in this run; call
+    again with the same checkpoint to resume (restart recovery is the
     point — pinned in tests with a mid-stream stop)."""
     keys = list(keys)
-    cols = list(spec)
     # artifact schemas are stable across versions (docindex2/corpus2
     # carry the base columns forward), so pin them ONCE per stream run:
     # every per-batch spark.read.parquet otherwise runs a footer
@@ -266,43 +310,23 @@ def run_corpus_refresh_stream(
         begun_txn = int(_init_manifest(work_dir)["txn"])
         snap_di = _latest_dir(work_dir, "docindex", batch_id) or base_docindex
         snap_co = _latest_dir(work_dir, "corpus", batch_id) or base_corpus
-        di = spark.read.schema(di_schema).parquet(snap_di)
-        co = spark.read.schema(co_schema).parquet(snap_co)
-        changes = cdc.cdc_compact(
-            batch_df, [id_col], [ts_col], drop_deleted=False
-        ).drop(ts_col)
-        di2, co2, added, removed = incremental.refresh_corpus(
-            di, co, changes, id_col=id_col, fp_col=fp_col
+        fused, delta, di2, co2 = _batch_frames(
+            spark.read.schema(di_schema).parquet(snap_di),
+            spark.read.schema(co_schema).parquet(snap_co),
+            batch_df, keys, spec, id_col, fp_col, ts_col,
         )
-        delta = rollup.agg_state(added, keys, spec).unionByName(
-            rollup.negate_state(
-                rollup.agg_state(removed, keys, spec), cols, keys=keys
-            )
-        )
-        # artifact writes (r16 verdict #6): docindex and corpus share a
-        # schema (corpus rows ARE docindex keeper rows), so the pair is
-        # written as ONE partitioned job into a staging dir whose
-        # partition directories are renamed into the standard layout —
-        # readers see byte-identical per-artifact directories (plus the
-        # _SUCCESS marker the legacy manifest-less resolution expects,
-        # created after the completed staging write). delta has its own
-        # schema and overlaps on a second driver thread (guide §2.6).
-        # The commit point is still ONLY the manifest rename below: a
-        # crash between renames leaves orphan directories no reader
-        # resolves. Shared lineage (aff_fps' lazy localCheckpoint) is
-        # cached on first materialization; fusing di+co also evaluates
-        # that shared subtree once per batch instead of once per
-        # artifact job.
+        # artifact writes (r16 verdict #6): the fused docindex+corpus
+        # frame is written into a staging dir whose partition
+        # directories are renamed into the standard layout — readers see
+        # byte-identical per-artifact directories (plus the _SUCCESS
+        # marker the legacy manifest-less resolution expects, created
+        # after the completed staging write). delta has its own schema
+        # and overlaps on a second driver thread (guide §2.6). The
+        # commit point is still ONLY the manifest rename below: a crash
+        # between renames leaves orphan directories no reader resolves.
         t1 = time.perf_counter()
         staging = os.path.join(work_dir, f".staging_b{batch_id:05d}")
         shutil.rmtree(staging, ignore_errors=True)
-        # structural: corpus rows are keeper rows OF the docindex, so the
-        # column sets always match; the assert guards a future refactor
-        # that would silently break the fused layout
-        assert set(co2.columns) == set(di2.columns), (di2.columns, co2.columns)
-        fused = di2.withColumn("__art", F.lit("di")).unionByName(
-            co2.select(*di2.columns).withColumn("__art", F.lit("co"))
-        )
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [
                 pool.submit(

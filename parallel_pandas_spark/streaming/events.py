@@ -382,7 +382,6 @@ def run_stateful_to_parquet(
     out_dir: str,
     checkpoint_dir: str,
     stop_after_batches: "int | None" = None,
-    poll_secs: float = 0.25,
     timeout_secs: float = 180.0,
     batch_transform: "callable | None" = None,
 ):
@@ -398,10 +397,10 @@ def run_stateful_to_parquet(
 
     ``make_stream()`` builds the streaming DataFrame fresh per start (a
     streaming plan cannot be restarted from the same object).
-    ``stop_after_batches=N`` stops the query after N batches have
+    ``stop_after_batches=N`` stops the query after exactly N batches have
     committed data (simulating a crash mid-stream); ``None`` runs to the
-    source-offset drain proof. Returns the number of data batches
-    committed in THIS run."""
+    drain (see :func:`run_foreach_batch`). Returns the number of data
+    batches committed in THIS run."""
 
     def write_batch(batch_df, batch_id: int) -> None:
         # overwrite by batch id => replays after a restart are idempotent.
@@ -418,9 +417,16 @@ def run_stateful_to_parquet(
 
     return run_foreach_batch(
         spark, make_stream, write_batch, checkpoint_dir,
-        stop_after_batches=stop_after_batches, poll_secs=poll_secs,
-        timeout_secs=timeout_secs,
+        stop_after_batches=stop_after_batches, timeout_secs=timeout_secs,
     )
+
+
+class _StopAtBatch(Exception):
+    """Raised by :func:`run_foreach_batch`'s sink wrapper on ENTERING the
+    batch a run stops at (the one after a crash simulation's N, or the
+    first after a pandas-state drain is proven): the batch runs no
+    write, so the query ends with every earlier batch committed and the
+    next start replays this one from its logged offsets."""
 
 
 def run_foreach_batch(
@@ -429,63 +435,97 @@ def run_foreach_batch(
     write_batch: "callable",
     checkpoint_dir: str,
     stop_after_batches: "int | None" = None,
-    poll_secs: float = 0.25,
     timeout_secs: float = 180.0,
 ) -> int:
     """The generic checkpointed foreachBatch driver shared by
     :func:`run_stateful_to_parquet` and streaming/corpus.py's live
     corpus-maintenance loop: start the query with ``write_batch`` as the
-    sink, stop after N committed DATA batches (crash simulation) or run
-    to the source-offset drain proof, always stop+await on exit.
-    ``write_batch(batch_df, batch_id)`` owns the exactly-once story —
-    the contract is that it must be IDEMPOTENT per batch id (foreachBatch
-    is at-least-once; overwrite-by-batch-id is the standard move).
-    Returns the number of data batches committed in THIS run."""
-    import time
+    sink, and run it to the drain or stop it after N committed DATA
+    batches (crash simulation). ``write_batch(batch_df, batch_id)`` owns
+    the exactly-once story — the contract is that it must be IDEMPOTENT
+    per batch id (foreachBatch is at-least-once; overwrite-by-batch-id
+    is the standard move). Returns the number of data batches committed
+    in THIS run.
 
-    # crash-simulation mode keeps the 1 s cadence so the stop lands
-    # BETWEEN batches deterministically; drain mode has no pacing
-    # contract — trigger back-to-back so the final empty trigger (the
-    # drain proof) fires immediately after the last data batch instead
-    # of up to 1 s later (r16, guide §1: fixed wall-clock overhead)
-    interval = "1 second" if stop_after_batches is not None else "0 seconds"
-    q = (
-        make_stream()
-        .writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=interval)
-        .start()
-    )
-    deadline = time.time() + timeout_secs
+    Every run ends inside the engine, never by ``q.stop()`` landing in a
+    running batch (which kills the stream thread mid-``foreachBatch``):
+
+    - **Drain** (``stop_after_batches=None``): ``Trigger.AvailableNow``
+      — the engine ends the query after processing exactly the data
+      available at start, which is the drain proof (as in
+      :func:`run_stream_to_memory`). A stream with
+      ``applyInPandasWithState`` never ends under AvailableNow (its
+      processing-time timers keep scheduling batches), so it runs
+      back-to-back triggers and stops at the first batch after the
+      source-offset proof (:func:`_offsets_drained`).
+    - **Crash simulation** (``stop_after_batches=N``): the sink wrapper
+      counts this run's committed data batches and stops on ENTERING
+      the next batch after N, so exactly N commit on any host speed and
+      the next start replays batch N+1 from its logged offsets.
+
+    A stop raises a private signal in the sink before ``write_batch``
+    runs; the runner treats that signal, and only that signal, as the
+    intended end — any other failure propagates.
+    """
+    import threading
+
+    from pyspark.errors import StreamingQueryException
+
+    stream = make_stream()
+    pandas_state = _uses_pandas_state(stream)
+    started = threading.Event()
+    query: list = []
+    stopped: list = []
 
     def data_batches() -> int:
-        return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+        return sum(1 for p in query[0].recentProgress if p["numInputRows"] > 0)
+
+    def sink(batch_df, batch_id: int) -> None:
+        if stop_after_batches is not None or pandas_state:
+            # progress of every finished batch is recorded on the stream
+            # thread before the next trigger starts, so both checks are
+            # exact; the event only orders this read after start()
+            started.wait()
+            if (
+                data_batches() >= stop_after_batches
+                if stop_after_batches is not None
+                else _offsets_drained(query[0])
+            ):
+                stopped.append(batch_id)
+                raise _StopAtBatch(f"stop before batch {batch_id}")
+        write_batch(batch_df, batch_id)
+
+    writer = (
+        stream.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if pandas_state:
+        writer = writer.trigger(processingTime="0 seconds")
+    else:
+        writer = writer.trigger(availableNow=True)
+    q = writer.start()
+    query.append(q)
+    started.set()
+
+    def ended_by_signal(e: Exception) -> bool:
+        return bool(stopped) and _StopAtBatch.__name__ in str(e)
 
     try:
-        if stop_after_batches is not None:
-            while q.isActive and time.time() < deadline:
-                if data_batches() >= stop_after_batches:
-                    break
-                time.sleep(poll_secs)
-            if data_batches() < stop_after_batches:
-                raise TimeoutError(
-                    f"only {data_batches()} data batches committed within "
-                    f"{timeout_secs}s (wanted {stop_after_batches})"
-                )
-        else:
-            drained = False
-            while q.isActive and time.time() < deadline:
-                if _offsets_drained(q):
-                    drained = True
-                    break
-                time.sleep(poll_secs)
-            if not drained:
-                raise TimeoutError(
-                    f"stream not proven drained within {timeout_secs}s"
-                )
+        try:
+            if not q.awaitTermination(timeout_secs):
+                raise TimeoutError(f"stream did not end within {timeout_secs}s")
+        except StreamingQueryException as e:
+            if not ended_by_signal(e):
+                raise
     finally:
         if q.isActive:
             q.stop()
-        q.awaitTermination()
-    return data_batches()
+            q.awaitTermination()
+    n = data_batches()
+    if stop_after_batches is not None and n < stop_after_batches:
+        raise RuntimeError(
+            f"the source ran out after {n} data batches "
+            f"(wanted a stop after {stop_after_batches})"
+        )
+    return n

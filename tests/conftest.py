@@ -17,6 +17,28 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def jvm_stderr(capfd, request):
+    """Returns a reader of the text written to fd 2 since the test began,
+    by this process or by the Spark JVM. The JVM inherits fd 2 when it
+    starts, which under pytest's default fd capture is the session-wide
+    capture file, not this test's ``capfd`` — so both are read, and the
+    JVM's part is echoed back so it stays in the test report. (With
+    ``-s`` the JVM writes to the terminal and only this process's side
+    is seen.)"""
+    capman = request.config.pluginmanager.getplugin("capturemanager")
+
+    def read() -> str:
+        err = capfd.readouterr().err
+        if capman is not None and capman.is_globally_capturing():
+            jvm = capman.read_global_capture().err
+            sys.stderr.write(jvm)
+            err += jvm
+        return err
+
+    return read
+
+
 @pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL

@@ -139,11 +139,11 @@ def test_load_table_cache_identity_and_invalidation(spark, sf_small):
 
     a = load_table(spark, sf_small, "region")
     b = load_table(spark, sf_small, "region")
-    assert a is b  # resident handle: one footer job per (path, mtime)
+    assert a is b  # resident handle: one footer job per (path, stamp)
     # mtime moves -> fresh handle
     key = os.path.abspath(os.path.join(sf_small, "region.parquet"))
-    stamp, df = _TABLE_DFS[key]
-    _TABLE_DFS[key] = (stamp - 1.0, df)
+    (mtime_ns, size), df = _TABLE_DFS[key]
+    _TABLE_DFS[key] = ((mtime_ns - 1, size), df)
     c = load_table(spark, sf_small, "region")
     assert c is not a
     # the cached handle is the same table a direct read yields
@@ -159,6 +159,27 @@ def test_load_table_cache_rows_identical(spark, sf_small):
     cached = load_table(spark, sf_small, "nation")
     assert load_table(spark, sf_small, "nation") is cached
     assert _rows(cached) == _rows(spark.read.parquet(path))
+
+
+def test_load_table_cache_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """A directory table whose part file is rewritten in place keeps its
+    directory mtime; the cache must still hand out a fresh handle that
+    reads the new rows. (A stale handle keeps the old file length in its
+    file index, so the scan split ends before the new row group.)"""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parallel_pandas_spark.sources import load_table
+
+    part = tmp_path / "t.parquet" / "part-00000.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"k": [1, 2, 3]}), str(part))
+    dir_mtime = os.stat(part.parent).st_mtime_ns
+    assert _rows(load_table(spark, str(tmp_path), "t")) == [(1,), (2,), (3,)]
+    pq.write_table(pa.table({"k": list(range(5000))}), str(part))
+    assert os.stat(part.parent).st_mtime_ns == dir_mtime
+    assert _rows(load_table(spark, str(tmp_path), "t")) == [
+        (k,) for k in range(5000)]
 
 
 # -------------------------------------------------------- tune_probes --

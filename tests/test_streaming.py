@@ -275,7 +275,7 @@ def test_stateful_drain_proof_under_slow_batches(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_stateful_restart_recovery_exactly_once(spark, tmp_path):
+def test_stateful_restart_recovery_exactly_once(spark, tmp_path, jvm_stderr):
     """Fault tolerance of the stateful path (r10): run the per-user
     running-totals query over six micro-batch files, STOP it after about
     half the batches, then restart a NEW query from the same checkpoint
@@ -298,11 +298,12 @@ def test_stateful_restart_recovery_exactly_once(spark, tmp_path):
             se.stream_events(spark, d, max_files=1)
         )
 
-    # phase 1: crash-simulate after ~half the batches
+    # phase 1: crash-simulate after half the batches — exactly three
+    # commit, and the stop never kills the stream thread mid-batch
     n1 = se.run_stateful_to_parquet(
         spark, make_stream, out_dir, ckpt, stop_after_batches=3
     )
-    assert n1 >= 3
+    assert n1 == 3
     # phase 2: a NEW query from the same checkpoint finishes the rest
     se.run_stateful_to_parquet(spark, make_stream, out_dir, ckpt)
 
@@ -325,6 +326,7 @@ def test_stateful_restart_recovery_exactly_once(spark, tmp_path):
     # (idempotent restart — offsets already at the end)
     n3 = se.run_stateful_to_parquet(spark, make_stream, out_dir, ckpt)
     assert n3 == 0
+    assert "Exception in thread" not in jvm_stderr()
 
 
 def test_stream_session_window_append_matches_batch(spark, tmp_path):
@@ -438,7 +440,7 @@ def test_session_end_filter_pushdown_hazard(spark):
     assert unsafe == 1, unsafe
 
 
-def test_stream_rollup_state_restart_exactly_once(spark, tmp_path):
+def test_stream_rollup_state_restart_exactly_once(spark, tmp_path, jvm_stderr):
     """Streaming -> incremental rollup integration (r11): foreachBatch
     writes a MERGEABLE rollup state (rollup.agg_state) per micro-batch to
     b<id> directories, the query is stopped after ~half the batches and
@@ -469,7 +471,7 @@ def test_stream_rollup_state_restart_exactly_once(spark, tmp_path):
         spark, make_stream, out_dir, ckpt, stop_after_batches=3,
         batch_transform=to_state,
     )
-    assert n1 >= 3
+    assert n1 == 3
     se.run_stateful_to_parquet(
         spark, make_stream, out_dir, ckpt, batch_transform=to_state
     )
@@ -494,3 +496,4 @@ def test_stream_rollup_state_restart_exactly_once(spark, tmp_path):
         ["user_id"], spec,
     )
     assert {r["user_id"]: tuple(r)[1:] for r in again.collect()} == b
+    assert "Exception in thread" not in jvm_stderr()

@@ -99,7 +99,8 @@ def _assert_committed_layout(work):
     assert not glob.glob(os.path.join(work, ".staging_b*"))
 
 
-def test_live_corpus_loop_restart_bit_equals_batch_rebuild(spark, tmp_path):
+def test_live_corpus_loop_restart_bit_equals_batch_rebuild(
+        spark, tmp_path, jvm_stderr):
     base_di = _base(spark)
     base_co = incremental.keepers(base_di)
     di_p, co_p = str(tmp_path / "base_di"), str(tmp_path / "base_co")
@@ -120,9 +121,10 @@ def test_live_corpus_loop_restart_bit_equals_batch_rebuild(spark, tmp_path):
             spark, make_stream, di_p, co_p, work, ckpt, _SPEC,
             stop_after_batches=stop)
 
-    # crash after two data batches, then resume from the checkpoint
+    # crash after exactly two data batches, then resume from the
+    # checkpoint
     n1 = run(stop=2)
-    assert n1 >= 2
+    assert n1 == 2
     run()
     _assert_committed_layout(work)
 
@@ -146,6 +148,7 @@ def test_live_corpus_loop_restart_bit_equals_batch_rebuild(spark, tmp_path):
     assert run() == 0
     _, _, again = sc.corpus_stream_readout(spark, base_state, work, _SPEC)
     assert {r["lang"]: tuple(r)[1:] for r in again.collect()} == want
+    assert "Exception in thread" not in jvm_stderr()
 
 
 def test_feed_deleting_every_doc_writes_empty_artifacts(spark, tmp_path):
@@ -388,3 +391,74 @@ def test_readout_keeps_group_whose_stats_are_all_null(spark, tmp_path):
     # are gone -> the group must NOT appear
     assert co.where(F.col("lang") == "de").count() == 0
     assert "de" not in langs
+
+
+def test_batch_plan_runs_each_window_once(spark, tmp_path):
+    """For one fixture micro-batch, the compaction and keeper windows run
+    once, inside refresh_corpus's materialisations: neither the fused
+    docindex+corpus write nor the rollup-delta write plans a Window, and
+    the fused write still carries the applied batch."""
+    base_di = _base(spark)
+    di_p, co_p = str(tmp_path / "base_di"), str(tmp_path / "base_co")
+    base_di.write.parquet(di_p)
+    incremental.keepers(base_di).write.parquet(co_p)
+    rows = [r for s in _slices()[:2] for r in s]
+    batch = spark.createDataFrame(rows, sc.DOC_CHANGES_SCHEMA)
+    fused, delta, di2, co2 = sc._batch_frames(
+        spark.read.parquet(di_p), spark.read.parquet(co_p), batch,
+        ["lang"], _SPEC)
+    for df in (fused, delta):
+        txt = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in txt, txt
+    eff, keep = _rebuild(spark, base_di, _slices()[:2])
+    assert _members(di2) == _members(eff)
+    assert _members(co2) == _members(keep)
+    got = sorted(
+        (r["__art"], r["doc_id"], r["fp"], r["n_chars"])
+        for r in fused.collect())
+    assert got == sorted(
+        [("di",) + m for m in _members(eff)]
+        + [("co",) + m for m in _members(keep)])
+
+
+def test_livepost_arm_applies_each_arrival_in_one_batch(
+        spark, sf_small, monkeypatch, jvm_stderr):
+    """One corpus_livepost_arm call applies its two arrivals in exactly
+    two micro-batches (write_batch entered twice, no replay), neither
+    stream run stops a still-active query, and the read-out still equals
+    the DuckDB from-scratch rebuild."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    import __spark_entry__ as em
+    from tests.oracle_harness import compare, duck_connection
+
+    entered, active_stops = [], []
+    real_run = sc.run_foreach_batch
+
+    def counting_run(spark_, make_stream, write_batch, *args, **kwargs):
+        def counted(batch_df, batch_id):
+            entered.append(batch_id)
+            write_batch(batch_df, batch_id)
+
+        return real_run(spark_, make_stream, counted, *args, **kwargs)
+
+    real_stop = StreamingQuery.stop
+
+    def recording_stop(self):
+        if self.isActive:
+            active_stops.append(str(self.id))
+        return real_stop(self)
+
+    monkeypatch.setattr(sc, "run_foreach_batch", counting_run)
+    monkeypatch.setattr(StreamingQuery, "stop", recording_stop)
+    out = em.corpus_livepost_arm(spark, sf_small)
+    assert sorted(entered) == [0, 1], entered
+    assert active_stops == []
+    con = duck_connection(sf_small)
+    try:
+        problems = compare(
+            "corpus_livepost_arm", out, con, em._livepost_oracle())
+    finally:
+        con.close()
+    assert not problems, problems
+    assert "Exception in thread" not in jvm_stderr()

@@ -9,8 +9,9 @@ fine at sf0.01 (<100k-row results), hopeless at sf1 (multi-million-row
 battery outputs). Here results are compared with a VECTORIZED
 order-insensitive digest: dtype-normalize both frames (int→int64,
 float→float64, Decimal/object→canonical python, datetime→ns), hash rows
-with ``pd.util.hash_pandas_object``, and compare the sorted hash
-multisets. Equal doubles hash equal (same binary64), so this is as
+with ``pd.util.hash_pandas_object``, and compare the hash multisets
+(a mismatch reports the multiset difference and the first differing
+rows). Equal doubles hash equal (same binary64), so this is as
 strict as the driver's value-hash; small results (<=200k rows) also get
 the exact slow-path comparison as a cross-check of the digest itself.
 
@@ -33,6 +34,7 @@ import math
 import os
 import sys
 import time
+from collections import Counter
 from decimal import Decimal
 
 import numpy as np
@@ -76,6 +78,10 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
+#: differing rows shown per side in a digest mismatch
+_SHOW_ROWS = 3
+
+
 def digest_compare(name: str, spdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
     problems: list[str] = []
     if sorted(map(str.lower, spdf.columns)) != sorted(map(str.lower, ddf.columns)):
@@ -90,11 +96,25 @@ def digest_compare(name: str, spdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str
         return [f"{name}: rowcount spark={len(spdf)} duck={len(ddf)}"]
     a = _normalize(spdf)
     b = _normalize(ddf)
-    ha = np.sort(pd.util.hash_pandas_object(a, index=False).to_numpy())
-    hb = np.sort(pd.util.hash_pandas_object(b, index=False).to_numpy())
-    if not np.array_equal(ha, hb):
-        n_bad = int((ha != hb).sum())
-        problems.append(f"{name}: value-digest mismatch ({n_bad} of {len(ha)} row hashes)")
+    ha = pd.util.hash_pandas_object(a, index=False).to_numpy()
+    hb = pd.util.hash_pandas_object(b, index=False).to_numpy()
+    # multiset difference of row hashes: one differing row counts once
+    # per side, however far it moves the sorted order
+    ka, kb = Counter(ha.tolist()), Counter(hb.tolist())
+    only_a, only_b = ka - kb, kb - ka
+    if only_a or only_b:
+        n_bad = sum(only_a.values())
+        problems.append(
+            f"{name}: value-digest mismatch ({n_bad} of {len(ha)} rows "
+            f"differ)"
+        )
+        for side, frame, hashes, only in (
+            ("spark", a, ha, only_a), ("duck", b, hb, only_b),
+        ):
+            diff = np.fromiter(only, dtype=np.uint64, count=len(only))
+            rows = frame[np.isin(hashes, diff)].head(_SHOW_ROWS)
+            for r in rows.itertuples(index=False):
+                problems.append(f"{name}:   {side} only: {tuple(r)}")
         # column-level attribution: which columns' sorted value multisets differ
         for c in a.columns:
             ca = np.sort(pd.util.hash_pandas_object(a[[c]], index=False).to_numpy())
