@@ -26,12 +26,7 @@ is SLIM — the driver's capture truncated the r12/r15 full payloads —
 while the file keeps everything) so spread is auditable without
 rerunning. Single-run
 numbers were +/-20% noise two rounds running — medians are the instrument
-the 2x-of-baseline criterion needs. The JSON also carries
-"r6_comparable": the total minus the arms added after round 6
-(text repetition/pii/chunks, cosine quant — measured from the same run's
-arm pass), so round-over-round deltas compare equal work. Caveat field
-"r6_comparable_note" records what canNOT be subtracted (the corpus
-pipeline's fused gopher stage is not a separable arm).
+the 2x-of-baseline criterion needs.
 
 METHODOLOGY CHANGE (r4): queries are forced with a noop-sink write
 (``df.write.format("noop")``) instead of ``.count()``. Under count(),
@@ -173,31 +168,6 @@ def main() -> None:
         sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = None
-    # r6-comparable subtotal: subtract the arm-pass times of arms that
-    # did not exist at round 6, measured in THIS run's arm pass.
-    # r13 (r12 verdict #4): the list now includes the r11/r12 additions
-    # (ivfpq inside cosine_topk, the incremental minhash arm) — they had
-    # silently inflated the "comparable" series by ~3.9 s.
-    post_r6_arms = {
-        "text_doc_battery": ["repetition", "pii", "chunks"],
-        "cosine_topk": ["quant", "quantstore", "pq", "ivfpq", "opq"],
-        "minhash_dedup_pairs": ["incremental"],
-    }
-    new_arm_cost = sum(
-        arms.get(q, {}).get(a, 0.0) for q, al in post_r6_arms.items() for a in al
-    )
-    r6_comparable = round(total - new_arm_cost, 4) if arms else None
-    # r11-comparable: total minus only the arms added AFTER round 11
-    post_r11_arms = {
-        "cosine_topk": ["ivfpq", "opq"],
-        "minhash_dedup_pairs": ["incremental"],
-    }
-    post_r11_cost = sum(
-        arms.get(q, {}).get(a, 0.0)
-        for q, al in post_r11_arms.items() for a in al
-    )
-    r11_comparable = round(total - post_r11_cost, 4) if arms else None
-
     # Sentinel normalization (r12 verdict #4): this container's wall
     # clock drifts 1.3-1.5x between rounds on identical code, so raw
     # cross-round totals need a host factor. SENTINELS are headline
@@ -226,188 +196,6 @@ def main() -> None:
     except Exception:
         pass
 
-    # r10: the vector-store economics, measured SEPARATELY — build-store
-    # (one-time ingest cost: quantize + hive-partitioned write) vs
-    # score-from-store (the steady state a resident store serves). The
-    # quantstore arm above measures score time too (warm store); this
-    # block forces a COLD build so the one-time cost is on record, then
-    # re-times the store read alongside the exact arm for the
-    # quant<=exact criterion at equal candidates.
-    vec_metrics: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_ARMS", "1") not in ("", "0"):
-        import shutil
-        import statistics as _st
-
-        store_dir = entrymod._ensure_quant_store(spark, SF_DIR)
-        shutil.rmtree(store_dir, ignore_errors=True)
-        t0 = time.perf_counter()
-        entrymod._ensure_quant_store(spark, SF_DIR)
-        vec_metrics["build_sec"] = round(time.perf_counter() - t0, 4)
-        score_runs, exact_runs = [], []
-        # the two arms sit ~0.45 s apart by <10% at sf0.1 — median-of-3
-        # is noise-bound for THIS comparison specifically (r9 verdict
-        # relitigated parity twice); 7 interleaved reps tighten it
-        for _ in range(max(reps, 7)):
-            t0 = time.perf_counter()
-            _force(entrymod.cosine_quantstore_topk_query(spark, SF_DIR))
-            score_runs.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            _force(entrymod.cosine_topk_query(spark, SF_DIR))
-            exact_runs.append(time.perf_counter() - t0)
-        vec_metrics["score_from_store_sec"] = round(_st.median(score_runs), 4)
-        vec_metrics["exact_sec"] = round(_st.median(exact_runs), 4)
-        # r11: lifecycle economics — a day-sized ingest (5% of the
-        # corpus appended, feed-only encode) plus a tombstone delete,
-        # then score-through-tombstones; the append must stay feed-sized
-        # (far below build_sec) and the tombstone filter must not move
-        # the scoring time
-        import tempfile
-
-        from pyspark.sql import functions as _F
-
-        from parallel_pandas_spark.operators import vecstore as _vs
-        from parallel_pandas_spark.sources import load_table as _lt
-
-        emb = _lt(spark, SF_DIR, "embeddings")
-        lc_dir = os.path.join(tempfile.gettempdir(), "pps_vecstore_lc_bench")
-        shutil.rmtree(lc_dir, ignore_errors=True)
-        # the tombstone SIBLING must go too: a crashed prior run's stale
-        # tombstones would silently shadow rows of the fresh store
-        shutil.rmtree(_vs._tomb_path(lc_dir), ignore_errors=True)
-        _vs.write_vector_store(
-            emb.where(_F.col("vec_id") % 20 != 0), lc_dir, "vec_id",
-            "embedding", dim=64, shards=1,
-        )
-        feed = emb.where(_F.col("vec_id") % 20 == 0)
-        t0 = time.perf_counter()
-        _vs.append_vector_store(feed, lc_dir, "vec_id", "embedding", dim=64)
-        vec_metrics["append_5pct_sec"] = round(time.perf_counter() - t0, 4)
-        t0 = time.perf_counter()
-        _vs.delete_from_vector_store(
-            spark, lc_dir, list(range(0, 400, 7)), "vec_id")
-        vec_metrics["delete_sec"] = round(time.perf_counter() - t0, 4)
-        queries = emb.where(_F.col("vec_id") < 10)
-        lc_runs = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            _force(_vs.quantized_topk_from_store(
-                spark, lc_dir, queries, "vec_id", "embedding", k=5))
-            lc_runs.append(time.perf_counter() - t0)
-        vec_metrics["score_with_tombstones_sec"] = round(
-            _st.median(lc_runs), 4)
-        shutil.rmtree(lc_dir, ignore_errors=True)
-        shutil.rmtree(_vs._tomb_path(lc_dir), ignore_errors=True)
-
-        # r13 (r12 verdict #3): measured recall@k of the ANN paths vs
-        # the exact brute-force arm on the same queries — the gauge
-        # nprobe/pool tuning needs; without it probe counts are blind
-        from parallel_pandas_spark.operators.similarity import recall_at_k
-
-        exact_df = entrymod.cosine_topk_query(spark, SF_DIR)
-        vec_metrics["recall_ivf_at5"] = round(recall_at_k(
-            entrymod.ivf_store_topk_query(spark, SF_DIR), exact_df), 4)
-        vec_metrics["recall_ivfpq_at5"] = round(recall_at_k(
-            entrymod.cosine_ivfpq_topk_query(spark, SF_DIR), exact_df), 4)
-        vec_metrics["recall_opq_at5"] = round(recall_at_k(
-            entrymod.cosine_opq_topk_query(spark, SF_DIR), exact_df), 4)
-        vec_metrics["recall_lsh_at5"] = round(recall_at_k(
-            entrymod.lsh_topk_query(spark, SF_DIR), exact_df), 4)
-
-        # r14 (r13 verdict #1): the same gauges on the STRUCTURED
-        # fixture (clustered + anisotropic, similarity.structured_
-        # embeddings) where recall actually discriminates — on the
-        # isotropic driver vectors every ANN arm is intrinsically
-        # marginal, so these are the numbers probe counts tune against.
-        # Floors pinned in tests/test_new_surface_r14.py.
-        import numpy as _np
-
-        from parallel_pandas_spark.operators import vecstore as _vs2
-        from parallel_pandas_spark.operators.similarity import (
-            cosine_topk as _s_cosine,
-            ivf_topk as _s_ivf,
-            lsh_topk as _s_lsh,
-            opq_train as _s_opq_train,
-            structured_embeddings as _s_struct,
-        )
-
-        s_emb = _s_struct(emb).select(
-            "vec_id", _F.col("embedding_s").alias("embedding"), "label"
-        ).localCheckpoint(eager=True)
-        s_queries = s_emb.where(_F.col("vec_id") < 50)
-        s_exact = _s_cosine(s_emb, s_queries, "vec_id", "embedding", k=5)
-        vec_metrics["recall_s_ivf_at5"] = round(recall_at_k(
-            _s_ivf(s_emb, s_queries, "vec_id", "embedding", k=5,
-                   num_centroids=16, nprobe=4), s_exact), 4)
-        vec_metrics["recall_s_lsh_at5"] = round(recall_at_k(
-            _s_lsh(s_emb, s_queries, "vec_id", "embedding", k=5,
-                   num_planes=6, probe_hamming=2, dim=64), s_exact), 4)
-        X_s = _np.array(
-            s_emb.select("embedding").toPandas()["embedding"].tolist())
-        R_s, _ = _s_opq_train(X_s, m=8, ks=16, iters=6)
-        s_plain = os.path.join(tempfile.gettempdir(), "pps_bench_s_pq")
-        s_opq = os.path.join(tempfile.gettempdir(), "pps_bench_s_opq")
-        for p in (s_plain, s_opq):
-            shutil.rmtree(p, ignore_errors=True)
-            shutil.rmtree(p + ".rotation", ignore_errors=True)
-        _vs2.write_ivfpq_store(
-            s_emb, s_plain, "vec_id", "embedding", m=8, ks=16, dim=64,
-            num_centroids=16)
-        _vs2.write_ivfpq_store(
-            s_emb, s_opq, "vec_id", "embedding", m=8, ks=16, dim=64,
-            num_centroids=16, rotation=R_s.tolist())
-        vec_metrics["recall_s_pq_fixedpool_at5"] = round(recall_at_k(
-            _vs2.ivfpq_topk_from_store(
-                spark, s_plain, s_emb, s_queries, k=5, pool=50, nprobe=4),
-            s_exact), 4)
-        # r16 (r15 verdict #7): the pool is TUNED, not hand-set — one
-        # ADC pass yields the recall-vs-pool curve (tune_pool) and the
-        # PQ arm scores at the minimal pool clearing 0.75; the fixed
-        # pool=50 number above stays as the equal-cost OPQ comparison.
-        s_pq_tuned = _vs2.tune_pool(
-            spark, s_plain, s_emb, s_queries, k=5, nprobe=4,
-            target_recall=0.75, max_pool=400)
-        vec_metrics["s_pq_tuned_pool"] = int(s_pq_tuned["pool"])
-        vec_metrics["recall_s_pq_at5"] = round(recall_at_k(
-            _vs2.ivfpq_topk_from_store(
-                spark, s_plain, s_emb, s_queries, k=5,
-                pool=int(s_pq_tuned["pool"]), nprobe=4),
-            s_exact), 4)
-        vec_metrics["recall_s_opq_at5"] = round(recall_at_k(
-            _vs2.ivfpq_topk_from_store(
-                spark, s_opq, s_emb, s_queries, k=5, pool=50, nprobe=4),
-            s_exact), 4)
-        for p in (s_plain, s_opq):
-            shutil.rmtree(p, ignore_errors=True)
-            shutil.rmtree(p + ".rotation", ignore_errors=True)
-
-        # r15 (r14 verdict #2): the tuner's own readout on the structured
-        # store — the SAME call the driver's ivf_topk:tuned arm makes, so
-        # the bench records which nprobe the registered query actually ran
-        # at and what row fraction it probed
-        tuned = _vs2.tune_probes(
-            spark, entrymod._ensure_ivfs_store(spark, SF_DIR),
-            s_emb, s_emb.where(_F.col("vec_id") < 10),
-            "vec_id", "embedding", k=5, target_recall=0.95,
-        )
-        vec_metrics["tuned_nprobe"] = tuned["nprobe"]
-        vec_metrics["tuned_recall"] = round(tuned["recall"], 4)
-        vec_metrics["tuned_probed_fraction"] = tuned["probed_fraction"]
-        vec_metrics["tuned_hit_target"] = tuned["hit_target"]
-        from parallel_pandas_spark.operators.similarity import (
-            tune_lsh_probes as _s_tune_lsh,
-        )
-
-        tuned_lsh = _s_tune_lsh(
-            s_emb, s_emb.where(_F.col("vec_id") < 10),
-            "vec_id", "embedding", k=5, num_planes=6,
-            target_recall=0.95, dim=64,
-        )
-        vec_metrics["tuned_lsh_depth"] = tuned_lsh["probe_hamming"]
-        vec_metrics["tuned_lsh_recall"] = round(tuned_lsh["recall"], 4)
-        vec_metrics["tuned_lsh_bucket_fraction"] = round(
-            tuned_lsh["probed_fraction"], 4)
-        vec_metrics["tuned_lsh_hit_target"] = tuned_lsh["hit_target"]
-
     # r10 (r9 VERDICT #2): stamp the measured tree so a bench artifact can
     # never silently claim numbers for code it did not run
     import subprocess
@@ -432,40 +220,6 @@ def main() -> None:
             f"commit {git_head}",
             file=sys.stderr,
         )
-    # r17 (r15/r16 verdict #2): literal baseline-shape twins — OPT-IN via
-    # env so the driver's bench contract (headline loop, slim stdout) is
-    # untouched; the block lands in the FILE artifact only
-    baseline_twins = None
-    if os.environ.get("SPARK_GRAFT_BASELINE_TWINS", "") not in ("", "0"):
-        sys.path.insert(0, os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "tools"))
-        from baseline_twins import run_twins
-
-        baseline_twins = run_twins(spark, reps)
-
-    # r17 (r16 verdict #9): carry the committed sf0.01->sf1 slope study
-    # (tools/scaling_slope.py, BENCH_SCALING.json) in the FILE artifact
-    # so every round's bench ships per-query scale evidence — the 8-core
-    # sf0.1 ratio pair is fixed-cost-dominated and cannot read plan
-    # parallelism (r16 verdict scaling note)
-    scaling_slopes = None
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_SCALING.json")) as fh:
-            _sc = json.load(fh)
-        scaling_slopes = {
-            "slopes": _sc.get("slopes"),
-            "cpus": _sc.get("cpus"),
-            "git_head": _sc.get("git_head"),
-            "note": (
-                "d log(t)/d log(sf) fit over sf0.01/0.1/1 headline "
-                "medians; ~1.0 = linear, <1 = fixed overhead still "
-                "amortizing (tools/scaling_slope.py)"
-            ),
-        }
-    except Exception:
-        pass
-
     payload = {
         "metric": "headline_queries_total_runtime",
         "value": total,
@@ -474,15 +228,6 @@ def main() -> None:
         "queries": timings,
         "queries_runs": runs,
         "arms": arms,
-        "r6_comparable": r6_comparable,
-        "r6_comparable_note": (
-            "total minus post-r6 arms (text repetition/pii/chunks, "
-            "cosine quant+quantstore+pq+ivfpq+opq, minhash incremental); "
-            "corpus_build_pipeline's fused gopher stage is not a "
-            "separable arm and remains included; arm times are "
-            "median-of-" + str(reps) + " (r9)"
-        ),
-        "r11_comparable": r11_comparable,
         "sentinel_factor": sentinel_factor,
         "sentinel_factor_note": (
             "median(this_run/prev_round) over untouched sentinel "
@@ -490,9 +235,6 @@ def main() -> None:
             f"(round {prev_round}); divide cross-round totals by this "
             "host-noise factor before reading deltas"
         ),
-        "vecstore": vec_metrics,
-        "baseline_twins": baseline_twins,
-        "scaling_slopes": scaling_slopes,
         "git_head": git_head,
         "git_dirty": git_dirty,
         "sf": sf,
@@ -501,7 +243,7 @@ def main() -> None:
     # truncates long tails — BENCH_r12/r15 both lost their lines that
     # way); stdout carries a SLIM line (<2 KB) with just the fields the
     # driver's round-over-round comparison reads (r16 verdict #1):
-    # queries_runs/arms/vecstore/notes live only in the file artifact.
+    # queries_runs/arms/notes live only in the file artifact.
     try:
         os.makedirs(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                  "localdata"), exist_ok=True)
@@ -513,8 +255,7 @@ def main() -> None:
     slim = {
         k: payload[k]
         for k in ("metric", "value", "unit", "reps", "queries",
-                  "r6_comparable", "r11_comparable", "sentinel_factor",
-                  "git_head", "git_dirty", "sf")
+                  "sentinel_factor", "git_head", "git_dirty", "sf")
     }
     print(json.dumps(slim))
 

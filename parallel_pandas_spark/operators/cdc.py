@@ -61,7 +61,8 @@ def cdc_compact(
 
     ``salt_buckets``: escape hatch for the whale-key shape on engines
     that execute the rn=1 filter as a full per-key window. MEASURED
-    (tools/skew_study.py #4, SCALE.md): Spark 4.x needs no salt here —
+    (a one-off zipfian skew study, recorded in SCALE.md): Spark 4.x
+    needs no salt here —
     Catalyst rewrites ``row_number()==1`` into a PARTIAL
     WindowGroupLimit BEFORE the exchange (each map task forwards at most
     one row per key, the same map-side collapse grouped aggregation

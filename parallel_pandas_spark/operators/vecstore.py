@@ -808,7 +808,8 @@ def delete_from_vector_store(
     The tombstone file is written DRIVER-SIDE with pyarrow: the id set
     is driver-sized by contract (it's a delete list), and a Spark job
     for a 60-row parquet costs ~2 s of commit-protocol overhead versus
-    ~10 ms here — measured in bench.py's lifecycle block.
+    ~10 ms here (measured on the store lifecycle at sf0.1; perfbench's
+    corpus_pipeline reports it as ``store_delete_s``).
 
     Works on ANY store layout: the partition column (shard vs cell) is
     detected from the directory names, so the recorded epoch is the true

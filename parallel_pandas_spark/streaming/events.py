@@ -255,11 +255,18 @@ def _uses_pandas_state(stream_df: DataFrame) -> bool:
 
 def _offsets_drained(q) -> bool:
     """Source-offset drain proof over a query's COMPLETED progress
-    entries (see :func:`run_stream_to_memory` for the full rationale):
-    an empty committed batch whose every source shows no offset movement
-    — startOffset == endOffset, including the both-None shape an
-    empty-from-the-start source emits — means the engine itself listed
-    the source at trigger time and found nothing new."""
+    entries (``recentProgress``: no sampling misses, no stale flags): an
+    empty committed batch whose every source shows no offset movement —
+    startOffset == endOffset — means the engine itself listed the source
+    at trigger time and found nothing new. Batch 0 always runs
+    start=None -> first offset, so equal non-None offsets imply a later
+    batch; both None is the engine's no-data progress entry for a source
+    empty from the start, the only evidence such a source can emit. A
+    batch 0 in flight reports startOffset None with a NON-None
+    endOffset, so it never matches. (The file source reports no
+    ``latestOffset``, so committed-offset equality is the available
+    proof; its files must exist at start — a source fed concurrently
+    with the query is outside the drive-to-drain contract.)"""
     for p in q.recentProgress:
         if p["numInputRows"] != 0:
             continue
@@ -276,47 +283,39 @@ def run_stream_to_memory(
     stream_df: DataFrame,
     table: str,
     mode: str = "update",
-    poll_secs: float = 0.25,
     timeout_secs: float = 180.0,
-    stateful: "bool | None" = None,
     return_progress: bool = False,
 ):
-    """Drive a streaming query to a memory sink until the finite source is
-    drained, then stop (test/debug harness; production writes a real sink).
+    """Drive a streaming query over a finite source to the drain and
+    return everything it emitted as the temp table ``table`` (test/debug
+    harness; production writes a real sink).
 
-    Drain is PROVEN, never inferred from flag-quiet heuristics (the r7/r8
-    polling windows raced under machine load — a queued batch could take
-    longer to *start* than any stability window sized from observed batch
-    durations, and stopping then dropped files):
+    Drain is PROVEN by the engine, never inferred from flag-quiet
+    heuristics (the r7/r8 polling windows raced under machine load — a
+    queued batch could take longer to *start* than any stability window
+    sized from observed batch durations, and stopping then dropped
+    files):
 
-    - **Non-stateful path** (default): ``Trigger.AvailableNow`` +
+    - **Default path**: a memory sink under ``Trigger.AvailableNow`` +
       ``awaitTermination`` — the engine itself terminates the query after
       processing exactly the data available at start. Deterministic under
       arbitrary scheduling delay; works for windowed aggs AND
       ``dropDuplicatesWithinWatermark`` (verified: both terminate).
     - **``applyInPandasWithState`` path** (auto-detected from the analyzed
-      plan, or forced via ``stateful=``): processing-time timers keep an
-      AvailableNow run alive forever, so this path polls — but the stop
-      condition is a SOURCE-OFFSET PROOF read from ``recentProgress``
-      (completed batches, not sampled status flags): a completed batch
-      with ``numInputRows == 0`` whose every source has
-      ``startOffset == endOffset`` means the engine itself listed the
-      source at trigger time and found nothing new — ground truth that
-      cannot be raced by scheduling latency. (The file source reports no
-      ``latestOffset``, so equality of committed offsets on an empty
-      completed batch is the available proof.)
+      plan): processing-time timers keep an AvailableNow run alive
+      forever, so the stream runs through :func:`run_foreach_batch`,
+      which ends it inside the engine at the first batch after the
+      source-offset proof (:func:`_offsets_drained`). Its sink
+      materializes each micro-batch; ``table`` is their union, i.e. every
+      row the query emitted in update mode (``mode`` is not consulted).
 
     ``return_progress=True`` returns ``(table_df, last_progress)`` — the
     final committed progress dict carries the query's last event-time
     watermark, which a session-window harness needs to know WHICH
-    sessions were finalizable (see :func:`stream_session_counts`).
+    sessions were finalizable (see :func:`stream_session_counts`). Only
+    the default path reports it.
     """
-    import time
-
-    if stateful is None:
-        stateful = _uses_pandas_state(stream_df)
-
-    if not stateful:
+    if not _uses_pandas_state(stream_df):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(table)
@@ -334,46 +333,28 @@ def run_stream_to_memory(
         out = spark.table(table)
         return (out, q.lastProgress) if return_progress else out
 
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table)
-        .outputMode(mode)
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    deadline = time.time() + timeout_secs
+    if return_progress:
+        raise ValueError("return_progress is not reported for pandas-state streams")
+    import shutil
+    import tempfile
 
-    # recentProgress holds COMPLETED batches (no sampling misses, no
-    # stale flags). batch 0 always runs start=None -> first offset, so
-    # start==end (both non-None) on an empty batch implies batchId > 0.
-    # startOffset == endOffset == None is ALSO proof — a stream that is
-    # empty from the start never produces a non-None offset, so the
-    # engine's own no-data progress event (committed trigger, zero
-    # rows, no offset movement) is the only drain evidence an empty
-    # source can ever emit; without accepting it, a valid empty stream
-    # burns the full timeout (r9 ADVICE). The helper's contract keeps
-    # this sound: the finite source's files must exist at start — a
-    # source fed concurrently with the query is outside the "drive to
-    # drain" use case. A batch 0 in flight reports startOffset None
-    # with a NON-None endOffset, so it can never match. (Predicate shared
-    # as _offsets_drained with the restart-recovery runner.)
-    drained = False
-    while q.isActive and time.time() < deadline:
-        if _offsets_drained(q):
-            drained = True
-            break
-        time.sleep(poll_secs)
-    if q.isActive:
-        q.stop()
-    q.awaitTermination()  # surfaces the stream's own exception if it failed
-    if not drained:
-        raise TimeoutError(
-            f"stateful stream '{table}' was not proven drained within "
-            f"{timeout_secs}s (no completed empty batch with "
-            f"startOffset == endOffset)"
+    batches: dict[int, DataFrame] = {}
+
+    def keep(batch_df: DataFrame, batch_id: int) -> None:
+        batches[batch_id] = batch_df.localCheckpoint(eager=True)
+
+    ckpt = tempfile.mkdtemp(prefix="pps_stream_mem_")
+    try:
+        run_foreach_batch(
+            spark, lambda: stream_df, keep, ckpt, timeout_secs=timeout_secs
         )
-    out = spark.table(table)
-    return (out, q.lastProgress) if return_progress else out
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    out = spark.createDataFrame([], stream_df.schema)
+    for _, b in sorted(batches.items()):
+        out = out.unionByName(b)
+    out.createOrReplaceTempView(table)
+    return spark.table(table)
 
 
 def run_stateful_to_parquet(
@@ -438,7 +419,8 @@ def run_foreach_batch(
     timeout_secs: float = 180.0,
 ) -> int:
     """The generic checkpointed foreachBatch driver shared by
-    :func:`run_stateful_to_parquet` and streaming/corpus.py's live
+    :func:`run_stateful_to_parquet`, the pandas-state path of
+    :func:`run_stream_to_memory` and streaming/corpus.py's live
     corpus-maintenance loop: start the query with ``write_batch`` as the
     sink, and run it to the drain or stop it after N committed DATA
     batches (crash simulation). ``write_batch(batch_df, batch_id)`` owns
@@ -468,6 +450,7 @@ def run_foreach_batch(
     intended end — any other failure propagates.
     """
     import threading
+    import time
 
     from pyspark.errors import StreamingQueryException
 
@@ -476,11 +459,13 @@ def run_foreach_batch(
     started = threading.Event()
     query: list = []
     stopped: list = []
+    entered: list = []
 
     def data_batches() -> int:
         return sum(1 for p in query[0].recentProgress if p["numInputRows"] > 0)
 
     def sink(batch_df, batch_id: int) -> None:
+        entered.append(batch_id)
         if stop_after_batches is not None or pandas_state:
             # progress of every finished batch is recorded on the stream
             # thread before the next trigger starts, so both checks are
@@ -513,7 +498,18 @@ def run_foreach_batch(
 
     try:
         try:
-            if not q.awaitTermination(timeout_secs):
+            if pandas_state:
+                # a source empty from the start never runs a batch, so the
+                # sink never sees the proof; the engine's no-data progress
+                # entry carries it, and with no batch ever started the
+                # stop below cannot cut one short
+                deadline = time.monotonic() + timeout_secs
+                while not q.awaitTermination(0.25):
+                    if not entered and _offsets_drained(q):
+                        break
+                    if time.monotonic() > deadline:
+                        raise TimeoutError(f"stream did not end within {timeout_secs}s")
+            elif not q.awaitTermination(timeout_secs):
                 raise TimeoutError(f"stream did not end within {timeout_secs}s")
         except StreamingQueryException as e:
             if not ended_by_signal(e):

@@ -1,12 +1,10 @@
-"""Round-13 ADVICE regressions (all three items from ADVICE.md r12):
+"""Round-13 ADVICE regressions (items 1 and 3 of ADVICE.md r12; item 2
+covered a one-shot study tool that has since been deleted):
 
 1. vecstore: `_MANIFEST.json` is written write-then-rename, so a crash
    mid-write can never leave a truncated manifest (r14: the manifest is
    now the store's snapshot-isolation commit point; the torn-write
    surface is the temp name only, discarded as pre-commit staging).
-2. tools/memory_rehearsal: the recorded err_tail comes from whichever
-   stream actually carries the OOM evidence (py4j re-raises JVM errors
-   into stdout), never an empty stderr tail next to an "oom" status.
 3. streaming corpus read-out: the membership semi-join is null-SAFE —
    a NULL-keyed group survives the read-out exactly as a from-scratch
    groupBy rebuild keeps it.
@@ -30,7 +28,6 @@ from tests.test_recover_store_r12 import (  # noqa: E402
     _store_with_tombstones,
     _topk,
 )
-from tools.memory_rehearsal import classify_failure  # noqa: E402
 
 
 # ---------------------------------------------------------------- item 1
@@ -78,34 +75,6 @@ def test_unreadable_committed_manifest_refused_loudly(spark, tmp_path):
         vecstore.load_vector_store(spark, store, "vec_id")
     with pytest.raises(ValueError, match="unreadable store manifest"):
         vecstore.recover_store(store)
-
-
-# ---------------------------------------------------------------- item 2
-
-
-def test_err_tail_follows_evidence_stream():
-    # stdout-only JVM OOM (py4j re-raise): tail must carry the evidence
-    status, tail = classify_failure(
-        "py4j.protocol.Py4JJavaError: java.lang.OutOfMemoryError: heap", ""
-    )
-    assert status == "oom" and "OutOfMemoryError" in tail
-    # stderr evidence: stderr tail as before
-    status, tail = classify_failure(
-        "some stdout noise", "java.lang.OutOfMemoryError: GC overhead"
-    )
-    assert status == "oom" and "OutOfMemoryError" in tail
-    # evidence buried in stderr's scan window but outside a last-600
-    # slice: the tail is cut AROUND the marker, never evidence-free
-    status, tail = classify_failure(
-        "", "java.lang.OutOfMemoryError: heap" + "\nshutdown noise" * 100
-    )
-    assert status == "oom" and "OutOfMemoryError" in tail
-    # plain failure with empty stderr falls back to stdout
-    status, tail = classify_failure("Traceback: ValueError boom", "")
-    assert status == "failed" and "ValueError" in tail
-    # plain failure with stderr keeps stderr
-    status, tail = classify_failure("quiet", "Traceback: KeyError x")
-    assert status == "failed" and "KeyError" in tail
 
 
 # ---------------------------------------------------------------- item 3

@@ -479,12 +479,6 @@ def test_infer_json_schema_drops_corrupt_record(spark):
     assert {f.name for f in st.fields} == {"a"}
 
 
-def test_ewm_std_var_last_still_runs(spark, sf_small):
-    import __spark_entry__ as em
-
-    assert em.ewm_std_var_last(spark, sf_small).count() > 0
-
-
 # ----------------------------------------------- review-pass 2 regressions --
 def _nan_frame(spark):
     pdf = pd.DataFrame(

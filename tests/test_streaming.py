@@ -41,7 +41,7 @@ def test_stream_batch_equivalence(spark):
     assert len(live_rows) > 0
 
 
-def test_stateful_running_totals(spark):
+def test_stateful_running_totals(spark, jvm_stderr):
     """applyInPandasWithState per-user running totals: totals over the
     full (finite) stream must match a plain groupBy."""
     stream = se.stream_events(spark, f"{SF}/events.parquet")
@@ -61,6 +61,8 @@ def test_stateful_running_totals(spark):
     }
     assert got == want
     assert len(got) > 0
+    # the run ends inside the engine, never by a stop landing in a batch
+    assert "Exception in thread" not in jvm_stderr()
 
 
 def test_stream_events_glob_any_filename(spark, tmp_path):
@@ -229,15 +231,14 @@ def test_stream_interval_join_equivalence(spark, tmp_path):
     assert any(l % 3 != r % 3 for (_, l, r) in got)
 
 
-def test_stateful_drain_proof_under_slow_batches(spark, tmp_path):
+def test_stateful_drain_proof_under_slow_batches(spark, tmp_path, jvm_stderr):
     """The ``applyInPandasWithState`` path cannot use AvailableNow (its
     processing-time timers keep the query alive forever), so
     run_stream_to_memory proves drain from SOURCE OFFSETS in completed
     ``recentProgress`` entries: an empty batch whose startOffset equals
     endOffset means the engine itself listed the source and found
     nothing new. Stress it the same way the non-stateful path was: four
-    micro-batches each slowed past the poll interval by a mapInPandas
-    sleep; the final per-user running totals (max per user — the count
+    micro-batches each slowed by a mapInPandas sleep; the final per-user running totals (max per user — the count
     is monotone) must equal the batch groupBy over ALL four files."""
     import time
 
@@ -273,6 +274,7 @@ def test_stateful_drain_proof_under_slow_batches(spark, tmp_path):
         .collect()
     }
     assert got == want and len(got) > 0
+    assert "Exception in thread" not in jvm_stderr()
 
 
 def test_stateful_restart_recovery_exactly_once(spark, tmp_path, jvm_stderr):
