@@ -16,6 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.util import inheritable_thread_target
 
 from parallel_pandas_spark import det
 from parallel_pandas_spark.functions import datetimes as dtf
@@ -206,8 +207,16 @@ def _compose_union(
                 df = f(spark, sf_dir)
                 return df if tag in lazy_arms else df.localCheckpoint(eager=True)
 
+            # each pool task runs with a copy of this thread's local
+            # properties (job group, tags), taken when it is wrapped, so
+            # the jobs an arm starts are attributed to the calling query;
+            # one copy per task, because Spark writes the running SQL
+            # execution's id into it
             with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-                futs = [(tag, pool.submit(build, tag, f)) for tag, f in fns]
+                futs = [
+                    (tag, pool.submit(inheritable_thread_target(spark)(build), tag, f))
+                    for tag, f in fns
+                ]
                 return _pad_union([(tag, fu.result()) for tag, fu in futs])
     else:
         def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,11 +738,10 @@ t AS (
 @_q("kendall_tau_sample", _KENDALL_SAMPLE_ORACLE)
 def kendall_tau_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall τ-b on a deterministic md5-gated sample, computed by the
-    FULLY DISTRIBUTED exact kernel (reductions.kendall_tau →
-    kendall.kendall_tau_exact; reference _numba.py:7-158). r4: the former
-    single-task applyInPandas reducer is gone and the hash gate is
-    SQL-replayable, so this query is now value-oracled like the exact
-    variant."""
+    distributed exact kernel (reductions.kendall_tau →
+    kendall.kendall_tau_exact; reference _numba.py:7-158). The hash gate
+    is SQL-replayable, so the oracle replays the same sample and derives
+    the identical integer counts with its bucketed decomposition."""
     li = load_table(spark, sf_dir, "lineitem")
     return reductions.kendall_tau(
         li,
@@ -772,12 +780,13 @@ WITH t AS (
 @_q("kendall_tau_exact", _kendall_exact_oracle())
 def kendall_tau_exact_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT distributed Kendall τ-b (operators/kendall.py) over the FULL
-    (o_totalprice, order-year) pair — no subset gate, no sampling (r12
-    verdict #5): tie counts from one groupBy pass; discordant pairs =
-    strict y-inversions of the (x,y)-sorted sequence, decomposed into
-    per-partition merge-counts, a P×B histogram-grid window pass, and
-    per-bucket weighted multiset counts — no O(n²) anywhere, no driver
-    collect. The reference computes the same statistic with a
+    (o_totalprice, order-year) pair — no subset gate, no sampling.
+    Discordant pairs are the strict y-inversions of the (x,y)-sorted
+    sequence: one range partitioning, one per-partition pass (local
+    merge-counts, tie runs, a y-bucket histogram) and one keyed finish
+    (P×B histogram-grid prefix sums, per-bucket weighted multiset counts)
+    — no O(n²) anywhere, no checkpoint, and the only driver collect is the
+    bucket bounds. The reference computes the same statistic with a
     single-machine O(n²) numba kernel
     (/root/reference/parallel_pandas/_numba.py:7-158); the oracle
     re-derives the identical integer counts with its own bucketed
@@ -1625,7 +1634,9 @@ def stream_tumbling_live_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=len(arms)) as pool:
         futs = [
-            pool.submit(lambda a=a: a(spark, sf_dir).localCheckpoint(eager=True))
+            pool.submit(inheritable_thread_target(spark)(
+                lambda a=a: a(spark, sf_dir).localCheckpoint(eager=True)
+            ))
             for a in arms
         ]
         parts = [f.result() for f in futs]
@@ -1869,10 +1880,10 @@ def exact_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     _cc_pool = ThreadPoolExecutor(max_workers=1)
-    _cc_fut = _cc_pool.submit(
+    _cc_fut = _cc_pool.submit(inheritable_thread_target(spark)(
         lambda: dedup.cluster_pairs(pairs, "id_a", "id_b")
         .localCheckpoint(eager=True)
-    )
+    ))
     kf = dedup.drop_duplicates(
         d.select("lang", "source", "doc_id"), ["lang", "source"],
         order_by=["doc_id"], keep="first",
@@ -1907,7 +1918,9 @@ def exact_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         with ThreadPoolExecutor(max_workers=5) as pool:
             futs = [
-                (tag, pool.submit(lambda p=p: p.localCheckpoint(eager=True)))
+                (tag, pool.submit(inheritable_thread_target(spark)(
+                    lambda p=p: p.localCheckpoint(eager=True)
+                )))
                 for tag, p in (
                     ("exact", exact), ("keepfirst", kf), ("contam", contam),
                     ("bloom", bl), ("spans", spans),
@@ -4794,7 +4807,9 @@ def csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=len(sections)) as pool:
         futs = [
-            (tag, pool.submit(lambda f=f: f().localCheckpoint(eager=True)))
+            (tag, pool.submit(inheritable_thread_target(spark)(
+                lambda f=f: f().localCheckpoint(eager=True)
+            )))
             for tag, f in sections
         ]
         return _pad_union([(tag, fu.result()) for tag, fu in futs])
@@ -5206,11 +5221,14 @@ def _stats_battery_fused(
             return df.localCheckpoint(eager=True)
 
         with ThreadPoolExecutor(max_workers=5) as pool:
-            f_core = pool.submit(mat, core)
-            f_ind = [pool.submit(mat, d) for d in (nun, prods, modes, idx)]
+            def submit(df: DataFrame):
+                return pool.submit(inheritable_thread_target(spark)(mat), df)
+
+            f_core = submit(core)
+            f_ind = [submit(d) for d in (nun, prods, modes, idx)]
             core = f_core.result()
             mad = _mad_from(core)
-            f_mad = pool.submit(mat, mad)
+            f_mad = submit(mad)
             nun, prods, modes, idx = [f.result() for f in f_ind]
             mad = f_mad.result()
     else:
@@ -8229,7 +8247,8 @@ def corpus_livepost_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _TPE(max_workers=2) as _pool:
         futs = [
-            _pool.submit(_write_base), _pool.submit(_append_slices, 1, 1),
+            _pool.submit(inheritable_thread_target(spark)(_write_base)),
+            _pool.submit(inheritable_thread_target(spark)(_append_slices), 1, 1),
         ]
         for f in futs:
             f.result()

@@ -4,8 +4,10 @@ The reference computes exact Kendall with an O(n²) numba kernel on one
 machine (/root/reference/parallel_pandas/_numba.py:7-158). That shape
 cannot scale; this module computes the *same exact statistic* with a
 distributed decomposition whose heaviest stage is an O(m log² m) local
-merge-count per partition — the whole pipeline is three shuffles of the
-(x, y) pairs plus window passes over a P×B metadata grid.
+merge-count per partition. One keyed kernel serves one pair or many:
+every (x, y) row carries a pair key ``pr``, and the whole pipeline is a
+bucket-bound collect plus one plan of three shuffles (a range
+partitioning, a keyed finish, a per-pair sum).
 
 Math
 ----
@@ -27,32 +29,60 @@ the y domain into B quantile intervals, then
     D =  Σ_p inv_within(p)                       (local merge-count)
        + Σ_{p<q} Σ_{bucket_a > bucket_b} H[p][a]·H[q][b]
                                                  (2-D prefix sums over the
-                                                  P×B histogram grid — a
-                                                  pure-Spark window pass)
+                                                  P×B histogram grid H)
        + Σ_buckets cross-partition same-bucket inversions
-                                                 (groupBy(bucket) weighted
-                                                  multiset count on the
-                                                  collapsed (pid, y, cnt)
-                                                  rows)
+                                                 (weighted multiset count
+                                                  on the collapsed
+                                                  (pid, y, cnt) rows)
 
 Every stage is exact; ties never contribute because all comparisons are
-strict, and range partitioning on (x, y) guarantees that an x-tied pair
-split across partitions has y ascending. The same-bucket stage operates
-on *collapsed* (pid, y) multiplicities, so heavy-tie columns (years,
-categories) shrink to metadata size before the shuffle.
+strict, and range partitioning on (pr, x, y) guarantees that an x-tied
+pair split across partitions has y ascending. The same-bucket stage
+operates on *collapsed* (pid, y) multiplicities, so heavy-tie columns
+(years, categories) shrink to metadata size before the shuffle.
+
+Pipeline
+--------
+1. Bucket bounds: one per-pair ``approx_percentile`` collect (pairs ×
+   (B−1) doubles). Placement affects load balance only, never the
+   statistic — the bucket map is a monotone pure function of y.
+2. ``repartitionByRange(P, pr, x, y)`` + ``sortWithinPartitions``.
+3. One ``mapInPandas`` pass per partition emits, per pair present, the
+   metadata rows (``g = -1``: y-bucket histogram, local inversions,
+   interior tie runs, the ≤ 2 boundary x-runs that may continue into a
+   neighbour) and the collapsed ``(y, c)`` rows (``g = bucket``).
+4. One ``groupBy(pr, g).applyInPandas`` finish: the metadata group yields
+   n, n1, n3, v1 and the grid term v2; each bucket group yields its
+   same-bucket inversions v3 and its y-tie pairs (equal y ⟹ equal bucket,
+   so a bucket group sees every occurrence of its y values).
+5. A per-pair sum and the τ-b expression.
+
+Each intermediate has exactly one consumer, so nothing is checkpointed
+and no driver thread runs; the plan is the same from call to call, so
+warm calls hit the codegen cache.
 
 The result is assembled from exact integer counts; the only floating
 point is the final few IEEE ops (cast/multiply/sqrt/divide), which are
-bit-identical in any engine — so the DuckDB O(n²) pair-join oracle
-hash-matches exactly.
+bit-identical in any engine — so the DuckDB bucketed oracle hash-matches
+exactly.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# row kinds: the g = -1 metadata group holds _HIST, _SUMM and _XRUN rows;
+# each g = bucket group holds the _YRUN rows of its y values
+_HIST, _SUMM, _XRUN, _YRUN = 0, 1, 2, 3
+
+_STATS = (
+    "pr long, g long, kind int, pid long, bkt long, cnt long, inv long, "
+    "n3 long, n1i long, v double"
+)
+_COUNTS = ("n", "n1", "n2", "n3", "v1", "v2", "v3")
 
 
 def _inv_count(y: np.ndarray) -> int:
@@ -97,6 +127,185 @@ def _inv_count(y: np.ndarray) -> int:
     return inv
 
 
+def _pairs(t: np.ndarray) -> int:
+    """Σ t(t−1)/2 — the tied pairs among runs of sizes ``t``."""
+    return int((t * (t - 1) // 2).sum())
+
+
+def _tie_pairs(keys: np.ndarray, counts: np.ndarray) -> int:
+    """Tied pairs after totalling ``counts`` per distinct key (±0.0 are one
+    key, as in Spark's grouping and ordering)."""
+    uniq, idx = np.unique(keys, return_inverse=True)
+    tot = np.zeros(len(uniq), dtype=np.int64)
+    np.add.at(tot, idx, counts)
+    return _pairs(tot)
+
+
+def _pair_rows(p: int, pid: int, x: np.ndarray, y: np.ndarray, bounds) -> pd.DataFrame:
+    """One partition's rows of one pair, (x, y)-sorted → its metadata rows
+    (``g = -1``) and its collapsed ``(bucket, y, c)`` rows (``g = bucket``)."""
+    m = len(x)
+    nan = float("nan")
+    hist = np.bincount(np.searchsorted(bounds, y, side="right"))
+    nz = np.flatnonzero(hist)
+    # x-runs: interior runs contribute t(t-1)/2 locally; the first and
+    # last run may continue into a neighbour, so they travel as (x, cnt)
+    # metadata and are merged by x in the finish
+    xchg = x[1:] != x[:-1]
+    starts = np.flatnonzero(np.concatenate(([True], xchg)))
+    runs = np.diff(np.concatenate((starts, [m])))
+    edge = [0] if len(runs) == 1 else [0, -1]
+    # (x, y)-runs: equal pairs are contiguous here and never span a range
+    # partition, so n3 is exact partition-locally
+    xy = np.diff(np.flatnonzero(np.concatenate(([True], xchg | (y[1:] != y[:-1]), [True]))))
+    uy, uc = np.unique(y, return_counts=True)
+    meta = pd.DataFrame({
+        "g": -1,
+        "kind": [_HIST] * len(nz) + [_SUMM] + [_XRUN] * len(edge),
+        "bkt": np.concatenate((nz, [-1] * (1 + len(edge)))),
+        "cnt": np.concatenate((hist[nz], [0], runs[edge])),
+        "inv": [0] * len(nz) + [_inv_count(y)] + [0] * len(edge),
+        "n3": [0] * len(nz) + [_pairs(xy)] + [0] * len(edge),
+        "n1i": [0] * len(nz) + [_pairs(runs[1:-1])] + [0] * len(edge),
+        "v": np.concatenate(([nan] * (len(nz) + 1), x[starts[edge]])),
+    })
+    ub = np.searchsorted(bounds, uy, side="right")
+    coll = pd.DataFrame({
+        "g": ub, "kind": _YRUN, "bkt": ub, "cnt": uc, "inv": 0, "n3": 0,
+        "n1i": 0, "v": uy,
+    })
+    out = pd.concat([meta, coll], ignore_index=True)
+    out.insert(0, "pr", p)
+    out.insert(3, "pid", pid)
+    return out
+
+
+def _grid_cross(pid: np.ndarray, bkt: np.ndarray, cnt: np.ndarray) -> int:
+    """v2: pairs whose earlier partition holds the strictly higher bucket,
+    by 2-D prefix sums over the dense P×B histogram grid H."""
+    _, row = np.unique(pid, return_inverse=True)
+    H = np.zeros((row.max() + 1, bkt.max() + 1), dtype=np.int64)
+    np.add.at(H, (row, bkt), cnt)
+    prev = np.cumsum(H, axis=0) - H  # same bucket, earlier partitions
+    above = np.cumsum(prev[:, ::-1], axis=1)[:, ::-1] - prev  # higher buckets
+    return int((H * above).sum())
+
+
+def _bucket_cross(pids: np.ndarray, ys: np.ndarray, cs: np.ndarray) -> int:
+    """v3: weighted strict inversions between different partitions of one
+    bucket's collapsed (pid, y, c) rows, given sorted by (pid, y)."""
+    inv = 0
+    acc_y = np.empty(0, dtype=np.float64)
+    acc_w = np.empty(0, dtype=np.int64)
+    start = 0
+    m = len(pids)
+    while start < m:
+        end = start
+        while end < m and pids[end] == pids[start]:
+            end += 1
+        yb, wb = ys[start:end], cs[start:end]
+        if len(acc_y):
+            # weight of earlier-pid values strictly greater than each y
+            cumw = np.concatenate(([0], np.cumsum(acc_w)))
+            gt = cumw[-1] - cumw[np.searchsorted(acc_y, yb, side="right")]
+            inv += int((gt * wb).sum())
+        acc_y = np.concatenate([acc_y, yb])
+        acc_w = np.concatenate([acc_w, wb])
+        order = np.argsort(acc_y, kind="mergesort")
+        acc_y, acc_w = acc_y[order], acc_w[order]
+        start = end
+    return inv
+
+
+def _finish(key, pdf):
+    """The exact counts of one (pair, g) group: the metadata group gives
+    n, n1, n3, v1, v2; a bucket group gives its y-tie pairs n2 and v3."""
+    out = dict.fromkeys(_COUNTS, 0)
+    if key[1] < 0:
+        kind = pdf["kind"].to_numpy()
+        hist, summ, xrun = (pdf[kind == k] for k in (_HIST, _SUMM, _XRUN))
+        cnt = hist["cnt"].to_numpy(dtype=np.int64)
+        out["n"] = int(cnt.sum())
+        out["v2"] = _grid_cross(
+            hist["pid"].to_numpy(), hist["bkt"].to_numpy(dtype=np.int64), cnt
+        )
+        out["v1"] = int(summ["inv"].sum())
+        out["n3"] = int(summ["n3"].sum())
+        # a boundary run spanning partitions p..q appears once per touched
+        # partition and totals to its true length here
+        out["n1"] = int(summ["n1i"].sum()) + _tie_pairs(
+            xrun["v"].to_numpy(), xrun["cnt"].to_numpy(dtype=np.int64)
+        )
+    else:
+        pdf = pdf.sort_values(["pid", "v"], kind="mergesort")
+        ys = pdf["v"].to_numpy(dtype=np.float64)
+        cs = pdf["cnt"].to_numpy(dtype=np.int64)
+        out["n2"] = _tie_pairs(ys, cs)
+        out["v3"] = _bucket_cross(pdf["pid"].to_numpy(), ys, cs)
+    return pd.DataFrame({"pr": [key[0]], **{k: [v] for k, v in out.items()}})
+
+
+def _count_parts(d: DataFrame, num_buckets: int, num_partitions: int | None) -> DataFrame:
+    """The kernel over a ``(pr, x, y)`` frame: one row of exact counts per
+    (pair, g) group, to be summed per pair by the caller."""
+    spark = d.sparkSession
+    P = num_partitions or spark.sparkContext.defaultParallelism
+    B = num_buckets
+    qs = ", ".join(str(i / B) for i in range(1, B))
+    bounds = {
+        int(r["pr"]): np.asarray(r["b"], dtype=np.float64)
+        for r in d.groupBy("pr")
+        .agg(F.expr(f"approx_percentile(y, array({qs}), 1000)").alias("b"))
+        .collect()
+    }
+
+    def _part_stats(it):
+        prs, xs, ys = [], [], []
+        pid = -1
+        for pdf in it:
+            if len(pdf):
+                pid = int(pdf["pid"].iloc[0])
+                prs.append(pdf["pr"].to_numpy(dtype=np.int64))
+                xs.append(pdf["x"].to_numpy(dtype=np.float64))
+                ys.append(pdf["y"].to_numpy(dtype=np.float64))
+        if pid < 0:
+            return
+        pr, x, y = (np.concatenate(a) for a in (prs, xs, ys))
+        # (pr, x, y)-sorted: each pair present is one contiguous run
+        cuts = np.flatnonzero(pr[1:] != pr[:-1]) + 1
+        for lo, hi in zip(np.concatenate(([0], cuts)), np.concatenate((cuts, [len(pr)]))):
+            p = int(pr[lo])
+            yield _pair_rows(p, pid, x[lo:hi], y[lo:hi], bounds[p])
+
+    return (
+        d.repartitionByRange(P, "pr", "x", "y")
+        .sortWithinPartitions("pr", "x", "y")
+        .withColumn("pid", F.spark_partition_id())
+        .mapInPandas(_part_stats, _STATS)
+        .groupBy("pr", "g")
+        .applyInPandas(_finish, "pr long, " + ", ".join(f"{c} long" for c in _COUNTS))
+    )
+
+
+def _tau_b(counts: DataFrame, *keep: str) -> DataFrame:
+    """``(*keep, n, d, tau)`` from summed exact counts."""
+    n0 = F.expr("n*(n-1) div 2")
+    n1, n2, n3 = F.col("n1"), F.col("n2"), F.col("n3")
+    d = F.col("v1") + F.col("v2") + F.col("v3")
+    return counts.select(
+        *keep,
+        F.col("n"),
+        d.alias("d"),
+        F.when(
+            (n0 > n1) & (n0 > n2),
+            (n0 - n1 - n2 + n3 - 2 * d).cast("double")
+            / F.sqrt((n0 - n1).cast("double") * (n0 - n2).cast("double")),
+        )
+        .otherwise(F.lit(float("nan")))  # degenerate: a constant column
+        .alias("tau"),
+    )
+
+
 def kendall_tau_exact_multi(
     df: DataFrame,
     pair_col: str,
@@ -109,235 +318,24 @@ def kendall_tau_exact_multi(
 
     ``df`` is a pair-long frame ``(pair_col, x, y)`` — e.g. the single
     explode :func:`reductions.corr_matrix` builds over a literal array of
-    (col_x, col_y) structs. Every stage of :func:`kendall_tau_exact` is
-    re-derived with ``pair_col`` prefixed to its keys, so all pairs share
-    one tie-count shuffle, one range partitioning, one histogram-grid
-    window pass, and one per-bucket multiset stage — instead of C(k,2)
-    independent kernel pipelines each re-scanning the input (the r4 shape
-    this replaces: quadratic input scans at wide k).
-
-    The only driver materialization is the per-pair bucket-boundary fetch
-    (n_pairs × (B−1) doubles — metadata). Boundaries are approximated from
-    the tie-collapsed ``(pair, x, y, c)`` frame; bucket placement affects
-    load balance only, never the statistic.
+    (col_x, col_y) structs. All pairs share the kernel's one bound collect,
+    one range partitioning, one per-partition pass and one keyed finish,
+    instead of C(k,2) independent pipelines each re-scanning the input.
+    ``num_partitions`` defaults to the cluster's default parallelism.
 
     Returns one row per pair: ``(pair_col, n long, d long, tau double)``.
     Pairs with zero input rows produce no row — callers seed-join if they
     need explicit NULLs (reductions.corr_matrix does).
     """
-    spark = df.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    B = num_buckets
-
-    d = (
-        df.select(
-            F.col(pair_col).cast("long").alias("pr"),
-            F.col(col_a).cast("double").alias("x"),
-            F.col(col_b).cast("double").alias("y"),
-        )
-        .dropna()
+    d = df.select(
+        F.col(pair_col).cast("long").alias("pr"),
+        F.col(col_a).cast("double").alias("x"),
+        F.col(col_b).cast("double").alias("y"),
+    ).dropna()
+    counts = _count_parts(d, num_buckets, num_partitions).groupBy("pr").agg(
+        *(F.sum(c).alias(c) for c in _COUNTS)
     )
-
-    # ---- tie counts: one keyed shuffle on (pair, x, y) ----
-    # lazily checkpointed: the bucket-boundary collect below is a separate
-    # ACTION from the final assembled job, and without materialization each
-    # action would re-scan and re-shuffle the exploded pair-long input into
-    # this aggregate. The first action materializes g once; every consumer
-    # (bounds, base, t1, t2) then reads the stored blocks.
-    g = d.groupBy("pr", "x", "y").agg(F.count("*").alias("c")).localCheckpoint(
-        eager=False
-    )
-    base = g.groupBy("pr").agg(
-        F.sum("c").alias("n"),
-        F.expr("sum(c*(c-1)) div 2").alias("n3"),
-    )
-    t1 = (
-        g.groupBy("pr", "x")
-        .agg(F.sum("c").alias("t"))
-        .groupBy("pr")
-        .agg(F.expr("sum(t*(t-1)) div 2").alias("n1"))
-    )
-    t2 = (
-        g.groupBy("pr", "y")
-        .agg(F.sum("c").alias("t"))
-        .groupBy("pr")
-        .agg(F.expr("sum(t*(t-1)) div 2").alias("n2"))
-    )
-
-    # ---- per-pair y-bucket boundaries (approx quantiles of the DISTINCT
-    # (x,y) values — placement affects balance only); metadata-sized fetch ----
-    qarr = "array(" + ", ".join(str(i / B) for i in range(1, B)) + ")"
-    brows = (
-        g.groupBy("pr")
-        .agg(F.expr(f"approx_percentile(y, {qarr}, 2000)").alias("bounds"))
-        .collect()
-    )
-    bounds_by_pair = {
-        int(row["pr"]): np.sort(np.array(row["bounds"], dtype=np.float64))
-        for row in brows
-    }
-
-    @F.pandas_udf("int")
-    def _bucket(pr: pd.Series, s: pd.Series) -> pd.Series:
-        out = np.zeros(len(s), dtype=np.int32)
-        yv = s.to_numpy(dtype=np.float64)
-        pv = pr.to_numpy()
-        for p in np.unique(pv):
-            m = pv == p
-            out[m] = np.searchsorted(
-                bounds_by_pair[int(p)], yv[m], side="right"
-            ).astype(np.int32)
-        return pd.Series(out)
-
-    # ---- global (pair, x, y) order, P contiguous range partitions; pairs
-    # are contiguous runs, so every per-pair subsequence is (x,y)-sorted ----
-    r = (
-        d.repartitionByRange(P, "pr", "x", "y")
-        .sortWithinPartitions("pr", "x", "y")
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn("bkt", _bucket("pr", "y"))
-        .localCheckpoint(eager=True)
-    )
-
-    # ---- stage 1: per-(partition, pair) local inversions + histograms ----
-    def _part_stats(it):
-        prs: list[np.ndarray] = []
-        ys: list[np.ndarray] = []
-        bs: list[np.ndarray] = []
-        pid = -1
-        for pdf in it:
-            if len(pdf):
-                pid = int(pdf["pid"].iloc[0])
-                prs.append(pdf["pr"].to_numpy(dtype=np.int64))
-                ys.append(pdf["y"].to_numpy(dtype=np.float64))
-                bs.append(pdf["bkt"].to_numpy(dtype=np.int64))
-        if pid < 0:
-            return
-        pr = np.concatenate(prs)  # sorted (pr asc) — pairs are runs
-        y = np.concatenate(ys)
-        b = np.concatenate(bs)
-        frames = []
-        for p in np.unique(pr):
-            m = pr == p
-            hist = np.bincount(b[m], minlength=B)
-            nz = np.flatnonzero(hist)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "pr": np.int64(p),
-                        "pid": pid,
-                        "bkt": nz.astype("int64"),
-                        "cnt": hist[nz].astype("int64"),
-                        "inv": np.int64(0),
-                    }
-                )
-            )
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "pr": [np.int64(p)],
-                        "pid": [pid],
-                        "bkt": [-1],
-                        "cnt": [0],
-                        "inv": [_inv_count(y[m])],
-                    }
-                )
-            )
-        yield pd.concat(frames, ignore_index=True)
-
-    stats = r.mapInPandas(_part_stats, "pr long, pid long, bkt long, cnt long, inv long")
-    local_inv = stats.groupBy("pr").agg(F.sum("inv").alias("v1"))
-
-    # ---- stage 2: cross-partition, different-bucket — 2-D prefix sums over
-    # the dense (pair × P × B) grid (pure window expressions) ----
-    pairs_df = base.select("pr")
-    grid = (
-        pairs_df.crossJoin(spark.range(P).withColumnRenamed("id", "pid"))
-        .crossJoin(spark.range(B).withColumnRenamed("id", "bkt"))
-        .join(stats.where(F.col("bkt") >= 0), ["pr", "pid", "bkt"], "left")
-        .fillna(0, subset=["cnt"])
-    )
-    w_prev = (
-        Window.partitionBy("pr", "bkt")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_above = (
-        Window.partitionBy("pr", "pid")
-        .orderBy(F.col("bkt").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    diff_cross = (
-        grid.withColumn("prev", F.coalesce(F.sum("cnt").over(w_prev), F.lit(0)))
-        .withColumn("above", F.coalesce(F.sum("prev").over(w_above), F.lit(0)))
-        .groupBy("pr")
-        .agg(F.sum(F.col("cnt") * F.col("above")).alias("v2"))
-    )
-
-    # ---- stage 3: cross-partition, same-bucket — weighted multiset count
-    # over collapsed (pair, bkt, pid, y, cnt) rows, one group per (pair, bkt) ----
-    collapsed = r.groupBy("pr", "bkt", "pid", "y").agg(F.count("*").alias("c"))
-
-    def _bucket_cross(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["pid", "y"], kind="mergesort")
-        pids = pdf["pid"].to_numpy()
-        ys = pdf["y"].to_numpy(dtype=np.float64)
-        cs = pdf["c"].to_numpy(dtype=np.int64)
-        inv = 0
-        acc_y = np.empty(0, dtype=np.float64)
-        acc_w = np.empty(0, dtype=np.int64)
-        start = 0
-        m = len(pdf)
-        while start < m:
-            end = start
-            while end < m and pids[end] == pids[start]:
-                end += 1
-            yb, wb = ys[start:end], cs[start:end]
-            if len(acc_y):
-                cumw = np.concatenate(([0], np.cumsum(acc_w)))
-                gt = cumw[-1] - cumw[np.searchsorted(acc_y, yb, side="right")]
-                inv += int((gt * wb).sum())
-            acc_y = np.concatenate([acc_y, yb])
-            acc_w = np.concatenate([acc_w, wb])
-            order = np.argsort(acc_y, kind="mergesort")
-            acc_y, acc_w = acc_y[order], acc_w[order]
-            start = end
-        return pd.DataFrame({"pr": [key[0]], "inv": [inv]})
-
-    same_cross = (
-        collapsed.groupBy("pr", "bkt")
-        .applyInPandas(_bucket_cross, "pr long, inv long")
-        .groupBy("pr")
-        .agg(F.sum("inv").alias("v3"))
-    )
-
-    # ---- assemble τ-b per pair from exact integer counts ----
-    n0 = F.expr("n*(n-1) div 2")
-    out = (
-        base.join(t1, "pr")
-        .join(t2, "pr")
-        .join(local_inv, "pr")
-        .join(diff_cross, "pr")
-        .join(same_cross, "pr")
-        .select(
-            F.col("pr").alias(pair_col),
-            F.col("n"),
-            (F.col("v1") + F.col("v2") + F.col("v3")).alias("d"),
-            F.when(
-                (n0 > F.col("n1")) & (n0 > F.col("n2")),
-                (
-                    n0 - F.col("n1") - F.col("n2") + F.col("n3")
-                    - 2 * (F.col("v1") + F.col("v2") + F.col("v3"))
-                ).cast("double")
-                / F.sqrt(
-                    (n0 - F.col("n1")).cast("double") * (n0 - F.col("n2")).cast("double")
-                ),
-            )
-            .otherwise(F.lit(float("nan")))  # degenerate: a constant column
-            .alias("tau"),
-        )
-    )
-    return out
+    return _tau_b(counts, F.col("pr").alias(pair_col))
 
 
 def kendall_tau_exact(
@@ -347,263 +345,20 @@ def kendall_tau_exact(
     num_buckets: int = 256,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Exact Kendall τ-b of two columns, fully distributed.
+    """Exact Kendall τ-b of two columns, fully distributed: the keyed
+    kernel over a constant pair key. ``num_partitions`` defaults to the
+    cluster's default parallelism.
 
     Returns a 1-row DataFrame ``(n long, d long, tau double)`` — ``d`` is
     the exact discordant-pair count, directly comparable with an O(n²)
-    SQL oracle.
+    SQL oracle. Empty input gives ``(NULL, NULL, NaN)``.
     """
-    spark = df.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    B = num_buckets
-
-    d = (
-        df.select(
-            F.col(col_a).cast("double").alias("x"), F.col(col_b).cast("double").alias("y")
-        )
-        .dropna()
+    d = df.select(
+        F.lit(0).cast("long").alias("pr"),
+        F.col(col_a).cast("double").alias("x"),
+        F.col(col_b).cast("double").alias("y"),
+    ).dropna()
+    counts = _count_parts(d, num_buckets, num_partitions).agg(
+        *(F.sum(c).alias(c) for c in _COUNTS)
     )
-
-    # ---- global (x, y) order, P contiguous range partitions ----
-    # r17 (r16 verdict #3): the whole statistic now derives from ONE pass
-    # over this frame. The former shape ran a separate groupBy(x, y)
-    # tie-count shuffle (whose subtree re-scanned the parquet input under
-    # base/t1/t2), a separate approxQuantile scan of the input, a
-    # pandas-UDF bucket projection, and a second full read of r for the
-    # collapsed same-bucket stage — 6 parquet scans / 42 Exchanges in the
-    # before-plan. Every one of those quantities is computable from the
-    # range-partitioned sorted rows themselves (guide §2.4 "remove
-    # shuffles outright"):
-    #   n       = Σ histogram counts,
-    #   n3      = per-partition (x, y)-run counts ((x, y) ties never span
-    #             range partitions — equal keys map to one partition),
-    #   n1      = interior x-run counts + a metadata-sized merge of the
-    #             ≤2 boundary runs per partition (x-ties CAN span),
-    #   n2      = per-(y)-group totals inside the same-bucket stage
-    #             (equal y ⟹ equal bucket, so each bucket group sees
-    #             every occurrence of its y values),
-    #   D       = the same v1 + v2 + v3 decomposition as before.
-    # localCheckpoint(eager) still materializes the partitions ONCE —
-    # repartitionByRange samples its boundaries, so correctness must not
-    # hinge on Catalyst's exchange-reuse rule firing across consumers.
-    # The y-bucket boundary job (quantile sketch; placement affects load
-    # balance only, never the result — the bucket map is a monotone pure
-    # function of y either way) is independent of the checkpoint build,
-    # so it runs on a driver thread and back-fills the checkpoint job's
-    # tail (guide §2.6) instead of serializing ~0.5 s in front of it.
-    from concurrent.futures import ThreadPoolExecutor
-
-    qs = [i / B for i in range(1, B)]
-    _bpool = ThreadPoolExecutor(max_workers=1)
-    _bfut = _bpool.submit(
-        lambda: np.array(
-            sorted(d.stat.approxQuantile("y", qs, 0.001)), dtype=np.float64
-        )
-    )
-    try:
-        r = (
-            d.repartitionByRange(P, "x", "y")
-            .sortWithinPartitions("x", "y")
-            .withColumn("pid", F.spark_partition_id())
-            .localCheckpoint(eager=True)
-        )
-        bounds = _bfut.result()
-    finally:
-        _bpool.shutdown(wait=False, cancel_futures=True)
-
-    # ---- stage 1: ONE pass per partition — local inversions, per-bucket
-    # histogram, tie-run counts, boundary x-runs, and the collapsed
-    # (bkt, y, c) multiset rows for stage 3 ----
-    def _nansafe_ne(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        # run detection must group NaN with NaN exactly like Spark's
-        # groupBy (which normalizes NaN keys); ±0.0 already compare equal
-        return (a != b) & ~(np.isnan(a) & np.isnan(b))
-
-    def _part_stats(it):
-        xs: list[np.ndarray] = []
-        ys: list[np.ndarray] = []
-        pid = -1
-        for pdf in it:
-            if len(pdf):
-                pid = int(pdf["pid"].iloc[0])
-                xs.append(pdf["x"].to_numpy(dtype=np.float64))
-                ys.append(pdf["y"].to_numpy(dtype=np.float64))
-        if pid < 0:
-            return
-        x = np.concatenate(xs)  # already in (x,y)-sorted order
-        y = np.concatenate(ys)
-        m = len(x)
-        nan = float("nan")
-        b = np.searchsorted(bounds, y, side="right").astype(np.int64)
-        frames = []
-        hist = np.bincount(b, minlength=B)
-        nz = np.flatnonzero(hist)
-        frames.append(pd.DataFrame({
-            "kind": np.int32(0), "pid": pid, "bkt": nz.astype("int64"),
-            "cnt": hist[nz].astype("int64"), "inv": np.int64(0),
-            "n3": np.int64(0), "n1i": np.int64(0), "x": nan, "y": nan,
-            "c": np.int64(0),
-        }))
-        # x-runs: interior runs contribute t(t-1)/2 locally; the first and
-        # last run of each partition may continue into a neighbor, so they
-        # are emitted as (x, cnt) metadata and merged globally
-        chg = np.flatnonzero(_nansafe_ne(x[1:], x[:-1])) + 1
-        starts = np.concatenate(([0], chg))
-        counts = np.diff(np.concatenate(([0], chg, [m]))).astype(np.int64)
-        if len(counts) == 1:
-            bx_x = [float(x[0])]
-            bx_c = [int(counts[0])]
-            n1i = 0
-        else:
-            bx_x = [float(x[starts[0]]), float(x[starts[-1]])]
-            bx_c = [int(counts[0]), int(counts[-1])]
-            mid = counts[1:-1]
-            n1i = int((mid * (mid - 1) // 2).sum())
-        # (x, y)-runs: equal pairs are contiguous here and never span a
-        # range partition, so n3 is exact partition-locally
-        chg2 = np.flatnonzero(
-            _nansafe_ne(x[1:], x[:-1]) | _nansafe_ne(y[1:], y[:-1])
-        ) + 1
-        c2 = np.diff(np.concatenate(([0], chg2, [m]))).astype(np.int64)
-        n3 = int((c2 * (c2 - 1) // 2).sum())
-        frames.append(pd.DataFrame({
-            "kind": [np.int32(1)], "pid": [pid], "bkt": [-1], "cnt": [0],
-            "inv": [_inv_count(y)], "n3": [n3], "n1i": [n1i], "x": [nan],
-            "y": [nan], "c": [0],
-        }))
-        frames.append(pd.DataFrame({
-            "kind": np.int32(2), "pid": pid, "bkt": -1, "cnt": bx_c,
-            "inv": np.int64(0), "n3": np.int64(0), "n1i": np.int64(0),
-            "x": bx_x, "y": nan, "c": np.int64(0),
-        }))
-        # collapsed (bkt, y) multiplicities for the same-bucket stage —
-        # np.unique(equal_nan) groups NaN like Spark's groupBy did
-        uy, ucnt = np.unique(y, return_counts=True)
-        ub = np.searchsorted(bounds, uy, side="right").astype(np.int64)
-        frames.append(pd.DataFrame({
-            "kind": np.int32(3), "pid": pid, "bkt": ub, "cnt": np.int64(0),
-            "inv": np.int64(0), "n3": np.int64(0), "n1i": np.int64(0),
-            "x": nan, "y": uy, "c": ucnt.astype("int64"),
-        }))
-        yield pd.concat(frames, ignore_index=True)
-
-    # every downstream consumer reads these metadata-sized rows; the lazy
-    # localCheckpoint guarantees the expensive per-partition pass runs
-    # exactly once even though five aggregations reference it
-    stats = r.mapInPandas(
-        _part_stats,
-        "kind int, pid long, bkt long, cnt long, inv long, n3 long, "
-        "n1i long, x double, y double, c long",
-    ).localCheckpoint(eager=False)
-
-    summ = stats.where(F.col("kind") == 1).agg(
-        F.sum("inv").alias("v1"),
-        F.sum("n3").alias("n3"),
-        F.sum("n1i").alias("n1i"),
-    )
-    nrow = stats.where(F.col("kind") == 0).agg(F.sum("cnt").alias("n"))
-    # boundary x-runs: ≤ 2P rows; a run spanning partitions p..q appears
-    # once per touched partition and sums to its true total here
-    n1b = (
-        stats.where(F.col("kind") == 2)
-        .groupBy("x")
-        .agg(F.sum("cnt").alias("t"))
-        .agg(F.coalesce(
-            F.expr("sum(t*(t-1) div 2)"), F.lit(0).cast("long")
-        ).alias("n1b"))
-    )
-
-    # ---- stage 2: cross-partition, different-bucket — 2-D prefix sums over
-    # the dense P×B grid (pure window expressions, no driver collect) ----
-    grid = (
-        spark.range(P).withColumnRenamed("id", "pid")
-        .crossJoin(spark.range(B).withColumnRenamed("id", "bkt"))
-        .join(
-            stats.where(F.col("kind") == 0).select("pid", "bkt", "cnt"),
-            ["pid", "bkt"], "left",
-        )
-        .fillna(0, subset=["cnt"])
-    )
-    w_prev = (
-        Window.partitionBy("bkt").orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_above = (
-        Window.partitionBy("pid")
-        .orderBy(F.col("bkt").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    diff_cross = (
-        grid.withColumn("prev", F.coalesce(F.sum("cnt").over(w_prev), F.lit(0)))
-        .withColumn("above", F.coalesce(F.sum("prev").over(w_above), F.lit(0)))
-        .agg(F.sum(F.col("cnt") * F.col("above")).alias("v2"))
-    )
-
-    # ---- stage 3: cross-partition, same-bucket — weighted multiset count
-    # over the collapsed (pid, y, cnt) rows, one group per bucket; the
-    # same pass also totals each y's global multiplicity, which IS the
-    # y-tie count n2 (equal y ⟹ equal bucket) ----
-    collapsed = stats.where(F.col("kind") == 3).select("bkt", "pid", "y", "c")
-
-    def _bucket_cross(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["pid", "y"], kind="mergesort")
-        pids = pdf["pid"].to_numpy()
-        ys = pdf["y"].to_numpy(dtype=np.float64)
-        cs = pdf["c"].to_numpy(dtype=np.int64)
-        tot = pdf.groupby("y", dropna=False)["c"].sum().to_numpy(dtype=np.int64)
-        t2 = int((tot * (tot - 1) // 2).sum())
-        inv = 0
-        acc_y = np.empty(0, dtype=np.float64)
-        acc_w = np.empty(0, dtype=np.int64)
-        start = 0
-        m = len(pdf)
-        while start < m:
-            end = start
-            while end < m and pids[end] == pids[start]:
-                end += 1
-            yb, wb = ys[start:end], cs[start:end]
-            if len(acc_y):
-                # weight of earlier-pid values strictly greater than each y
-                cumw = np.concatenate(([0], np.cumsum(acc_w)))
-                gt = cumw[-1] - cumw[np.searchsorted(acc_y, yb, side="right")]
-                inv += int((gt * wb).sum())
-            acc_y = np.concatenate([acc_y, yb])
-            acc_w = np.concatenate([acc_w, wb])
-            order = np.argsort(acc_y, kind="mergesort")
-            acc_y, acc_w = acc_y[order], acc_w[order]
-            start = end
-        return pd.DataFrame({"inv": [inv], "t2": [t2]})
-
-    same_cross = (
-        collapsed.groupBy("bkt")
-        .applyInPandas(_bucket_cross, "inv long, t2 long")
-        .agg(F.sum("inv").alias("v3"), F.sum("t2").alias("n2"))
-    )
-
-    # ---- assemble τ-b from exact integer counts (identical integers and
-    # identical final FP ops as the pre-r17 shape, so the result is
-    # bit-for-bit unchanged) ----
-    n0 = F.expr("n*(n-1) div 2")
-    n1 = F.col("n1i") + F.col("n1b")
-    out = (
-        nrow.crossJoin(summ)
-        .crossJoin(n1b)
-        .crossJoin(diff_cross)
-        .crossJoin(same_cross)
-        .select(
-            F.col("n"),
-            (F.col("v1") + F.col("v2") + F.col("v3")).alias("d"),
-            F.when(
-                (n0 > n1) & (n0 > F.col("n2")),
-                (
-                    n0 - n1 - F.col("n2") + F.col("n3")
-                    - 2 * (F.col("v1") + F.col("v2") + F.col("v3"))
-                ).cast("double")
-                / F.sqrt(
-                    (n0 - n1).cast("double") * (n0 - F.col("n2")).cast("double")
-                ),
-            )
-            .otherwise(F.lit(float("nan")))  # degenerate: a constant column
-            .alias("tau"),
-        )
-    )
-    return out
+    return _tau_b(counts)

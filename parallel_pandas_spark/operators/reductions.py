@@ -608,9 +608,10 @@ def corr_matrix(
 
     pearson: native ``corr``. spearman: columns are rank-transformed
     (average ranks, matching ``pandas.rank(method='average')``) with window
-    expressions, then pearson on the ranks. kendall needs pair counting —
-    use :func:`kendall_tau` (distributed merge-count kernel, optionally
-    hash-sampled) per pair. A CALLABLE ``method`` takes the pairwise
+    expressions, then pearson on the ranks. kendall: every pair through
+    ONE run of the keyed exact kernel
+    (:func:`kendall.kendall_tau_exact_multi`); :func:`kendall_tau` adds a
+    hash-sampled single pair. A CALLABLE ``method`` takes the pairwise
     applyInPandas fallback (see :func:`_corr_matrix_callable`) — pandas
     ``corr(method=callable)`` semantics, one task per pair.
 
@@ -902,13 +903,14 @@ def kendall_tau(
     sample (reference: exact O(n²) numba kernel, _numba.py:7-158).
 
     The statistic is computed by the fully distributed exact kernel
-    (:func:`kendall.kendall_tau_exact` — per-partition merge-counts +
-    histogram-grid windows, no O(n²) stage, no single-task reducer), so
-    the only approximation is the sampling itself. ``sample_mod > 1``
-    keeps a row iff ``md5(id_cols) % sample_mod == 0`` — a pure content
-    hash, reproducible on any cluster layout AND replayable by a SQL
-    oracle (md5 exists in every engine; the former xxhash64 gate did
-    not). ``id_cols`` defaults to the value columns themselves.
+    (:func:`kendall.kendall_tau_exact` — one range partitioning, a
+    per-partition merge-count pass and one keyed finish; no O(n²) stage,
+    no single-task reducer, no checkpoint), so the only approximation is
+    the sampling itself. ``sample_mod > 1`` keeps a row iff
+    ``md5(id_cols) % sample_mod == 0`` — a pure content hash, reproducible
+    on any cluster layout AND replayable by a SQL oracle (md5 exists in
+    every engine; the former xxhash64 gate did not). ``id_cols`` defaults
+    to the value columns themselves.
 
     Returns a 1-row DataFrame ``(n, d, tau)``: sampled-row count, exact
     discordant pairs on the sample, and τ-b of the sample.

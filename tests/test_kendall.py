@@ -118,3 +118,119 @@ def test_kendall_multi_randomized_matches_brute(spark):
                 assert v is None or math.isnan(v), (seed, x, y)
             else:
                 assert v == pytest.approx(ref, abs=1e-12), (seed, x, y)
+
+
+def test_kendall_signed_zero_matches_brute(spark):
+    """-0.0 and 0.0 are one value in x and in y: the same x-run, the same
+    (x, y)-run, the same y-bucket and never an inversion."""
+    x = np.array([0.0, -0.0, 1.0, -0.0, 0.0, -1.0, 0.0, -0.0, 2.0])
+    y = np.array([-0.0, 0.0, 0.0, 2.0, -0.0, 0.0, 1.0, -1.0, -0.0])
+    d_ref, tau_ref = _brute(x, y)
+    for b, p in [(4, 3), (2, 9)]:
+        n, d, tau = _run(spark, x, y, num_buckets=b, num_partitions=p)
+        assert (n, d) == (9, d_ref)
+        assert tau == tau_ref
+
+
+def test_kendall_x_tie_run_across_partitions(spark):
+    """An x-tie run that spans at least three range partitions is counted
+    once in n1, with its y values ascending across the partitions."""
+    from pyspark.sql import functions as F
+
+    x = np.r_[np.zeros(10), np.full(60, 1.0), np.arange(2, 12.0)]
+    y = np.r_[np.arange(10.0), np.arange(60.0) % 7, np.arange(10.0)]
+    df = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(x, y)], "x double, y double"
+    )
+    spans = (
+        df.repartitionByRange(8, F.lit(0).cast("long"), "x", "y")
+        .where(F.col("x") == 1.0)
+        .select(F.spark_partition_id().alias("p"))
+        .distinct()
+        .count()
+    )
+    assert spans >= 3  # the premise: the run really crosses partitions
+    d_ref, tau_ref = _brute(x, y)
+    n, d, tau = _run(spark, x, y, num_buckets=4, num_partitions=8)
+    assert (n, d) == (80, d_ref)
+    assert tau == tau_ref
+
+
+def test_kendall_more_partitions_than_rows(spark):
+    x = np.array([3.0, 1.0, 2.0, 5.0, 4.0])
+    y = np.array([1.0, 1.0, 2.0, 0.0, 3.0])
+    d_ref, tau_ref = _brute(x, y)
+    n, d, tau = _run(spark, x, y, num_buckets=8, num_partitions=16)
+    assert (n, d) == (5, d_ref)
+    assert tau == tau_ref
+
+
+def test_kendall_single_row_and_empty(spark):
+    n, d, tau = _run(spark, [1.0], [2.0], num_buckets=4, num_partitions=3)
+    assert (n, d) == (1, 0)
+    assert math.isnan(tau)
+    # empty input still yields one row: no count, no pairs, NaN tau
+    n, d, tau = _run(spark, [], [], num_buckets=4, num_partitions=3)
+    assert (n, d) == (None, None)
+    assert math.isnan(tau)
+
+
+def test_kendall_multi_shared_partitions_and_empty_pair(spark):
+    """Several small pairs land in the same range partitions; each pair's
+    counts stay its own. A pair whose rows are all missing gives no row."""
+    from parallel_pandas_spark.operators.kendall import kendall_tau_exact_multi
+
+    rng = np.random.default_rng(5)
+    pairs = {
+        0: (rng.integers(0, 4, 9).astype(float), rng.integers(0, 3, 9).astype(float)),
+        1: (rng.normal(size=14), rng.normal(size=14)),
+        2: (np.array([1.0, 1.0, 2.0]), np.array([0.0, -0.0, 5.0])),
+    }
+    rows = [(p, float(a), float(b)) for p, (x, y) in pairs.items() for a, b in zip(x, y)]
+    rows += [(3, None, 1.0), (3, 2.0, float("nan"))]  # pair 3: no complete row
+    df = spark.createDataFrame(rows, "pid long, x double, y double")
+    for b, p in [(4, 2), (16, 5)]:
+        got = {
+            r["pid"]: (r["n"], r["d"], r["tau"])
+            for r in kendall_tau_exact_multi(
+                df, "pid", num_buckets=b, num_partitions=p
+            ).collect()
+        }
+        assert set(got) == {0, 1, 2}
+        for pr, (x, y) in pairs.items():
+            d_ref, tau_ref = _brute(x, y)
+            n, d, tau = got[pr]
+            assert (n, d) == (len(x), d_ref), (b, p, pr)
+            assert tau == tau_ref or (math.isnan(tau) and math.isnan(tau_ref))
+
+
+def test_kendall_one_pass_shape(spark):
+    """A warm call (construct + force) runs at most 7 Spark jobs, reads no
+    checkpoint, and a second identical call compiles no new code."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(3000).select(
+        (F.col("id") % 97).cast("double").alias("x"),
+        ((F.col("id") * 7919) % 13).cast("double").alias("y"),
+    )
+    sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def call(group):
+        sc.setJobGroup(group, group)
+        try:
+            out = kendall_tau_exact(df, "x", "y", num_buckets=16, num_partitions=4)
+            out.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    call("kendall-shape-cold")
+    out, jobs = call("kendall-shape-warm")
+    assert jobs <= 7
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+    before = compiles.getCount()
+    call("kendall-shape-again")
+    assert compiles.getCount() == before

@@ -64,3 +64,20 @@ def test_csv_json_roundtrip_writes_under_the_temp_dir(spark, sf_small, tmp_path,
     assert {
         "nation_csv", "nation_json", "nation_orc", "li_hive", "doc_shards", "li_zorder",
     } <= written, written
+
+
+def test_pool_thread_jobs_carry_the_callers_job_group(spark, sf_small):
+    """Builders that run arms on driver threads hand each task the calling
+    thread's job group, so every job a query starts is attributed to it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for name in ("stats_battery", "event_windows_battery"):
+        before = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(f"registry-{name}", name)
+        try:
+            em.queries()[name](spark, sf_small).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert tracker.getJobIdsForGroup(f"registry-{name}"), name
+        assert set(tracker.getJobIdsForGroup(None)) - before == set(), name
