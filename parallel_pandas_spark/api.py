@@ -104,15 +104,16 @@ class ParallelFrame:
             *[reductions.prod_min_count(c, min_count, self.df).alias(f"{c}_prod") for c in cols]
         )
 
+    # std/var/sem divide by n - ddof; the columns are <col>_std (ddof 1),
+    # <col>_std_pop (ddof 0) and <col>_std_ddof<k> otherwise
     def p_std(self, cols=None, ddof: int = 1):
-        stat = "std" if ddof == 1 else "std_pop"
-        return self._stats(cols, stat)
+        return self._stats(cols, reductions.moment_stat_name("std", ddof))
 
     def p_var(self, cols=None, ddof: int = 1):
-        return self._stats(cols, "var" if ddof == 1 else "var_pop")
+        return self._stats(cols, reductions.moment_stat_name("var", ddof))
 
-    def p_sem(self, cols=None):
-        return self._stats(cols, "sem")
+    def p_sem(self, cols=None, ddof: int = 1):
+        return self._stats(cols, reductions.moment_stat_name("sem", ddof))
 
     def p_skew(self, cols=None):
         return self._stats(cols, "skew")
@@ -173,11 +174,11 @@ class ParallelFrame:
         if isinstance(spec, (list, tuple)):
             # reference df.p_agg(["mean","std"]) — stats over all numeric cols
             spec = {c: list(spec) for c in self._numeric_cols()}
-        exprs = []
-        for c, stats in spec.items():
-            for s in [stats] if isinstance(stats, str) else stats:
-                exprs.append(reductions.stat_expr(s, c, self.df).alias(f"{c}_{s}"))
-        return self.df.agg(*exprs)
+        return reductions.agg_cells(self.df, [
+            (c, s)
+            for c, stats in spec.items()
+            for s in ([stats] if isinstance(stats, str) else stats)
+        ])
 
     # -- §2.2 elementwise / UDF surface (reference ops #1-#5) -------------
     def p_apply(self, func: Callable, axis: int = 1, **kw):

@@ -6,14 +6,26 @@ Here every per-column reduction becomes one expression inside a single
 ``df.agg(...)`` — one scan, map-side partial aggregation, whole-stage
 codegen — which is the strictly-better distributed shape: at 100 TB one
 pass over the parquet produces all requested statistics, no per-column
-re-scan, no Python in the hot path.
+re-scan. The one exception is the one-row ``var``/``std``/``sem`` cells
+(``agg_stats``, ``ParallelFrame.p_std``/``p_var``/``p_sem``/``p_agg``,
+``describe_exact``'s std row): they come from ONE extra ``mapInPandas``
+pass, :func:`exact_moments`, that sums every value and square as exact
+integers (numpy ``frexp`` + Python ints), so the variance is rounded
+once and is bit-identical at any partitioning; Spark's moment
+aggregates round per partition and per merge, and their last bits move
+with the partition count.
 
 pandas-semantics shims implemented as expressions:
 - ``skew``/``kurt``: pandas returns bias-corrected sample estimators G1/G2;
   Spark's ``skewness``/``kurtosis`` are population g1/g2. We apply the exact
   algebraic corrections (parallel_dataframe.py:722-734 delegates to pandas
   nanops which uses the adjusted estimators).
-- ``sem`` = stddev_samp / sqrt(count)  (parallel_dataframe.py:765-811).
+- ``var``/``std``/``sem`` divide by ``n - ddof``; ``std = sqrt(var)``
+  and ``sem = sqrt(var) / sqrt(n)``, the forms of pandas' ``nanstd`` /
+  ``nansem`` (parallel_dataframe.py:765-811). NULL when ``n <= ddof``,
+  NaN when the column holds ±inf. Grouped and window aggregates still
+  use the :data:`STAT_EXPRS` Spark builders (``sem`` = stddev_samp /
+  sqrt(count)).
 - ``sum``/``prod`` honor ``min_count`` (parallel_dataframe.py:814-861).
 - ``mad`` = mean(|x - mean|) — removed in pandas 2.0 but kept by the
   reference for capability parity (parallel_dataframe.py:502-522).
@@ -27,7 +39,9 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -58,7 +72,8 @@ def decimal_mean(col: str | Column, scale: int = 6) -> Column:
 
 
 def sem(col: str | Column, ddof: int = 1) -> Column:
-    """Standard error of the mean (pandas p_sem, ddof=1 default)."""
+    """Standard error of the mean as a Spark aggregate (ddof=1 default):
+    the grouped/window form; one-row ``p_sem`` uses :func:`exact_moments`."""
     c = F.col(col) if isinstance(col, str) else col
     std = F.stddev_samp(c) if ddof == 1 else F.stddev_pop(c)
     return std / F.sqrt(F.count(c))
@@ -154,15 +169,226 @@ def stat_expr(stat: str, col, df: DataFrame | None = None) -> Column:
     return e
 
 
+# ---------------------------------------------------------------------------
+# exact one-row moments (var / std / sem)
+# ---------------------------------------------------------------------------
+
+#: bits per limb when squaring 53-bit mantissas in int64: each limb
+#: product is < 2^36, so a coefficient sum over _CHUNK rows stays < 2^63
+_LIMB = 18
+_CHUNK = 1 << 20
+
+
+class ExactMoments(NamedTuple):
+    """Exact power sums of one column's non-NaN values.
+
+    ``n`` counts the values, ±inf included. The finite ones sum to
+    ``s1 · 2^exp`` and their squares to ``s2 · 2^(2·exp)``; ``s1`` and
+    ``s2`` are Python ints, so nothing is rounded until :meth:`var`
+    divides once.
+    """
+
+    n: int
+    exp: int
+    s1: int
+    s2: int
+    nonfinite: bool
+
+    def var(self, ddof: int = 1) -> float | None:
+        """``(n·Σx² − (Σx)²) / (n·(n − ddof))``, correctly rounded.
+
+        None (SQL NULL) when ``n ≤ ddof``; NaN when a value is ±inf
+        (pandas' ``nanvar`` forms inf − inf); inf when the exact
+        variance exceeds the double range."""
+        if self.n <= ddof:
+            return None
+        if self.nonfinite:
+            return math.nan
+        num = self.n * self.s2 - self.s1 * self.s1
+        den = self.n * (self.n - ddof)
+        if self.exp >= 0:
+            num <<= 2 * self.exp
+        else:
+            den <<= -2 * self.exp
+        try:
+            return num / den  # int / int rounds once, to nearest
+        except OverflowError:
+            return math.inf
+
+    def stat(self, kind: str, ddof: int = 1) -> float | None:
+        """``var``, ``std = sqrt(var)`` or ``sem = sqrt(var)/sqrt(n)``
+        (the forms pandas' ``nanstd``/``nansem`` use)."""
+        v = self.var(ddof)
+        if v is None or kind == "var":
+            return v
+        if kind == "std":
+            return math.sqrt(v)
+        return math.sqrt(v) / math.sqrt(self.n)
+
+
+def _merge_sums(a: tuple[int, int, int] | None, b: tuple[int, int, int] | None):
+    """Sum two ``(exp, s1, s2)`` triples exactly, at the smaller scale."""
+    if a is None or b is None:
+        return a if b is None else b
+    e = min(a[0], b[0])
+    da, db = a[0] - e, b[0] - e
+    return (
+        e,
+        (a[1] << da) + (b[1] << db),
+        (a[2] << 2 * da) + (b[2] << 2 * db),
+    )
+
+
+def _power_sums(v: np.ndarray) -> tuple[int, int, int] | None:
+    """Exact ``(exp, s1, s2)`` of finite doubles ``v`` (see ExactMoments).
+
+    Every finite double is ``m · 2^k`` with ``|m| < 2^53``. Rows are
+    grouped by ``k``; within a group the int64 sums of ``m`` (split in
+    two halves) and of ``m²`` (five 18-bit limb-product coefficients)
+    cannot overflow, and the Python-int combine shifts each group to
+    the smallest ``k``."""
+    v = v[v != 0.0]
+    if v.size == 0:
+        return None
+    out = None
+    for i in range(0, v.size, _CHUNK):
+        f, e = np.frexp(v[i:i + _CHUNK])
+        order = np.argsort(e, kind="stable")
+        k = e[order].astype(np.int64) - 53
+        m = np.ldexp(f[order], 53).astype(np.int64)
+        starts = np.flatnonzero(np.diff(k, prepend=k[0] - 1))
+        a = np.abs(m)
+        mask = (1 << _LIMB) - 1
+        l0, l1, l2 = a & mask, (a >> _LIMB) & mask, a >> (2 * _LIMB)
+        parts = [
+            m >> 26, m & ((1 << 26) - 1),  # m = hi·2^26 + lo
+            l0 * l0, 2 * l0 * l1, l1 * l1 + 2 * l0 * l2, 2 * l1 * l2, l2 * l2,
+        ]
+        sums = [np.add.reduceat(p, starts).tolist() for p in parts]
+        base = int(k[0])
+        s1 = s2 = 0
+        for g, kg in enumerate(k[starts].tolist()):
+            d = kg - base
+            s1 += ((sums[0][g] << 26) + sums[1][g]) << d
+            sq = sum(sums[2 + t][g] << (_LIMB * t) for t in range(5))
+            s2 += sq << (2 * d)
+        out = _merge_sums(out, (base, s1, s2))
+    return out
+
+
+def exact_moments(df: DataFrame, cols: Sequence[str]) -> dict[str, ExactMoments]:
+    """Exact count and power sums of each column, in one Python pass.
+
+    Each partition accumulates integer sums in ``mapInPandas`` and emits
+    one row per column; the driver adds those rows exactly. The result
+    does not depend on partitioning or row order, so the moments formed
+    from it are bit-identical at any layout. NULL and NaN are skipped
+    (pandas ``skipna``); values are cast to double, as Spark's moment
+    aggregates and pandas' ``nanvar`` both do."""
+    if not cols:
+        return {}
+    src = df.select(*[F.col(c).cast("double").alias(f"_{i}") for i, c in enumerate(cols)])
+    k = len(cols)
+
+    def _partition(batches):
+        import pandas as pd
+
+        n = [0] * k
+        nonfinite = [False] * k
+        sums = [None] * k
+        for pdf in batches:
+            for i in range(k):
+                v = pdf[f"_{i}"].to_numpy(dtype=np.float64)
+                v = v[~np.isnan(v)]
+                fin = v[np.isfinite(v)]
+                n[i] += v.size
+                nonfinite[i] |= fin.size < v.size
+                sums[i] = _merge_sums(sums[i], _power_sums(fin))
+        yield pd.DataFrame({
+            "c": range(k),
+            "n": n,
+            "exp": [s and s[0] for s in sums],
+            "s1": [s and format(s[1], "x") for s in sums],
+            "s2": [s and format(s[2], "x") for s in sums],
+            "nonfinite": nonfinite,
+        })
+
+    rows = src.mapInPandas(
+        _partition, "c int, n long, exp int, s1 string, s2 string, nonfinite boolean"
+    ).collect()
+    n = [0] * k
+    nonfinite = [False] * k
+    sums = [None] * k
+    for r in rows:
+        n[r.c] += r.n
+        nonfinite[r.c] |= r.nonfinite
+        if r.exp is not None:
+            sums[r.c] = _merge_sums(sums[r.c], (r.exp, int(r.s1, 16), int(r.s2, 16)))
+    return {
+        c: ExactMoments(n[i], *(sums[i] or (0, 0, 0)), nonfinite[i])
+        for i, c in enumerate(cols)
+    }
+
+
+def _moment_spec(stat: str) -> tuple[str, int] | None:
+    """``(kind, ddof)`` of a one-row moment stat name, else None: ``var``,
+    ``std``, ``sem`` (ddof 1), ``<kind>_pop`` (ddof 0) and
+    ``<kind>_ddof<k>`` (see :func:`moment_stat_name`)."""
+    if not isinstance(stat, str):
+        return None  # stat_expr reports the unknown stat
+    kind, _, tail = stat.partition("_")
+    if kind not in ("var", "std", "sem"):
+        return None
+    if not tail:
+        return kind, 1
+    if tail == "pop":
+        return kind, 0
+    if tail.startswith("ddof"):
+        try:
+            return kind, int(tail[4:])
+        except ValueError:
+            return None
+    return None
+
+
+def moment_stat_name(kind: str, ddof: int) -> str:
+    """Stat name of ``kind`` (var/std/sem) at ``ddof``: ``std`` for ddof 1,
+    ``std_pop`` for ddof 0, ``std_ddof2`` otherwise."""
+    if ddof == 1:
+        return kind
+    if ddof == 0:
+        return f"{kind}_pop"
+    return f"{kind}_ddof{ddof}"
+
+
+def agg_cells(df: DataFrame, cells: Sequence[tuple[str, str]]) -> DataFrame:
+    """One-row frame of ``<col>_<stat>`` for every (col, stat) cell.
+
+    Moment cells (var/std/sem at any ddof, see :func:`_moment_spec`) come
+    from ONE :func:`exact_moments` pass and enter the aggregation as
+    literals, the way :func:`describe_exact` takes its exact percentiles;
+    every other cell is a :func:`stat_expr` aggregate of the same scan.
+    """
+    specs = {s: _moment_spec(s) for _, s in cells}
+    mom_cols = list(dict.fromkeys(c for c, s in cells if specs[s]))
+    mom = exact_moments(df, mom_cols)
+    exprs = [
+        (F.lit(mom[c].stat(*specs[s])).cast("double") if specs[s] else stat_expr(s, c, df))
+        .alias(f"{c}_{s}")
+        for c, s in cells
+    ]
+    return df.agg(*exprs)
+
+
 def agg_stats(df: DataFrame, cols: Sequence[str], stats: Sequence[str]) -> DataFrame:
     """One-row frame of ``<col>_<stat>`` for every (col, stat) pair.
 
     Reference: ParallelizeStatFunc / ParallelizeStatFuncDdof /
     ParallelizeMinCountStatFunc (parallel_dataframe.py:714-861) — each op
-    there is a separate pool dispatch; here all pairs share one scan.
+    there is a separate pool dispatch; here all pairs share one scan
+    (plus the exact-moment pass when a var/std/sem cell is asked for).
     """
-    exprs = [stat_expr(s, c, df).alias(f"{c}_{s}") for c in cols for s in stats]
-    return df.agg(*exprs)
+    return agg_cells(df, [(c, s) for c in cols for s in stats])
 
 
 #: pandas Series.quantile(interpolation=) modes (numpy method names)
@@ -414,7 +640,11 @@ def describe_exact(
     a stat does not apply). Long format: one row per statistic.
 
     Plan shape: ONE aggregation computes every numeric (stat, col) cell
-    plus non-numeric count/countDistinct; ``top``/``freq`` for ALL
+    plus non-numeric count/countDistinct, after two eager passes whose
+    results enter it as literals: the exact percentiles
+    (:func:`orderstats.exact_quantile_values`) and the ``std`` row
+    (:func:`exact_moments`, the kernel ``p_std`` uses, so the two agree
+    bit for bit at any partitioning); ``top``/``freq`` for ALL
     non-numeric columns come from ONE extra GROUPING SETS scan (max count,
     ties -> smallest value: pandas' deterministic first mode); the long
     format is a zero-cost stack of the single wide row.
@@ -436,13 +666,15 @@ def describe_exact(
         orderstats.exact_quantile_values(df, num_cols, ps)[1]
         if num_cols else {}
     )
+    # ... and so does std, from the exact-moment pass p_std uses
+    mom = exact_moments(df, num_cols)
     aggs = []
     for c in num_cols:
         src = nan_safe(df, c)
         aggs += [
             F.count(src).cast("double").alias(f"__cnt_{c}"),
             F.avg(src).alias(f"__mean_{c}"),
-            F.stddev_samp(src).alias(f"__std_{c}"),
+            F.lit(mom[c].stat("std")).cast("double").alias(f"__std_{c}"),
             F.min(src).cast("double").alias(f"__min_{c}"),
             F.max(src).cast("double").alias(f"__max_{c}"),
             F.array(
