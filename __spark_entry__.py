@@ -8229,9 +8229,9 @@ def corpus_livepost_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
         # production refresh loop sizes artifact files the same way
         # (128 MB-1 GB targets), it just reaches them with more rows.
         standing.coalesce(1).write.parquet(base_di_p)
-        _inc.keepers(spark.read.parquet(base_di_p)).coalesce(1).write.parquet(
-            base_co_p
-        )
+        _inc.keepers(
+            spark.read.schema(standing.schema).parquet(base_di_p)
+        ).coalesce(1).write.parquet(base_co_p)
 
     def _append_slices(first: int, last: int) -> None:
         # sequential — the mtime order is the feed's arrival contract
@@ -8252,8 +8252,9 @@ def corpus_livepost_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         for f in futs:
             f.result()
+    # both base artifacts carry standing's schema (keepers keeps columns)
     base_state = _ru.agg_state(
-        spark.read.parquet(base_co_p), ["lang"], cspec
+        spark.read.schema(standing.schema).parquet(base_co_p), ["lang"], cspec
     ).localCheckpoint(eager=False)
 
     def _mk_changes():

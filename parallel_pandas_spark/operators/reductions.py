@@ -1103,7 +1103,7 @@ def _corr_matrix_callable(
     longf = _pair_long(df, cols)
     mp = 1 if min_periods is None else int(min_periods)
 
-    def _pair(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _pair(key, pdf):
         if len(pdf) < max(mp, 2):
             v = None
         else:

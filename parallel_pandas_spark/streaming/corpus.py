@@ -73,14 +73,21 @@ from parallel_pandas_spark.streaming.events import run_foreach_batch
 
 log = logging.getLogger(__name__)
 
-#: CDC change-record schema for the documents corpus: the docindex
-#: columns plus the CDC (ts, op) pair. ``fp`` arrives precomputed — the
-#: content fingerprint is part of the change record a real feed carries.
-DOC_CHANGES_SCHEMA = T.StructType([
+#: Schema of every docindex and corpus artifact the loop reads and
+#: writes (a corpus is keeper rows of its docindex, so the two share it).
+#: Artifacts are read with it, not with a parquet footer inference, which
+#: costs one Spark job per read.
+DOC_INDEX_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("lang", T.StringType()),
     T.StructField("n_chars", T.LongType()),
     T.StructField("fp", T.StringType()),
+])
+
+#: CDC change-record schema for the documents corpus: the docindex
+#: columns plus the CDC (ts, op) pair. ``fp`` arrives precomputed — the
+#: content fingerprint is part of the change record a real feed carries.
+DOC_CHANGES_SCHEMA = T.StructType(DOC_INDEX_SCHEMA.fields + [
     T.StructField("ts", T.LongType()),
     T.StructField("op", T.StringType()),
 ])
@@ -234,9 +241,6 @@ def _batch_frames(
     batch_df: DataFrame,
     keys: list,
     spec: dict,
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-    ts_col: str = "ts",
 ) -> tuple:
     """One micro-batch's plan against the snapshot ``(di, co)``: compact
     the batch's changes, apply them
@@ -249,11 +253,9 @@ def _batch_frames(
     agg_state(removed))``. Returns ``(fused, delta, di2, co2)``."""
     cols = list(spec)
     changes = cdc.cdc_compact(
-        batch_df, [id_col], [ts_col], drop_deleted=False
-    ).drop(ts_col)
-    di2, co2, added, removed = incremental.refresh_corpus(
-        di, co, changes, id_col=id_col, fp_col=fp_col
-    )
+        batch_df, ["doc_id"], ["ts"], drop_deleted=False
+    ).drop("ts")
+    di2, co2, added, removed = incremental.refresh_corpus(di, co, changes)
     delta = rollup.agg_state(added, keys, spec).unionByName(
         rollup.negate_state(
             rollup.agg_state(removed, keys, spec), cols, keys=keys
@@ -278,16 +280,15 @@ def run_corpus_refresh_stream(
     checkpoint_dir: str,
     spec: dict,
     keys=("lang",),
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-    ts_col: str = "ts",
     stop_after_batches: "int | None" = None,
     timeout_secs: float = 180.0,
 ) -> int:
     """Drive the live maintenance loop (see module docstring): per
     micro-batch, compact the batch's changes, apply them to the snapshot
     at the greatest version below this batch id, and overwrite version
-    ``b<batch_id>`` of ``<work_dir>/{docindex,corpus,delta}``. Runs to
+    ``b<batch_id>`` of ``<work_dir>/{docindex,corpus,delta}``. The base
+    artifacts and the change records carry :data:`DOC_INDEX_SCHEMA`'s
+    columns (the records add ``ts`` and ``op``). Runs to
     the drain of the changes present at start, or stops after
     ``stop_after_batches`` committed batches
     (:func:`~parallel_pandas_spark.streaming.events.run_foreach_batch`).
@@ -295,13 +296,6 @@ def run_corpus_refresh_stream(
     again with the same checkpoint to resume (restart recovery is the
     point — pinned in tests with a mid-stream stop)."""
     keys = list(keys)
-    # artifact schemas are stable across versions (docindex2/corpus2
-    # carry the base columns forward), so pin them ONCE per stream run:
-    # every per-batch spark.read.parquet otherwise runs a footer
-    # schema-inference job — two fixed-cost Spark jobs per micro-batch
-    # (r16 verdict #6, measured ~0.2 s/batch locally)
-    di_schema = spark.read.parquet(base_docindex).schema
-    co_schema = spark.read.parquet(base_corpus).schema
 
     def write_batch(batch_df, batch_id: int) -> None:
         t0 = time.perf_counter()
@@ -311,9 +305,9 @@ def run_corpus_refresh_stream(
         snap_di = _latest_dir(work_dir, "docindex", batch_id) or base_docindex
         snap_co = _latest_dir(work_dir, "corpus", batch_id) or base_corpus
         fused, delta, di2, co2 = _batch_frames(
-            spark.read.schema(di_schema).parquet(snap_di),
-            spark.read.schema(co_schema).parquet(snap_co),
-            batch_df, keys, spec, id_col, fp_col, ts_col,
+            spark.read.schema(DOC_INDEX_SCHEMA).parquet(snap_di),
+            spark.read.schema(DOC_INDEX_SCHEMA).parquet(snap_co),
+            batch_df, keys, spec,
         )
         # artifact writes (r16 verdict #6): the fused docindex+corpus
         # frame is written into a staging dir whose partition
@@ -398,10 +392,12 @@ def _fold_state(
     delta newer than it up to ``upto``, extrema-refreshed for the groups
     those deltas touched against ``corpus``. One implementation serves
     both the read-out and compaction's fold so the two can never drift.
+    Snapshots and deltas are rollup states of ``base_state``'s schema.
     Returns ``(state, snap_id, folded_delta_dirs)``."""
+    read_state = spark.read.schema(base_state.schema).parquet
     snap = _latest_dir(work_dir, "state", 1 << 60)
     snap_id = _version_id(snap) if snap else -1
-    base = spark.read.parquet(snap) if snap else base_state
+    base = read_state(snap) if snap else base_state
     fold = [
         _art_dir(work_dir, "delta", v)
         for v in _live_ids(work_dir, "delta")
@@ -411,7 +407,7 @@ def _fold_state(
         # every delta is folded into the snapshot, whose extrema the
         # fold already refreshed against this same corpus version
         return base, snap_id, []
-    deltas = spark.read.parquet(*fold)
+    deltas = read_state(*fold)
     merged = rollup.merge_state(
         base.unionByName(deltas.select(*base.columns)), keys, cols
     )
@@ -495,7 +491,8 @@ def compact_corpus_artifacts(
     # always exists (written before it).
     horizon = de_ids[-1] if de_ids else -1
     co = (
-        spark.read.parquet(_art_dir(work_dir, "corpus", horizon))
+        spark.read.schema(DOC_INDEX_SCHEMA).parquet(
+            _art_dir(work_dir, "corpus", horizon))
         if horizon >= 0
         else None
     )
@@ -564,8 +561,9 @@ def corpus_stream_readout(
     restart and across compaction points."""
     keys = list(keys)
     cols = list(spec)
-    di = spark.read.parquet(_latest_dir(work_dir, "docindex", 1 << 60))
-    co = spark.read.parquet(_latest_dir(work_dir, "corpus", 1 << 60))
+    read_art = spark.read.schema(DOC_INDEX_SCHEMA).parquet
+    di = read_art(_latest_dir(work_dir, "docindex", 1 << 60))
+    co = read_art(_latest_dir(work_dir, "corpus", 1 << 60))
     state, _, _ = _fold_state(
         spark, base_state, work_dir, keys, cols, co, 1 << 60
     )

@@ -40,6 +40,23 @@ def test_corr_matrix_callable_single_input_scan(spark):
     assert len(re.findall(r"\(\d+\) Scan parquet", txt)) == 1, txt
 
 
+def test_corr_matrix_callable_raises_no_type_hint_warning(spark):
+    """The per-pair applyInPandas function carries no partial type hints,
+    so PySpark does not warn that it cannot infer the eval type."""
+    import warnings
+
+    pdf = pd.DataFrame({"a": [1.0, 2.0, 3.0], "b": [2.0, 1.0, 4.0]})
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        rows = reductions.corr_matrix(
+            from_pandas(spark, pdf), ["a", "b"],
+            method=lambda x, y: float(np.corrcoef(x, y)[0, 1]),
+        ).collect()
+    assert len(rows) == 1
+    assert not [w for w in caught if "eval type" in str(w.message)], [
+        str(w.message) for w in caught]
+
+
 def test_corr_matrix_callable_empty_pair_yields_null_row(spark):
     """A pair with zero pairwise-complete rows must still produce a row
     with NULL corr (pandas: NaN) — r4 dropped the row entirely."""

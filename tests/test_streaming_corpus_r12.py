@@ -462,3 +462,41 @@ def test_livepost_arm_applies_each_arrival_in_one_batch(
         con.close()
     assert not problems, problems
     assert "Exception in thread" not in jvm_stderr()
+
+
+def test_livepost_arm_reads_no_parquet_footer(spark, sf_small):
+    """A warm corpus_livepost_arm call reads every artifact with a known
+    schema: it starts no parquet schema-inference job (the 1-task job a
+    schema-less ``spark.read.parquet`` runs outside any SQL execution;
+    12 per call before), and its rows are those of the cold call."""
+    import __spark_entry__ as em
+
+    jsc = spark.sparkContext._jsc.sc()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def job_names():
+        jobs = jsc.statusStore().jobsList(None)
+        jobs = [jobs.apply(i) for i in range(jobs.size())]
+        return {j.jobId(): j.name() for j in jobs}
+
+    def sql_job_ids():
+        execs, ids = sql_store.executionsList(), set()
+        for i in range(execs.size()):
+            it = execs.apply(i).jobs().keySet().iterator()
+            while it.hasNext():
+                ids.add(int(it.next()))
+        return ids
+
+    cold = sorted(map(tuple, em.corpus_livepost_arm(spark, sf_small).collect()))
+    jsc.listenerBus().waitUntilEmpty()
+    before = set(job_names())
+    warm = sorted(map(tuple, em.corpus_livepost_arm(spark, sf_small).collect()))
+    jsc.listenerBus().waitUntilEmpty()
+    in_sql = sql_job_ids()
+    inferred = [
+        (jid, name) for jid, name in job_names().items()
+        if jid not in before and jid not in in_sql
+        and name.startswith("parquet at")
+    ]
+    assert inferred == []
+    assert warm == cold

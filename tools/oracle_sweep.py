@@ -334,6 +334,10 @@ def main() -> None:
         "n_rows_only": sum(
             1 for r in results.values() if r["status"] == "no_oracle_rows_only"
         ),
+        # Janino compiles over the whole sweep: a generated-class cache
+        # that is too small shows here as thousands of recompiles
+        "codegen_compiles": spark._jvm.org.apache.spark.metrics.source
+        .CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
         "results": results,
     }
     line = json.dumps(summary)
