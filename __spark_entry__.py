@@ -10,8 +10,11 @@ across engines and cluster layouts.
 
 from __future__ import annotations
 
+import functools
 import os
+import uuid
 from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -141,8 +144,8 @@ def _q(name: str, oracle: str | None = None):
 
 
 # --- battery composition -----------------------------------------------
-# The round driver's correctness artifact covers the FIRST 50 registered
-# queries, so the operator surface is consolidated into <=50 entries:
+# queries() serves the 50 _CORE_ORDER entries, so the operator surface
+# is consolidated into 50 entries:
 # single-row stat queries cross-join into one battery; same-family
 # row-level queries union with schema padding (Spark
 # unionByName(allowMissingColumns) ↔ DuckDB UNION ALL BY NAME) plus a
@@ -157,93 +160,103 @@ def _pad_union(parts: list[tuple[str, DataFrame]], tag_col: str = "src") -> Data
     return out
 
 
-def _compose_union(
+def _fan_out(spark: SparkSession, thunks: list[Callable[[], Any]]) -> list:
+    """Run each zero-argument callable on its own driver thread and return
+    their results in ``thunks`` order.
+
+    Each task runs with its own copy of the calling thread's local
+    properties (job group, job tags), taken when the task is submitted,
+    so every job a task starts is attributed to the calling query. The
+    copy is per task because Spark writes the running SQL execution's id
+    into it. Each task also carries a job tag of its own. When a task
+    raises, the tasks that have not started are cancelled, the running
+    tasks' Spark jobs are cancelled through their tags until those tasks
+    return, and the first error (in ``thunks`` order) is re-raised. The
+    calling thread's properties are never changed."""
+    from concurrent import futures
+
+    sc = spark.sparkContext
+    run = uuid.uuid4().hex
+    tags = [f"pps-fan-out-{run}-{i}" for i in range(len(thunks))]
+
+    def tagged(tag: str, thunk: Callable[[], Any]) -> Any:
+        sc.addJobTag(tag)
+        return thunk()
+
+    with futures.ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(tagged), tag, thunk)
+            for tag, thunk in zip(tags, thunks)
+        ]
+        futures.wait(futs, return_when=futures.FIRST_EXCEPTION)
+        failed = [f for f in futs if f.done() and f.exception() is not None]
+        if failed:
+            for f in futs:
+                f.cancel()
+            # a sibling may start another job after a cancel lands, so
+            # repeat until every running task has returned
+            while not all(f.done() for f in futs):
+                for tag in tags:
+                    sc.cancelJobsWithTag(tag)
+                futures.wait(futs, timeout=0.1)
+            failed[0].result()
+        return [f.result() for f in futs]
+
+
+def _battery(
+    name: str,
     parts: list[tuple[str, str]],
+    doc: str,
     overlap_eager: bool = False,
     lazy_arms: "frozenset[str] | set[str]" = frozenset(),
-):
-    """Merge registered queries into one tagged pad-union battery.
+) -> None:
+    """Register entry ``name`` (docstring ``doc``): the tagged pad-union of
+    the registered queries ``parts`` = [(tag, registered_name)].
 
-    ``parts`` is [(tag, registered_name)]; the component functions and
-    oracle SQL are captured NOW so the components can be retired after.
-    Returns (query_fn, oracle_sql).
+    The arm builders and oracle SQL are captured now, and the arms stay
+    registered under their own names: ``queries()`` serves only the
+    ``_CORE_ORDER`` entries, and each arm is reached through its
+    battery's ``__arms__``. The union keeps the arm order, so the oracle
+    is the arms' SQL joined by UNION ALL BY NAME.
 
-    ``overlap_eager`` (r16, guide §2.6 "overlap independent jobs"): a
-    battery whose arms include a long DRIVER-FED protocol (a streaming
-    lifecycle with per-micro-batch fixed costs, a store build chain)
-    serializes that protocol's mostly-idle-executor wall time in front
-    of the other arms' compute. The arms are independent by
-    construction (each was a standalone registered query), so the
-    composed builder runs each arm on its own driver thread and
-    materializes it (``localCheckpoint(eager=True)``) there — battery
-    wall becomes max(arm) instead of sum(arm), the exact back-fill the
-    guide's ThreadPoolExecutor example describes. Everything is still
-    recomputed from the parquet inputs on EVERY invocation (the
-    checkpoint lives and dies inside one builder call — no cross-run
-    reuse), the per-arm rows are bit-identical, and the union keeps
-    the arm order, so the oracle hash is unchanged. The checkpointed
-    blocks are unreplicated: an executor lost mid-battery fails the job
-    instead of recomputing the arm. Opt-in per battery:
-    NOT safe when any arm mutates process-global state (ivf_topk's
-    maint arm patches os.rename for crash injection, and its pred
-    would see a concurrent arm's manifest commit), and pointless when
-    every arm is a lazy plan (AQE already materializes independent
+    Without ``overlap_eager`` every arm is built on the calling thread and
+    the battery is one lazy plan. With it, the arms are built concurrently
+    through ``_fan_out`` (its threading and cancellation contract applies)
+    and each is materialized there with ``localCheckpoint(eager=True)``,
+    so a driver-fed arm (a streaming lifecycle, a store build chain) no
+    longer serializes its idle-executor wall time in front of the others.
+    The checkpoint lives and dies inside one builder call, and its blocks
+    are unreplicated: an executor lost mid-battery fails the job instead
+    of recomputing the arm. Arms in ``lazy_arms`` have row-scaled output
+    and stay lazy subtrees of the union, since checkpointing them would
+    copy input-sized data through the block manager. Overlap is unsafe
+    when an arm mutates process-global state another arm can see, and
+    pointless when every arm is a lazy plan (AQE already runs independent
     union subtrees concurrently at force time)."""
-    fns = [(tag, _QUERIES[name]) for tag, name in parts]
+    fns = [(tag, _QUERIES[arm]) for tag, arm in parts]
     sql = "\nUNION ALL BY NAME\n".join(
-        f"SELECT '{tag}' AS src, * FROM ({_ORACLES[name]})" for tag, name in parts
+        f"SELECT '{tag}' AS src, * FROM ({_ORACLES[arm]})" for tag, arm in parts
     )
 
     if overlap_eager:
         def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from concurrent.futures import ThreadPoolExecutor
-
-            # lazy_arms (r17, r16 verdict #7): arms whose output is
-            # ROW-SCALED (proportional to the input table) must never be
-            # checkpointed — the copy through the block manager grows
-            # with data. They stay lazy subtrees of the union; only the
-            # aggregate-sized / driver-fed-protocol arms overlap eagerly.
             def build(tag, f):
                 df = f(spark, sf_dir)
                 return df if tag in lazy_arms else df.localCheckpoint(eager=True)
 
-            # each pool task runs with a copy of this thread's local
-            # properties (job group, tags), taken when it is wrapped, so
-            # the jobs an arm starts are attributed to the calling query;
-            # one copy per task, because Spark writes the running SQL
-            # execution's id into it
-            with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-                futs = [
-                    (tag, pool.submit(inheritable_thread_target(spark)(build), tag, f))
-                    for tag, f in fns
-                ]
-                return _pad_union([(tag, fu.result()) for tag, fu in futs])
+            built = _fan_out(spark, [lambda t=t, f=f: build(t, f) for t, f in fns])
+            return _pad_union([(tag, df) for (tag, _), df in zip(fns, built)])
     else:
         def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             return _pad_union([(tag, f(spark, sf_dir)) for tag, f in fns])
 
-    # per-arm attribution hook for bench.py: the battery headline time is
-    # unauditable at arm granularity otherwise (a regression can hide
-    # behind a newly-added arm — r6 verdict #1)
+    fn.__doc__ = doc
+    # arm discovery for bench.py and the tests: per-arm timing, and the
+    # row-size guard over every overlapped arm (tests/test_overlap_guard_r17.py)
     fn.__arms__ = list(fns)
-    # exclusion-principle discovery hook (r17, r16 verdict #7): eager
-    # overlap copies each arm's OUTPUT through the block manager, which
-    # is only scale-safe while every overlapped arm's output stays
-    # aggregate-sized; tests/test_overlap_guard_r17.py pins that bound
-    # for every battery carrying this flag
     fn.__overlap_eager__ = overlap_eager
     fn.__lazy_arms__ = frozenset(lazy_arms)
-    return fn, sql
-
-
-def _retire(*names: str) -> None:
-    """Remove battery components from standalone registration once
-    ``_compose_union`` has captured them; each battery still runs its
-    components through ``__arms__`` (tests/test_registry.py checks that
-    every registered builder stays reachable that way)."""
-    for n in names:
-        _QUERIES.pop(n, None)
-        _ORACLES.pop(n, None)
+    _q(name, sql)(fn)
 
 
 def _utc(spark: SparkSession) -> None:
@@ -1630,20 +1643,10 @@ def stream_tumbling_live_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         _live_arm_tumbling, _live_arm_stateful, _live_arm_dedup,
         _live_arm_ivjoin, _live_arm_session, _live_arm_rollup,
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(arms)) as pool:
-        futs = [
-            pool.submit(inheritable_thread_target(spark)(
-                lambda a=a: a(spark, sf_dir).localCheckpoint(eager=True)
-            ))
-            for a in arms
-        ]
-        parts = [f.result() for f in futs]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    parts = _fan_out(
+        spark, [lambda a=a: a(spark, sf_dir).localCheckpoint(eager=True) for a in arms]
+    )
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 # =========================================================================
@@ -1736,11 +1739,17 @@ def minhash_incremental_pairs_query(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "minhash_dedup_pairs",
     [
         ("full", "minhash_dedup_pairs"),
         ("incremental", "minhash_incremental_pairs"),
     ],
+    """MinHash near-dup pairs, batch and INCREMENTAL: the
+    full signatures → LSH banding → exact-Jaccard pipeline over the whole
+    corpus, plus a feed probing the standing corpus's band index without
+    re-signing or shuffling it — the daily-ingest screening shape, oracled
+    as the full replay restricted to feed-touching pairs.""",
     # each arm's chain of lazy checkpoints (signatures -> bands ->
     # candidates) materializes as sequential AQE stages when forced;
     # two threads run the two chains concurrently, and the outputs are
@@ -1748,13 +1757,6 @@ _bfn, _bsql = _compose_union(
     # (3.14 -> 2.18 s interleaved medians at sf0.1)
     overlap_eager=True,
 )
-_bfn.__doc__ = """MinHash near-dup pairs, batch and INCREMENTAL: the
-full signatures → LSH banding → exact-Jaccard pipeline over the whole
-corpus, plus a feed probing the standing corpus's band index without
-re-signing or shuffling it — the daily-ingest screening shape, oracled
-as the full replay restricted to feed-touching pairs."""
-_q("minhash_dedup_pairs", _bsql)(_bfn)
-_retire("minhash_incremental_pairs")
 
 
 def _exact_dedup_oracle() -> str:
@@ -1872,18 +1874,6 @@ def exact_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_dedup_pairs(
         d, "doc_id", "text", n=3, num_hashes=8, bands=4, threshold=0.3
     )
-    # cluster_pairs is an EAGER min-label fixpoint (checkpoint + count
-    # per round) that previously ran its whole driver-fed loop before
-    # the five lazy parts' compute could start — build it on a thread so
-    # the others back-fill its idle cores (guide §2.6); joined before
-    # the union below, rows unchanged
-    from concurrent.futures import ThreadPoolExecutor
-
-    _cc_pool = ThreadPoolExecutor(max_workers=1)
-    _cc_fut = _cc_pool.submit(inheritable_thread_target(spark)(
-        lambda: dedup.cluster_pairs(pairs, "id_a", "id_b")
-        .localCheckpoint(eager=True)
-    ))
     kf = dedup.drop_duplicates(
         d.select("lang", "source", "doc_id"), ["lang", "source"],
         order_by=["doc_id"], keep="first",
@@ -1909,32 +1899,21 @@ def exact_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signal): 6-token windows occurring in >= 2 documents — digest-keyed
     # skew-free groupBy, per-doc distinct spans inside the row
     spans = dedup.repeated_spans(d, "doc_id", "text", span_tokens=6, min_docs=2)
-    # materialize the five lazy parts concurrently with the fixpoint
-    # thread above; the tagged union keeps the part order and every
-    # part's rows are bit-identical to the sequential composition.
-    # try/finally (r17, r16 ADVICE): if any part raises, the fixpoint
-    # thread must not keep driving eager checkpoint+count jobs in the
-    # background of whatever runs next — shut the pool down either way.
-    try:
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            futs = [
-                (tag, pool.submit(inheritable_thread_target(spark)(
-                    lambda p=p: p.localCheckpoint(eager=True)
-                )))
-                for tag, p in (
-                    ("exact", exact), ("keepfirst", kf), ("contam", contam),
-                    ("bloom", bl), ("spans", spans),
-                )
-            ]
-            parts = dict((tag, fu.result()) for tag, fu in futs)
-        cc = _cc_fut.result()
-    finally:
-        _cc_pool.shutdown(wait=False, cancel_futures=True)
-    return _pad_union(
-        [("exact", parts["exact"]), ("minhash_cc", cc),
-         ("keepfirst", parts["keepfirst"]), ("contam", parts["contam"]),
-         ("bloom", parts["bloom"]), ("spans", parts["spans"])]
+    parts = [
+        ("exact", lambda: exact),
+        # cluster_pairs is an EAGER min-label fixpoint (checkpoint + count
+        # per round); on its own thread, the other parts back-fill its
+        # idle cores
+        ("minhash_cc", lambda: dedup.cluster_pairs(pairs, "id_a", "id_b")),
+        ("keepfirst", lambda: kf), ("contam", lambda: contam),
+        ("bloom", lambda: bl), ("spans", lambda: spans),
+    ]
+    # each part is materialized on its own driver thread; the tagged
+    # union keeps the part order, rows bit-identical
+    built = _fan_out(
+        spark, [lambda f=f: f().localCheckpoint(eager=True) for _, f in parts]
     )
+    return _pad_union([(tag, df) for (tag, _), df in zip(parts, built)])
 
 
 @_q("ngram_jaccard_pairs", _minhash_oracle(threshold=0.1))
@@ -2497,7 +2476,8 @@ def cosine_pq_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "cosine_topk",
     [
         ("exact", "cosine_topk"),
         ("quant", "cosine_quant_topk"),
@@ -2506,6 +2486,18 @@ _bfn, _bsql = _compose_union(
         ("ivfpq", "cosine_ivfpq_topk"),
         ("opq", "cosine_opq_topk"),
     ],
+    """Brute-force cosine top-k: exact float path, (r7) the
+    int8 scalar-quantized path (4x smaller store; scales cancel, so the
+    quantized score is integer-exact on any engine), (r10) the same scores
+    read from the PERSISTED vector store (quantize once at ingest, score
+    from 64 packed code bytes per row), (r9) the product-quantization
+    ADC path (32x smaller store) with exact re-rank of its candidate pool,
+    and (r12) the unified IVF-PQ store — PQ codes partitioned by IVF cell,
+    probe pruning and 32x compression multiplying — scored end to end from
+    its persisted sidecars, and (r13) the OPQ arm — the same IVF-PQ store
+    behind a persisted orthogonal rotation sidecar, queries rotated at
+    score time. All broadcast the query side over one corpus scan (the
+    ivfpq/opq arms scan only probed cells).""",
     # the PQ-family arms are driver-fed chains (train -> encode -> LUT ->
     # score -> re-rank, ~8 small sequential jobs each on a fixture-sized
     # corpus) whose per-job fixed cost idles the executors; the six arms
@@ -2514,21 +2506,6 @@ _bfn, _bsql = _compose_union(
     # (4.21 -> 2.45 s interleaved medians at sf0.1)
     overlap_eager=True,
 )
-_bfn.__doc__ = """Brute-force cosine top-k: exact float path, (r7) the
-int8 scalar-quantized path (4x smaller store; scales cancel, so the
-quantized score is integer-exact on any engine), (r10) the same scores
-read from the PERSISTED vector store (quantize once at ingest, score
-from 64 packed code bytes per row), (r9) the product-quantization
-ADC path (32x smaller store) with exact re-rank of its candidate pool,
-and (r12) the unified IVF-PQ store — PQ codes partitioned by IVF cell,
-probe pruning and 32x compression multiplying — scored end to end from
-its persisted sidecars, and (r13) the OPQ arm — the same IVF-PQ store
-behind a persisted orthogonal rotation sidecar, queries rotated at
-score time. All broadcast the query side over one corpus scan (the
-ivfpq/opq arms scan only probed cells)."""
-_q("cosine_topk", _bsql)(_bfn)
-_retire("cosine_quant_topk", "cosine_quantstore_topk", "cosine_pq_topk",
-        "cosine_ivfpq_topk", "cosine_opq_topk")
 
 
 def _neardup_oracle(num_planes: int = 4, threshold: float = 0.35, dim: int = 64) -> str:
@@ -2613,20 +2590,19 @@ def semantic_cluster_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "embedding_neardup_pairs",
     [
         ("lsh", "embedding_neardup_pairs"),
         ("cluster", "semantic_cluster_pairs"),
-    ]
+    ],
+    """Embedding near-duplicate pairs, two candidate
+    generators over the same exact-cosine verify: random-hyperplane LSH
+    buckets (projection-random candidates) and (r10) nearest-centroid
+    clusters (data-adaptive SemDeDup-style candidates). Both are disjoint
+    partitions of the corpus — per-bucket/per-cluster self-joins, never
+    all-pairs.""",
 )
-_bfn.__doc__ = """Embedding near-duplicate pairs, two candidate
-generators over the same exact-cosine verify: random-hyperplane LSH
-buckets (projection-random candidates) and (r10) nearest-centroid
-clusters (data-adaptive SemDeDup-style candidates). Both are disjoint
-partitions of the corpus — per-bucket/per-cluster self-joins, never
-all-pairs."""
-_q("embedding_neardup_pairs", _bsql)(_bfn)
-_retire("semantic_cluster_pairs")
 
 
 def _ivf_oracle(num_centroids: int = 16, nprobe: int = 4, k: int = 5, dim: int = 64,
@@ -3061,13 +3037,25 @@ def ivf_tuned_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("nprobe", F.lit(int(tuned["nprobe"])).cast("int"))
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "ivf_topk",
     [
         ("inflight", "ivf_topk"),
         ("store", "ivf_store_topk"),
         ("maint", "ivf_maint_topk"),
         ("tuned", "ivf_tuned_topk"),
     ],
+    """IVF-flat ANN, in-flight, FROM the cell-partitioned
+    store, THROUGH the full maintenance lifecycle, and at a TUNER-CHOSEN
+    probe count: the same deterministic coarse quantizer, nprobe probing,
+    and exact cosine re-rank — the store arm proves the layout-as-index
+    read path (probe cells -> literal PartitionFilters) end to end against
+    the same SQL replay, the maint arm drives append/delete/compact plus
+    two crash-injected rebalances (one rolled back, one rolled forward by
+    recover_store) before scoring against a live-corpus replay with
+    retrained centroids, and the (r15) tuned arm closes the tuning loop:
+    nprobe comes from tune_probes(target_recall=0.95) on the structured
+    column and the oracle replays the whole recall-vs-nprobe decision.""",
     # the maint arm is a ~18 s (sf0.01) sequential lifecycle of small
     # fsync-durable maintenance ops — the other three arms' store builds
     # and scoring back-fill its idle cores. Safe to overlap because both
@@ -3075,19 +3063,6 @@ _bfn, _bsql = _compose_union(
     # rename pred and _boom_sweep delegate for every other store).
     overlap_eager=True,
 )
-_bfn.__doc__ = """IVF-flat ANN, in-flight, FROM the cell-partitioned
-store, THROUGH the full maintenance lifecycle, and at a TUNER-CHOSEN
-probe count: the same deterministic coarse quantizer, nprobe probing,
-and exact cosine re-rank — the store arm proves the layout-as-index
-read path (probe cells -> literal PartitionFilters) end to end against
-the same SQL replay, the maint arm drives append/delete/compact plus
-two crash-injected rebalances (one rolled back, one rolled forward by
-recover_store) before scoring against a live-corpus replay with
-retrained centroids, and the (r15) tuned arm closes the tuning loop:
-nprobe comes from tune_probes(target_recall=0.95) on the structured
-column and the oracle replays the whole recall-vs-nprobe decision."""
-_q("ivf_topk", _bsql)(_bfn)
-_retire("ivf_store_topk", "ivf_maint_topk", "ivf_tuned_topk")
 
 
 def _lsh_topk_oracle(
@@ -3267,21 +3242,20 @@ def lsh_tuned_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("probe_hamming", F.lit(depth).cast("int"))
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "lsh_topk",
     [
         ("base", "lsh_topk"),
         ("tuned", "lsh_tuned_topk"),
-    ]
+    ],
+    """Multi-probe LSH approximate top-k — the 100 TB path
+    where each query probes a few buckets instead of the corpus — plus the
+    (r15) tuner-closed arm: probe depth chosen by tune_lsh_probes on the
+    structured column, with the oracle replaying the recall-vs-depth
+    decision (see lsh_tuned_topk_query). Both fully value-oracled: the
+    seeded hyperplanes are embedded as SQL literals, so bucket codes,
+    probes, and rounded-cosine ranks replay exactly.""",
 )
-_bfn.__doc__ = """Multi-probe LSH approximate top-k — the 100 TB path
-where each query probes a few buckets instead of the corpus — plus the
-(r15) tuner-closed arm: probe depth chosen by tune_lsh_probes on the
-structured column, with the oracle replaying the recall-vs-depth
-decision (see lsh_tuned_topk_query). Both fully value-oracled: the
-seeded hyperplanes are embedded as SQL literals, so bucket codes,
-probes, and rounded-cosine ranks replay exactly."""
-_q("lsh_topk", _bsql)(_bfn)
-_retire("lsh_tuned_topk")
 
 
 _STOP_SQL = {
@@ -4803,16 +4777,10 @@ def csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("progress", sec_progress), ("hive", sec_hive), ("shards", sec_shards),
         ("zorder", sec_zorder),
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(sections)) as pool:
-        futs = [
-            (tag, pool.submit(inheritable_thread_target(spark)(
-                lambda f=f: f().localCheckpoint(eager=True)
-            )))
-            for tag, f in sections
-        ]
-        return _pad_union([(tag, fu.result()) for tag, fu in futs])
+    built = _fan_out(
+        spark, [lambda f=f: f().localCheckpoint(eager=True) for _, f in sections]
+    )
+    return _pad_union([(tag, df) for (tag, _), df in zip(sections, built)])
 
 
 # =========================================================================
@@ -5063,19 +5031,17 @@ def ewm_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 # Consolidated batteries: every SURVEY §2 family inside the driver's
 # 50-query correctness window. Row-level families are tagged pad-unions
-# of registered components (_compose_union), retired from standalone
-# registration once captured; the single-row stats are one fused builder
-# checked against the cross join of _STATS_PARTS_SQL.
+# of registered components (_battery); the single-row stats are one fused
+# builder checked against the cross join of _STATS_PARTS_SQL.
 # =========================================================================
 
-_bsql = "SELECT * FROM " + " CROSS JOIN ".join(
-    f"({sql}) __t{i}" for i, sql in enumerate(_STATS_PARTS_SQL)
+@_q(
+    "stats_battery",
+    "SELECT * FROM " + " CROSS JOIN ".join(
+        f"({sql}) __t{i}" for i, sql in enumerate(_STATS_PARTS_SQL)
+    ),
 )
-
-
-def _stats_battery_fused(
-    spark: SparkSession, sf_dir: str, overlap: bool = True
-) -> DataFrame:
+def _stats_battery_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All single-row full-frame reductions (SURVEY §2.3 ops #7-#15) in
     FIVE lineitem passes instead of the former eight independent sub-plans:
 
@@ -5150,29 +5116,6 @@ def _stats_battery_fused(
         F.countDistinct("l_returnflag").alias("l_returnflag_nunique"),
         F.countDistinct("l_quantity").alias("l_quantity_nunique"),
     )
-    def _mad_from(core_df: DataFrame) -> DataFrame:
-        # two-pass by definition: |x − mean| needs pass 1's means. Built
-        # against whichever core frame the caller has (lazy plan, or the
-        # materialized 1-row checkpoint in the overlapped path — same
-        # values, and the checkpoint saves re-deriving the core subtree
-        # inside this plan's broadcast).
-        return (
-            li.crossJoin(
-                F.broadcast(core_df.select("l_quantity_mean", "l_discount_mean"))
-            )
-            .agg(
-                (
-                    det.qsum(F.abs(F.col("l_quantity") - F.col("l_quantity_mean")), 6,
-                             xmax=200.0, nmax=nb)
-                    / F.count("l_quantity")
-                ).alias("l_quantity_mad"),
-                (
-                    det.qsum(F.abs(F.col("l_discount") - F.col("l_discount_mean")), 9,
-                             xmax=2.0, nmax=nb)
-                    / F.count("l_discount")
-                ).alias("l_discount_mad"),
-            )
-        )
     prods = (
         li.groupBy("l_orderkey")
         .agg(reductions.prod_min_count("l_linenumber").alias("p"))
@@ -5206,33 +5149,36 @@ def _stats_battery_fused(
             "o_totalprice_idxmin"
         ),
     )
-    if overlap:
-        # §2.6 overlap: the five lineitem/orders passes are independent
-        # scans (the 5-pass design already shares nothing between them),
-        # so materialize them on driver threads — Catalyst analysis of
-        # the deep det.* fixed-point expression trees (~1.6 s of driver
-        # time on the sequential chain) and the pass jobs both
-        # parallelize; mad starts as soon as ITS dependency (core) is
-        # materialized. The recombine then cross-joins six 1-row local
-        # relations. Same values, same columns, same single output row.
-        from concurrent.futures import ThreadPoolExecutor
 
-        def mat(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
+    def core_then_mad() -> tuple[DataFrame, DataFrame]:
+        # two-pass by definition: |x − mean| needs pass 1's means, read
+        # here from the materialized 1-row core
+        c = core.localCheckpoint(eager=True)
+        mad = li.crossJoin(
+            F.broadcast(c.select("l_quantity_mean", "l_discount_mean"))
+        ).agg(
+            (
+                det.qsum(F.abs(F.col("l_quantity") - F.col("l_quantity_mean")), 6,
+                         xmax=200.0, nmax=nb)
+                / F.count("l_quantity")
+            ).alias("l_quantity_mad"),
+            (
+                det.qsum(F.abs(F.col("l_discount") - F.col("l_discount_mean")), 9,
+                         xmax=2.0, nmax=nb)
+                / F.count("l_discount")
+            ).alias("l_discount_mad"),
+        )
+        return c, mad.localCheckpoint(eager=True)
 
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            def submit(df: DataFrame):
-                return pool.submit(inheritable_thread_target(spark)(mat), df)
-
-            f_core = submit(core)
-            f_ind = [submit(d) for d in (nun, prods, modes, idx)]
-            core = f_core.result()
-            mad = _mad_from(core)
-            f_mad = submit(mad)
-            nun, prods, modes, idx = [f.result() for f in f_ind]
-            mad = f_mad.result()
-    else:
-        mad = _mad_from(core)
+    # the passes share nothing but the input, so each is materialized on
+    # its own driver thread: Catalyst analysis of the deep det.* trees and
+    # the pass jobs both run concurrently, and the recombine cross-joins
+    # six 1-row local relations
+    (core, mad), nun, prods, modes, idx = _fan_out(
+        spark,
+        [core_then_mad]
+        + [lambda d=d: d.localCheckpoint(eager=True) for d in (nun, prods, modes, idx)],
+    )
     out = core
     for part in (nun, prods, modes, idx, mad):
         out = out.crossJoin(F.broadcast(part))
@@ -5255,8 +5201,6 @@ def _stats_battery_fused(
         "l_quantity_mad", "l_discount_mad",
     )
 
-
-_q("stats_battery", _bsql)(_stats_battery_fused)
 
 @_q(
     "stats_describe_custom",
@@ -5450,7 +5394,8 @@ def row_quantile_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "stats_quantile_describe",
     [
         ("describe", "stats_describe"),
         ("quantile", "stats_quantile"),
@@ -5458,6 +5403,12 @@ _bfn, _bsql = _compose_union(
         ("interp", "stats_quantile_interp"),
         ("rowq", "row_quantile_arm"),
     ],
+    """describe() (8 labeled rows, exact single-scan percentiles)
+    padded-union with the arbitrary-quantile-list surface (ops #12-#13),
+    (r6) the percentiles=/include=/exclude= mixed-dtype describe, (r6b)
+    the non-linear quantile interpolation modes, and (r16) the ROW-WISE
+    quantile (pandas axis=1, the reference README's headline benchmark
+    shape) with per-row NaN skipping.""",
     # the exact-quantile arms run bounded-memory orderstats with
     # driver-fed bin-refinement passes (collect per pass) — sequential
     # eager builder work the other arms' compute now back-fills. The
@@ -5470,15 +5421,6 @@ _bfn, _bsql = _compose_union(
     overlap_eager=True,
     lazy_arms={"rowq"},
 )
-_bfn.__doc__ = """describe() (8 labeled rows, exact single-scan percentiles)
-padded-union with the arbitrary-quantile-list surface (ops #12-#13),
-(r6) the percentiles=/include=/exclude= mixed-dtype describe, (r6b)
-the non-linear quantile interpolation modes, and (r16) the ROW-WISE
-quantile (pandas axis=1, the reference README's headline benchmark
-shape) with per-row NaN skipping."""
-_q("stats_quantile_describe", _bsql)(_bfn)
-_retire("stats_describe", "stats_quantile", "stats_describe_custom",
-        "stats_quantile_interp", "row_quantile_arm")
 
 @_q(
     "value_counts_arms",
@@ -5836,7 +5778,8 @@ def whale_key_groupby_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "groupby_edge_battery",
     [
         ("salted", "salted_groupby_agg"),
         ("dropna", "groupby_dropna_keys"),
@@ -5846,6 +5789,19 @@ _bfn, _bsql = _compose_union(
         ("streampost", "stream_rollup_poststate"),
         ("sessionpost", "stream_session_poststate"),
     ],
+    """Grouped-aggregation edge cases: skew-safe two-stage salted
+    plan (equal to the unsalted result by construction), pandas dropna=True
+    NULL-key semantics, (r6) value_counts with normalize/ascending, (r10)
+    incremental rollup maintenance — chained merges of persisted det-style
+    aggregate state equal a from-raw recompute bit-for-bit, (r14) an
+    adversarial whale-key aggregation (95% of rows on one key) through the
+    salted plan, (r14) the streamed rollup POST-STATE: a checkpointed
+    foreachBatch run with a mid-stream restart whose written state, merged
+    and finalized, is hash-verified against a DuckDB det-twin recompute,
+    and (r15) the streamed SESSION-WINDOW post-state: an append-mode
+    session stream restarted mid-run from its checkpoint, whose written
+    finalized sessions (plus the batch tail past the final watermark) must
+    equal the full gaps-and-islands session set under the hash oracle.""",
     # two checkpointed streaming post-state protocols (sessionpost ~6 s,
     # streampost ~1.6 s at sf0.01) ran back to back with idle executors;
     # the five batch arms' compute back-fills them. No arm here touches
@@ -5854,23 +5810,6 @@ _bfn, _bsql = _compose_union(
     # reason).
     overlap_eager=True,
 )
-_bfn.__doc__ = """Grouped-aggregation edge cases: skew-safe two-stage salted
-plan (equal to the unsalted result by construction), pandas dropna=True
-NULL-key semantics, (r6) value_counts with normalize/ascending, (r10)
-incremental rollup maintenance — chained merges of persisted det-style
-aggregate state equal a from-raw recompute bit-for-bit, (r14) an
-adversarial whale-key aggregation (95% of rows on one key) through the
-salted plan, (r14) the streamed rollup POST-STATE: a checkpointed
-foreachBatch run with a mid-stream restart whose written state, merged
-and finalized, is hash-verified against a DuckDB det-twin recompute,
-and (r15) the streamed SESSION-WINDOW post-state: an append-mode
-session stream restarted mid-run from its checkpoint, whose written
-finalized sessions (plus the batch tail past the final watermark) must
-equal the full gaps-and-islands session set under the hash oracle."""
-_q("groupby_edge_battery", _bsql)(_bfn)
-_retire("salted_groupby_agg", "groupby_dropna_keys", "value_counts_arms",
-        "rollup_merge_arm", "whale_key_groupby", "stream_rollup_poststate",
-        "stream_session_poststate")
 
 _VERBS_ORACLE = """
 WITH ag AS (
@@ -6181,7 +6120,8 @@ def skew_join_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "merge_battery",
     [
         ("inner", "merge_inner"),
         ("outer", "merge_outer_suffix_indicator"),
@@ -6189,20 +6129,17 @@ _bfn, _bsql = _compose_union(
         ("verbs", "pandas_verbs_arm"),
         ("cdc", "cdc_arm"),
         ("skewjoin", "skew_join_arm"),
-    ]
+    ],
+    """pandas merge surface (op #25): how='inner' broadcast join,
+    how='outer' with suffixes + indicator, and semi/anti joins — plus the
+    (r6d) pandas-verbs arm (non-agg pivot, duplicated marker, idxmax(axis=1),
+    combine_first, query() expression compiler), the (r10) CDC arm
+    (log compaction, MERGE-style upsert, SCD-2 intervals, and the r15
+    incremental scd2_apply — operators/cdc.py), and the (r15) whale-key
+    skew JOIN through joins.salted_join (95% of fact rows on one key,
+    spread over 16 reducers by a deterministic salt).
+    One tagged union, every row value-checked.""",
 )
-_bfn.__doc__ = """pandas merge surface (op #25): how='inner' broadcast join,
-how='outer' with suffixes + indicator, and semi/anti joins — plus the
-(r6d) pandas-verbs arm (non-agg pivot, duplicated marker, idxmax(axis=1),
-combine_first, query() expression compiler), the (r10) CDC arm
-(log compaction, MERGE-style upsert, SCD-2 intervals, and the r15
-incremental scd2_apply — operators/cdc.py), and the (r15) whale-key
-skew JOIN through joins.salted_join (95% of fact rows on one key,
-spread over 16 reducers by a deterministic salt).
-One tagged union, every row value-checked."""
-_q("merge_battery", _bsql)(_bfn)
-_retire("merge_inner", "merge_outer_suffix_indicator", "semi_anti_customers",
-        "pandas_verbs_arm", "cdc_arm", "skew_join_arm")
 
 
 @_q(
@@ -6244,20 +6181,19 @@ def pct_change_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "ordered_battery",
     [
         ("cum", "cumulative_scan"),
         ("rank", "rank_methods"),
         ("pctfreq", "pct_change_freq"),
-    ]
+    ],
+    """Ordered scans (ops #18-#20): cumsum/cummax/cummin + shift +
+    pct_change fused with the (r6) pct_change(fill_method/limit) fill-first
+    arms on ONE (l_suppkey, 3-col-order) window pipeline, rank with all five
+    pandas methods + pct, and pct_change(freq=) exact-time-shift comparison
+    (an equal-bound range window — no self-join).""",
 )
-_bfn.__doc__ = """Ordered scans (ops #18-#20): cumsum/cummax/cummin + shift +
-pct_change fused with the (r6) pct_change(fill_method/limit) fill-first
-arms on ONE (l_suppkey, 3-col-order) window pipeline, rank with all five
-pandas methods + pct, and pct_change(freq=) exact-time-shift comparison
-(an equal-bound range window — no self-join)."""
-_q("ordered_battery", _bsql)(_bfn)
-_retire("cumulative_scan", "rank_methods", "pct_change_freq")
 
 @_q(
     "rolling_moments_battery",
@@ -6559,29 +6495,25 @@ def global_rolling_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "rolling_shapes_battery",
     [
         ("time", "rolling_time_events"),
         ("rankskewcov", "rolling_rank_skew_cov"),
         ("apply", "rolling_apply_udf"),
         ("globalroll", "global_rolling_arm"),
-    ]
-)
-_bfn.__doc__ = """Rolling shape variants (op #26 + §2.10): time-based
-rangeBetween windows — the '1h' arm plus all four pandas ``closed``
-variants stacked on one (user_id, epoch-μs) pipeline; rolling
-rank/skew/sem + pairwise rolling cov/corr + the five (r6) pandas
-``center=``/``closed=`` count-window frames fused onto one
-(l_suppkey, 4-col-order) pipeline; rolling.apply with an arbitrary
-Python UDF through Arrow applyInPandas; and (r16) the GLOBAL
-unpartitioned rolling through windows.rolling_global — bucketed
-context replication instead of the single-reducer Window.orderBy, the
-scale path for pandas' whole-frame df.rolling(w) (reference README
-1M x 1000 benchmark)."""
-_q("rolling_shapes_battery", _bsql)(_bfn)
-_retire(
-    "rolling_time_events", "rolling_apply_udf", "rolling_rank_skew_cov",
-    "global_rolling_arm",
+    ],
+    """Rolling shape variants (op #26 + §2.10): time-based
+    rangeBetween windows — the '1h' arm plus all four pandas ``closed``
+    variants stacked on one (user_id, epoch-μs) pipeline; rolling
+    rank/skew/sem + pairwise rolling cov/corr + the five (r6) pandas
+    ``center=``/``closed=`` count-window frames fused onto one
+    (l_suppkey, 4-col-order) pipeline; rolling.apply with an arbitrary
+    Python UDF through Arrow applyInPandas; and (r16) the GLOBAL
+    unpartitioned rolling through windows.rolling_global — bucketed
+    context replication instead of the single-reducer Window.orderBy, the
+    scale path for pandas' whole-frame df.rolling(w) (reference README
+    1M x 1000 benchmark).""",
 )
 
 _BM25_TERMS = ["hash", "join", "vectorized", "filter"]
@@ -6809,7 +6741,8 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "text_doc_battery",
     [
         ("profile", "text_profile"),
         ("fingerprint", "doc_fingerprints"),
@@ -6818,19 +6751,16 @@ _bfn, _bsql = _compose_union(
         ("repetition", "repetition_gopher"),
         ("pii", "pii_scan"),
         ("chunks", "doc_chunking"),
-    ]
+    ],
+    """Text analysis (pipeline ops): single-scan profile
+    (lang-ID, quality score, token counts), md5/rolling-hash fingerprints,
+    (r6) the top-k corpus vocabulary with term + document frequencies
+    (BPE-vocab seeding / IDF statistics), (r6) Okapi BM25 lexical retrieval
+    scoring for quality-targeted subcorpus selection, (r7) Gopher
+    repetition-removal signals with the published keep/drop thresholds,
+    (r7) PII detect + redact with a value-checked redaction checksum, and
+    (r7) context-window chunking with per-chunk content fingerprints.""",
 )
-_bfn.__doc__ = """Text analysis (pipeline ops): single-scan profile
-(lang-ID, quality score, token counts), md5/rolling-hash fingerprints,
-(r6) the top-k corpus vocabulary with term + document frequencies
-(BPE-vocab seeding / IDF statistics), (r6) Okapi BM25 lexical retrieval
-scoring for quality-targeted subcorpus selection, (r7) Gopher
-repetition-removal signals with the published keep/drop thresholds,
-(r7) PII detect + redact with a value-checked redaction checksum, and
-(r7) context-window chunking with per-chunk content fingerprints."""
-_q("text_doc_battery", _bsql)(_bfn)
-_retire("text_profile", "doc_fingerprints", "corpus_vocab_topk",
-        "bm25_ranking", "repetition_gopher", "pii_scan", "doc_chunking")
 
 _MEDIA_ORACLE = """
 WITH d AS (SELECT doc_id, n_chars FROM documents),
@@ -7036,7 +6966,8 @@ def mp4_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     return meta.unionByName(frames, allowMissingColumns=True)
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "multimodal_battery",
     [
         ("decode", "multimodal_decode"),
         ("frames", "video_frame_sample"),
@@ -7044,19 +6975,16 @@ _bfn, _bsql = _compose_union(
         ("png", "png_decode_real"),
         ("jpeg", "jpeg_decode_real"),
         ("mp4", "mp4_decode_real"),
-    ]
+    ],
+    """Multimodal binary columns: decode-to-metadata/features,
+    1->N video frame sampling, (r7) REAL BMP/WAV parsing (struct+numpy,
+    no media library) of deterministically-encoded payloads, (r8) REAL
+    PNG parsing (stdlib zlib inflate + full un-filtering), and (r9) REAL
+    baseline-JPEG parsing (canonical Huffman + IDCT + 4:2:0) plus REAL mp4
+    CONTAINER parsing (box tree + sample tables + mdat frame slicing; the
+    codec payload stays opaque) — all iterator mapInPandas over opaque
+    blobs.""",
 )
-_bfn.__doc__ = """Multimodal binary columns: decode-to-metadata/features,
-1->N video frame sampling, (r7) REAL BMP/WAV parsing (struct+numpy,
-no media library) of deterministically-encoded payloads, (r8) REAL
-PNG parsing (stdlib zlib inflate + full un-filtering), and (r9) REAL
-baseline-JPEG parsing (canonical Huffman + IDCT + 4:2:0) plus REAL mp4
-CONTAINER parsing (box tree + sample tables + mdat frame slicing; the
-codec payload stays opaque) — all iterator mapInPandas over opaque
-blobs."""
-_q("multimodal_battery", _bsql)(_bfn)
-_retire("multimodal_decode", "video_frame_sample", "media_decode_real",
-        "png_decode_real", "jpeg_decode_real", "mp4_decode_real")
 
 @_q(
     "numeric_elementwise",
@@ -7526,91 +7454,82 @@ def cov_matrix_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "elementwise_battery",
     [
         ("rows", "apply_rows_charge"),
         ("applymap", "applymap_signed_log"),
         ("numeric", "numeric_elementwise"),
         ("nafill", "fillna_dropna_arm"),
         ("interp", "interpolate_arm"),
-    ]
-)
-_bfn.__doc__ = """Row-at-a-time p_apply(axis=1) (honest slow-path parity
-demo) + vectorized p_applymap over every cell + (r6) the JVM-expression
-numeric surface (clip/round/abs/where/mask), the fillna/dropna
-missing-data surface, and the interpolate gap-fill family (linear /
-limit= / method='values')."""
-_q("elementwise_battery", _bsql)(_bfn)
-_retire(
-    "apply_rows_charge", "applymap_signed_log", "numeric_elementwise",
-    "fillna_dropna_arm", "interpolate_arm",
+    ],
+    """Row-at-a-time p_apply(axis=1) (honest slow-path parity
+    demo) + vectorized p_applymap over every cell + (r6) the JVM-expression
+    numeric surface (clip/round/abs/where/mask), the fillna/dropna
+    missing-data surface, and the interpolate gap-fill family (linear /
+    limit= / method='values').""",
 )
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "pivot_battery",
     [
         ("mean", "pivot_table_mean"),
         ("aggfuncs", "pivot_aggfunc_battery"),
         ("dictcall", "pivot_dict_callable"),
         ("reshape", "reshape_arm"),
     ],
+    """pivot_table surface (op #24): single-stat mean pivot, the
+    aggfunc list/margins/fill form, (r4) the aggfunc dict + callable
+    forms — the full pandas aggfunc spec is driver-value-checked — and (r6)
+    the reshape verbs: melt (native unpivot), crosstab (count +
+    normalize='index'), get_dummies (dynamic category one-hot).""",
     # the dictcall arm is many small sequential aggregations (the
     # driver-value-checked aggfunc-dict surface); the arms' outputs are
     # pivot-cell-sized (51 rows at sf0.01), so eager overlap is free of
     # payload-copy cost (1.89 -> 0.94 s interleaved medians at sf0.1)
     overlap_eager=True,
 )
-_bfn.__doc__ = """pivot_table surface (op #24): single-stat mean pivot, the
-aggfunc list/margins/fill form, (r4) the aggfunc dict + callable
-forms — the full pandas aggfunc spec is driver-value-checked — and (r6)
-the reshape verbs: melt (native unpivot), crosstab (count +
-normalize='index'), get_dummies (dynamic category one-hot)."""
-_q("pivot_battery", _bsql)(_bfn)
-_retire("pivot_table_mean", "pivot_aggfunc_battery", "pivot_dict_callable",
-        "reshape_arm")
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "corr_matrix_native",
     [("native", "corr_matrix_native"), ("dynamic", "corr_callable_minp"),
-     ("cov", "cov_matrix_arm")]
+     ("cov", "cov_matrix_arm")],
+    """corr_matrix surface (op #17): native one-scan pearson
+    matrix plus (r4) the callable-method applyInPandas fallback and the
+    min_periods pairwise-complete guard, and (r6) the df.cov() matrix
+    (ddof=1/0 + min_periods, diagonal included).""",
 )
-_bfn.__doc__ = """corr_matrix surface (op #17): native one-scan pearson
-matrix plus (r4) the callable-method applyInPandas fallback and the
-min_periods pairwise-complete guard, and (r6) the df.cov() matrix
-(ddof=1/0 + min_periods, diagonal included)."""
-_q("corr_matrix_native", _bsql)(_bfn)
-_retire("corr_callable_minp", "cov_matrix_arm")
 
-_bfn, _bsql = _compose_union(
-    [("ops", "str_ops_battery"), ("extract", "str_extract_split")]
+_battery(
+    "str_battery",
+    [("ops", "str_ops_battery"), ("extract", "str_extract_split")],
+    """.str accessor family (§2.7): the 21-op battery (+generic
+    passthrough) plus regex extract/split.""",
 )
-_bfn.__doc__ = """.str accessor family (§2.7): the 21-op battery (+generic
-passthrough) plus regex extract/split."""
-_q("str_battery", _bsql)(_bfn)
-_retire("str_ops_battery", "str_extract_split")
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "dt_battery",
     [("parts", "dt_parts_battery"), ("floorceil", "dt_floor_ceil_strftime"),
-     ("resample", "resample_arm")]
+     ("resample", "resample_arm")],
+    """.dt accessor family (§2.7): part extraction battery plus
+    floor/ceil/strftime translation, and (r6) time resampling — hourly
+    closed-left/right downsamples and the 6h asfreq+ffill grid.""",
 )
-_bfn.__doc__ = """.dt accessor family (§2.7): part extraction battery plus
-floor/ceil/strftime translation, and (r6) time resampling — hourly
-closed-left/right downsamples and the 6h asfreq+ffill grid."""
-_q("dt_battery", _bsql)(_bfn)
-_retire("dt_parts_battery", "dt_floor_ceil_strftime", "resample_arm")
 
-_bfn, _bsql = _compose_union(
-    [("setops", "set_ops_core"), ("bins", "cut_qcut_binning")]
+_battery(
+    "set_ops_quantity_buckets",
+    [("setops", "set_ops_core"), ("bins", "cut_qcut_binning")],
+    """intersect/except set operations (§2.8) plus (r6) the
+    binning surface: cut with literal edges (codes + labels on one scan) and
+    qcut exact-quantile quartiles.""",
 )
-_bfn.__doc__ = """intersect/except set operations (§2.8) plus (r6) the
-binning surface: cut with literal edges (codes + labels on one scan) and
-qcut exact-quantile quartiles."""
-_q("set_ops_quantity_buckets", _bsql)(_bfn)
-_retire("set_ops_core", "cut_qcut_binning")
 
-_bfn, _bsql = _compose_union([("rollup", "rollup_agg"), ("cube", "cube_agg_counts")])
-_bfn.__doc__ = """Multi-dimensional aggregation (§2.8): rollup and cube
-grouping sets."""
-_q("grouping_sets_battery", _bsql)(_bfn)
-_retire("rollup_agg", "cube_agg_counts")
+_battery(
+    "grouping_sets_battery",
+    [("rollup", "rollup_agg"), ("cube", "cube_agg_counts")],
+    """Multi-dimensional aggregation (§2.8): rollup and cube
+    grouping sets.""",
+)
 
 @_q(
     "json_props_arm",
@@ -7645,27 +7564,23 @@ def json_props_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bfn, _bsql = _compose_union(
+_battery(
+    "event_windows_battery",
     [
         ("tumbling", "tumbling_window_agg"),
         ("sliding", "sliding_window_counts"),
         ("session", "session_window_agg"),
         ("json", "json_props_arm"),
     ],
+    """Event-time windows (§2.9 batch equivalents): tumbling,
+    sliding, and session windows over the events stream table; the true
+    readStream path is stream_tumbling_live. Plus (r6) the JSON payload
+    surface: schema-declared json_normalize of events.props (typed columns,
+    PERMISSIVE malformed handling, zero Python).""",
     # window-count outputs (time-bucket cardinality, not event rows);
     # 0.90 -> 0.62 s interleaved medians at sf0.1
     overlap_eager=True,
 )
-_bfn.__doc__ = """Event-time windows (§2.9 batch equivalents): tumbling,
-sliding, and session windows over the events stream table; the true
-readStream path is stream_tumbling_live. Plus (r6) the JSON payload
-surface: schema-declared json_normalize of events.props (typed columns,
-PERMISSIVE malformed handling, zero Python)."""
-_q("event_windows_battery", _bsql)(_bfn)
-_retire("tumbling_window_agg", "sliding_window_counts", "session_window_agg",
-        "json_props_arm")
-
-del _bfn, _bsql
 
 
 def _sampling_oracle() -> str:
@@ -8243,15 +8158,7 @@ def corpus_livepost_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the standing-artifact chain and the first slice are independent
     # fixture writes — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=2) as _pool:
-        futs = [
-            _pool.submit(inheritable_thread_target(spark)(_write_base)),
-            _pool.submit(inheritable_thread_target(spark)(_append_slices), 1, 1),
-        ]
-        for f in futs:
-            f.result()
+    _fan_out(spark, [_write_base, lambda: _append_slices(1, 1)])
     # both base artifacts carry standing's schema (keepers keeps columns)
     base_state = _ru.agg_state(
         spark.read.schema(standing.schema).parquet(base_co_p), ["lang"], cspec
@@ -8298,30 +8205,28 @@ def corpus_livepost_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(collected, schema)
 
 
-_cbfn, _cbsql = _compose_union(
+_battery(
+    "corpus_build_pipeline",
     [
         ("build", "corpus_build_fullarm"),
         ("incremental", "corpus_incremental_arm"),
         ("livepost", "corpus_livepost_arm"),
     ],
+    """Corpus lifecycle battery: the from-scratch five-stage
+    build (quality -> gopher -> dedup -> sample/split -> pack), (r11) the
+    INCREMENTAL maintenance path — CDC compaction, broadcast merge into the
+    standing doc index, affected-fingerprint keeper recomputation, and exact
+    retraction-based rollup refresh — oracled against the from-scratch
+    rebuild it must equal, and (r16) the LIVE checkpointed streaming loop's
+    post-state (mid-run restart + changelog compaction) hash-oracled against
+    the same from-scratch truth (formerly rows-only in
+    stream_tumbling_live).""",
     # livepost is ~8 s of checkpointed-streaming protocol whose
     # executors sit mostly idle (micro-batch commits, fsyncs, stream
     # start/stop) — the build and incremental arms' real compute
     # back-fills those cores instead of queuing behind them
     overlap_eager=True,
 )
-_cbfn.__doc__ = """Corpus lifecycle battery: the from-scratch five-stage
-build (quality -> gopher -> dedup -> sample/split -> pack), (r11) the
-INCREMENTAL maintenance path — CDC compaction, broadcast merge into the
-standing doc index, affected-fingerprint keeper recomputation, and exact
-retraction-based rollup refresh — oracled against the from-scratch
-rebuild it must equal, and (r16) the LIVE checkpointed streaming loop's
-post-state (mid-run restart + changelog compaction) hash-oracled against
-the same from-scratch truth (formerly rows-only in
-stream_tumbling_live)."""
-_q("corpus_build_pipeline", _cbsql)(_cbfn)
-_retire("corpus_build_fullarm", "corpus_incremental_arm",
-        "corpus_livepost_arm")
 
 
 #: Order of the 50 entries — the driver's correctness artifact covers

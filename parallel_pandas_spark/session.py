@@ -19,6 +19,20 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory() -> str:
+    """The driver heap cap: the smaller of 48g and half of physical memory.
+
+    local[32] runs every task in the driver JVM: 32 concurrent external
+    sorts share the execution-memory pool, and an 8g heap measurably
+    spilled the sf1 window sorts (ordered_battery 48 s -> 15 s at 48g). A
+    real cluster sizes executor memory to its partition budget; locally we
+    take the RAM we have, but no more than half of it: a cap above
+    physical memory lets G1 grow the heap until the kernel kills the JVM
+    (seen on a 16 GB host at 15.5 GB resident)."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "parallel_pandas_spark",
     cpus: int | None = None,
@@ -95,12 +109,10 @@ def get_spark(
         # default 100 there. So get_spark sizes the cache itself, below.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
-        # local[32] runs every task in the driver JVM: 32 concurrent
-        # external sorts share the execution-memory pool, and an 8g heap
-        # measurably spilled the sf1 window sorts (ordered_battery 48 s ->
-        # 15 s at 48g, r6 slope study). A real cluster sizes executor
-        # memory to its partition budget; locally we take the RAM we have.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

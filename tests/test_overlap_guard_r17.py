@@ -1,17 +1,15 @@
 """Exclusion-principle guard for the eager-overlap family (r17, r16
-verdict #7): ``_compose_union(overlap_eager=True)`` copies each arm's
+verdict #7): ``_battery(..., overlap_eager=True)`` copies each arm's
 OUTPUT through the block manager (localCheckpoint), which is scale-safe
 only while every overlapped arm's output is aggregate-sized. A future
 arm with row-scaled output (proportional to the input table) would
 silently reintroduce a copy cost that grows with data. This test
 discovers every overlapped battery via the ``__overlap_eager__`` flag
-and pins the per-arm row-count bound, plus row parity with the
-sequential union.
+and pins the per-arm row-count bound; row parity with the sequential
+union is pinned in tests/test_overlap_r16.py.
 """
 
 from __future__ import annotations
-
-import pytest
 
 import __spark_entry__ as entry
 
@@ -23,13 +21,6 @@ SF = "/root/testdata/sf0.01"
 # sf0.01 or, worse, pass here and fail at sf0.1 — so the bound is also
 # asserted to be a small fraction of the battery's biggest input table.
 MAX_ARM_ROWS = 10_000
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from parallel_pandas_spark.session import get_spark
-
-    return get_spark(app_name="pps-test-overlap-guard", cpus=4)
 
 
 def _overlapped_batteries():
@@ -67,26 +58,3 @@ def test_every_overlapped_arm_output_is_aggregate_sized(spark):
         f"copies data through the block manager at scale): {oversized}"
     )
 
-
-def test_overlap_mode_knob_rows_identical(spark):
-    """The eager battery returns bit-identical rows to the sequential
-    lazy union of its arms (checkpointing changes only failure-recovery
-    semantics)."""
-    qs = entry.queries()
-    fn = qs["pivot_battery"]
-
-    def _canon(df):
-        cols = sorted(df.columns)
-        rows = df.select(*cols).collect()
-        return sorted(
-            (
-                tuple(
-                    round(v, 9) if isinstance(v, float) else v for v in r
-                )
-                for r in rows
-            ),
-            key=repr,
-        )
-
-    reference = entry._pad_union([(t, f(spark, SF)) for t, f in fn.__arms__])
-    assert _canon(fn(spark, SF)) == _canon(reference)

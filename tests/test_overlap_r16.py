@@ -12,13 +12,6 @@ import __spark_entry__ as entry
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from parallel_pandas_spark.session import get_spark
-
-    return get_spark(app_name="pps-test-overlap", cpus=4)
-
-
 def _canon(df):
     cols = sorted(df.columns)
     rows = df.select(*cols).collect()
@@ -62,14 +55,6 @@ def test_overlap_union_rows_equal_sequential(spark, battery):
     assert [t for t, _ in fn.__arms__] == tags_before
     assert ovl.columns == seq_cols
     assert _canon(ovl) == seq_rows
-
-
-def test_stats_battery_overlap_equals_sequential(spark):
-    """The threaded 5-pass stats battery (overlap=True, the registered
-    path) returns the exact row of the sequential chain."""
-    a = entry._stats_battery_fused(spark, SF, overlap=False).collect()
-    b = entry._stats_battery_fused(spark, SF, overlap=True).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
 def test_overlap_recomputes_per_invocation(spark):

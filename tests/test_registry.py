@@ -6,8 +6,14 @@ names an entry. A builder that no entry reaches is dead code."""
 from __future__ import annotations
 
 import ast
+import hashlib
+import json
 import pathlib
 import tempfile
+import threading
+import time
+
+import pytest
 
 import __spark_entry__ as em
 
@@ -53,6 +59,23 @@ def test_every_oracle_names_an_entry():
     assert set(em.oracle_sql()) <= set(em.queries())
 
 
+def test_oracle_sql_is_unchanged():
+    """The 50 oracle strings, byte for byte: a registry refactor must not
+    move any of them."""
+    digest = hashlib.sha256(json.dumps(em.oracle_sql()).encode()).hexdigest()
+    assert digest == "4ebbc21b1707a74cf0c4a18383249c14ec2b286205b1e44bb7459b059039987d"
+
+
+def test_every_registered_name_outside_the_entries_is_an_arm():
+    """Every builder registered under a name that is not an entry is run
+    as some entry's arm, so no registered name is dead."""
+    reached = _reached()
+    core = set(em._CORE_ORDER)
+    stray = [n for n, fn in em._QUERIES.items() if n not in core and id(fn) not in reached]
+    assert len(em._QUERIES) > len(core)
+    assert not stray, stray
+
+
 def test_csv_json_roundtrip_writes_under_the_temp_dir(spark, sf_small, tmp_path, monkeypatch):
     """The sink+readback battery writes its files under the process temp
     dir, so it runs from any checkout (read-only or isolated) and leaves
@@ -81,3 +104,42 @@ def test_pool_thread_jobs_carry_the_callers_job_group(spark, sf_small):
             sc.setLocalProperty("spark.job.description", None)
         assert tracker.getJobIdsForGroup(f"registry-{name}"), name
         assert set(tracker.getJobIdsForGroup(None)) - before == set(), name
+
+
+def test_fan_out_failure_cancels_the_running_siblings(spark):
+    """When one task raises, its siblings' running Spark jobs are
+    cancelled and the first error reaches the caller at once, with the
+    calling thread's job group untouched."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    started = threading.Event()
+    raised_at = []
+
+    def long_job():
+        started.set()
+        return spark.range(0, 10**11).selectExpr("sum(id)").collect()
+
+    def fail_once_the_job_runs():
+        assert started.wait(60)
+        deadline = time.monotonic() + 60
+        while not tracker.getActiveJobsIds():
+            assert time.monotonic() < deadline
+            time.sleep(0.05)
+        raised_at.append(time.monotonic())
+        raise ValueError("arm failed")
+
+    sc.setJobGroup("fan-out-cancel", "fan-out-cancel")
+    tags = sc.getJobTags()
+    try:
+        with pytest.raises(ValueError, match="arm failed"):
+            em._fan_out(spark, [long_job, fail_once_the_job_runs])
+        assert time.monotonic() - raised_at[0] < 5
+        assert sc.getLocalProperty("spark.jobGroup.id") == "fan-out-cancel"
+        assert sc.getJobTags() == tags
+        deadline = time.monotonic() + 10
+        while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert not tracker.getActiveJobsIds()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

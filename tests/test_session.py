@@ -60,3 +60,17 @@ def test_codegen_cache_sized_by_session_not_first_query(tmp_path):
     assert set(warm) == {"corpus_build_pipeline", "kendall_tau_exact",
                          "event_windows_battery"}, out.stdout
     assert max(warm.values()) <= 30, warm
+
+
+def test_default_driver_memory_is_at_most_half_of_ram(monkeypatch):
+    """The default heap cap is the smaller of 48g and half of physical
+    memory, so the JVM heap cannot outgrow the host."""
+    from parallel_pandas_spark import session
+
+    page = 4096
+    sizes = {"SC_PAGE_SIZE": page}
+    monkeypatch.setattr(session.os, "sysconf", lambda name: sizes[name])
+    sizes["SC_PHYS_PAGES"] = 16 * 2**30 // page
+    assert session.default_driver_memory() == "8192m"
+    sizes["SC_PHYS_PAGES"] = 512 * 2**30 // page
+    assert session.default_driver_memory() == "49152m"
