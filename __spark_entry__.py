@@ -2033,41 +2033,45 @@ SELECT query_id, neighbor_id, qcosine, rank FROM r WHERE rank <= 5
 """
 
 
+#: A fixture store's build stamp, written after its build completes.
+_STORE_MARKER = "_SRC_STAMP"
+
+
 def _ensure_store(
     spark: SparkSession,
     sf_dir: str,
     name: str,
-    mt_suffix: str,
-    sidecar_suffixes: tuple,
+    params: str,
     build,
 ) -> str:
     """Shared build-if-stale cache for every persisted vector-store
     fixture (int8 / IVF / IVF-PQ): keyed by the absolute sf_dir,
-    invalidated when the source embeddings parquet's mtime (or the
-    build parameters baked into ``mt_suffix``) move. Stale rebuilds
-    clear the store AND its quantizer sidecars — a second write would
-    otherwise append beside the first. ``build(emb, path)`` does the
-    actual write."""
+    invalidated when the source embeddings' content stamp (newest
+    mtime_ns and total bytes, as load_table keys its cache) or the
+    build parameters in ``params`` move. A rebuild clears the one
+    store directory first, so the build writes a fresh store.
+    ``build(emb, path)`` does the actual write."""
     import hashlib
     import shutil
     import tempfile
 
+    from parallel_pandas_spark.sources.loaders import _content_stamp
+
     src = os.path.join(sf_dir, "embeddings.parquet")
-    mt = f"{os.path.getmtime(src)!r} {mt_suffix}"
+    stamp = f"{_content_stamp(src)} {params}"
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"pps_{name}_{key}")
-    marker = os.path.join(path, "_SRC_MTIME")
+    marker = os.path.join(path, _STORE_MARKER)
     try:
         with open(marker) as fh:
-            if fh.read() == mt:
+            if fh.read() == stamp:
                 return path
     except OSError:
         pass
-    for suffix in ("",) + tuple(sidecar_suffixes):
-        shutil.rmtree(path + suffix, ignore_errors=True)
+    shutil.rmtree(path, ignore_errors=True)
     build(load_table(spark, sf_dir, "embeddings"), path)
     with open(marker, "w") as fh:
-        fh.write(mt)
+        fh.write(stamp)
     return path
 
 
@@ -2094,49 +2098,33 @@ def _ensure_quant_store(spark: SparkSession, sf_dir: str) -> str:
         rows = 0
     shards = max(1, -(-rows // 1_000_000))
     return _ensure_store(
-        spark, sf_dir, "vecstore", f"shards={shards}", (),
+        spark, sf_dir, "vecstore", f"shards={shards}",
         lambda emb, path: vecstore.write_vector_store(
             emb, path, "vec_id", "embedding", dim=64, shards=shards
         ),
     )
 
 
-_QUANT_STORE_DFS: dict[str, tuple[float, DataFrame]] = {}
+_STORE_DFS: dict[str, tuple[int, DataFrame]] = {}
 
 
-def _quant_store_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The store DataFrame with its file index held across calls — what a
-    resident session (or a metastore-backed catalog table) does for a
-    real store: re-listing the partition directories on every query costs
+def _store_df(spark: SparkSession, path: str, table: str = "") -> DataFrame:
+    """The live rows of the fixture store at ``path`` (its ``table``
+    subdirectory for the PQ layouts), loaded once per build and session:
+    a resident session (or a metastore-backed catalog table) holds a
+    real store's file index instead of re-listing its partition
+    directories and re-reading its footer on every query, which costs
     more than the whole scoring job at fixture scale. Invalidated when
-    the store is rebuilt (the marker file's own mtime moves)."""
-    path = _ensure_quant_store(spark, sf_dir)
-    stamp = os.path.getmtime(os.path.join(path, "_SRC_MTIME"))
-    hit = _QUANT_STORE_DFS.get(path)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    df = spark.read.parquet(path)
-    _QUANT_STORE_DFS[path] = (stamp, df)
-    return df
-
-
-_PQ_STORE_DFS: dict[str, tuple[float, DataFrame]] = {}
-
-
-def _ivfpq_codes_df(spark: SparkSession, path: str) -> DataFrame:
-    """The IVF-PQ/OPQ store's live-rows DataFrame with its file index
-    held across calls — the same resident-session contract as
-    :func:`_quant_store_df` (r16 verdict #5): re-resolving the manifest
-    and re-running load_vector_store's mergeSchema footer job on every
-    scoring call is a fixed-cost Spark job per call. Invalidated when
-    the store is rebuilt (marker mtime moves) or the session changed
-    (a cached DataFrame is bound to the JVM session that created it)."""
-    stamp = os.path.getmtime(os.path.join(path, "_SRC_MTIME"))
-    hit = _PQ_STORE_DFS.get(path)
+    the store is rebuilt (the marker file's mtime moves) or the session
+    changed (a cached DataFrame is bound to the JVM session that
+    created it)."""
+    stamp = os.stat(os.path.join(path, _STORE_MARKER)).st_mtime_ns
+    store = os.path.join(path, table) if table else path
+    hit = _STORE_DFS.get(store)
     if hit is not None and hit[0] == stamp and hit[1].sparkSession is spark:
         return hit[1]
-    df = vecstore.load_vector_store(spark, f"{path}/codes", "vec_id")
-    _PQ_STORE_DFS[path] = (stamp, df)
+    df = vecstore.load_vector_store(spark, store, "vec_id")
+    _STORE_DFS[store] = (stamp, df)
     return df
 
 
@@ -2150,7 +2138,7 @@ def cosine_quantstore_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the same end-to-end quantization replay as the in-flight
     quant arm: the store is a pure materialization, values BIT-identical
     (pinned in tests/test_new_surface_r10.py)."""
-    store = _quant_store_df(spark, sf_dir)
+    store = _store_df(spark, _ensure_quant_store(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
     return vecstore.quantized_topk_from_store(
@@ -2359,7 +2347,7 @@ SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= {k}
 #: seeded orthogonal rotation for the driver's OPQ arm — a LITERAL in
 #: both pipelines (fixed at import, so one static oracle string serves
 #: every sf_dir); similarity.opq_train's learned matrix slots into the
-#: same .rotation sidecar unchanged. On this corpus the embeddings are
+#: same ``_rotation`` unchanged. On this corpus the embeddings are
 #: isotropic Gaussian (rotation-invariant), so recall gain is ~zero BY
 #: CONSTRUCTION — the arm proves the plumbing end to end; the learned-
 #: rotation gain is pinned in tests on a correlated corpus where it
@@ -2392,11 +2380,9 @@ def _opq_prelude() -> str:
 
 def _ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
     """Build-if-stale cache for the IVF-PQ store (same marker pattern as
-    _ensure_quant_store/_ensure_ivf_store via _ensure_store); stale
-    rebuilds clear the store and BOTH quantizer sidecars."""
+    _ensure_quant_store/_ensure_ivf_store via _ensure_store)."""
     return _ensure_store(
         spark, sf_dir, "ivfpqstore", "ivfpq m=8 ks=16 ncent=16",
-        (".centroids",),
         lambda emb, path: vecstore.write_ivfpq_store(
             emb, path, "vec_id", "embedding", m=8, ks=16, dim=64,
             iters=0, num_centroids=16,
@@ -2417,18 +2403,17 @@ def cosine_ivfpq_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") < 10)
     return vecstore.ivfpq_topk_from_store(
         spark, path, emb, queries, "vec_id", "embedding",
-        k=5, pool=50, nprobe=4, store_df=_ivfpq_codes_df(spark, path),
+        k=5, pool=50, nprobe=4, store_df=_store_df(spark, path, "codes"),
     )
 
 
 def _ensure_opq_store(spark: SparkSession, sf_dir: str) -> str:
     """Build-if-stale cache for the OPQ-rotated IVF-PQ store: identical
-    layout to _ensure_ivfpq_store plus the ``.rotation`` sidecar — the
+    layout to _ensure_ivfpq_store plus the store's ``_rotation`` — the
     corpus is rotated by the import-time literal _OPQ_R before fitting
     and encoding (vecstore.write_ivfpq_store rotation=)."""
     return _ensure_store(
         spark, sf_dir, "opqstore", "opq m=8 ks=16 ncent=16 seed=13",
-        (".centroids", ".rotation"),
         lambda emb, path: vecstore.write_ivfpq_store(
             emb, path, "vec_id", "embedding", m=8, ks=16, dim=64,
             iters=0, num_centroids=16, rotation=_OPQ_R,
@@ -2439,15 +2424,15 @@ def _ensure_opq_store(spark: SparkSession, sf_dir: str) -> str:
 @_q("cosine_opq_topk", _ivfpq_oracle(corpus="remb", prelude=_opq_prelude()))
 def cosine_opq_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ-rotated IVF-PQ top-k (r13, r12 verdict #6 — Ge et al., CVPR
-    2013): the corpus is rotated by an orthogonal matrix persisted as a
-    store sidecar (``.rotation``) before PQ fitting/encoding, and
+    2013): the corpus is rotated by an orthogonal matrix persisted in
+    the store (``<store>/_rotation``) before PQ fitting/encoding, and
     queries + re-rank vectors enter the same rotated space at score
-    time (vecstore.ivfpq_topk_from_store reads the sidecar). The
+    time (vecstore.ivfpq_topk_from_store reads it). The
     rotation here is the seeded import-time literal _OPQ_R so ONE
     static oracle string replays it at every sf (the rotated-embeddings
     CTE folds the literal columns through the same _DOT_SQL arithmetic
     as the JVM fold); similarity.opq_train's LEARNED rotation slots
-    into the identical sidecar — its gain is pinned in tests on a
+    into the identical ``_rotation`` — its gain is pinned in tests on a
     correlated corpus (this fixture's embeddings are isotropic, where
     any rotation is recall-neutral by symmetry)."""
     path = _ensure_opq_store(spark, sf_dir)
@@ -2455,7 +2440,7 @@ def cosine_opq_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") < 10)
     return vecstore.ivfpq_topk_from_store(
         spark, path, emb, queries, "vec_id", "embedding",
-        k=5, pool=50, nprobe=4, store_df=_ivfpq_codes_df(spark, path),
+        k=5, pool=50, nprobe=4, store_df=_store_df(spark, path, "codes"),
     )
 
 
@@ -2494,8 +2479,8 @@ _battery(
     ADC path (32x smaller store) with exact re-rank of its candidate pool,
     and (r12) the unified IVF-PQ store — PQ codes partitioned by IVF cell,
     probe pruning and 32x compression multiplying — scored end to end from
-    its persisted sidecars, and (r13) the OPQ arm — the same IVF-PQ store
-    behind a persisted orthogonal rotation sidecar, queries rotated at
+    its persisted quantizers, and (r13) the OPQ arm — the same IVF-PQ store
+    behind a persisted orthogonal rotation, queries rotated at
     score time. All broadcast the query side over one corpus scan (the
     ivfpq/opq arms scan only probed cells).""",
     # the PQ-family arms are driver-fed chains (train -> encode -> LUT ->
@@ -2678,7 +2663,7 @@ def _ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     non-probed directories are never listed (the 100 TB pruning story,
     plan-fenced in tests/test_vecstore_lifecycle_r11.py)."""
     return _ensure_store(
-        spark, sf_dir, "ivfstore", "ncent=16", (".centroids",),
+        spark, sf_dir, "ivfstore", "ncent=16",
         lambda emb, path: vecstore.write_ivf_store(
             emb, path, "vec_id", "embedding", num_centroids=16
         ),
@@ -2747,10 +2732,10 @@ def ivf_maint_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     components, and pytest alone was their only witness): build the IVF
     store from 90% of the corpus -> cell-aligned append of the rest ->
     tombstone delete -> compact_vector_store -> rebalance_ivf_store
-    crash-injected MID MOVE-ASIDE (recover_store must roll BACK to the
-    compacted store, byte-complete) -> rebalance retried and
-    crash-injected MID STAGED-MOVE-IN (recover_store must roll FORWARD
-    to the completed rebalance, replaying quantizer promotion) ->
+    crash-injected ON its manifest commit (recover_store must roll BACK
+    to the compacted store, byte-complete) -> rebalance retried and
+    crash-injected in its post-commit sweep (recover_store must roll
+    FORWARD to the completed rebalance, new cells and quantizer) ->
     retention lifecycle (r15 verdict #5: a pre-rewrite reader completes
     against the retain_versions=1 snapshot, then vacuum_store reclaims
     it) -> score.
@@ -2767,15 +2752,9 @@ def ivf_maint_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"pps_ivfmaint_{key}")
-    # versioned artifacts and the manifest live INSIDE path (r14); the
-    # legacy sibling sidecars — including any pre-upgrade crash debris
-    # at this fixed tempdir path, which _rewrite_store refuses loudly —
-    # need separate wipes so the arm stays self-healing
-    for p in (path, vecstore._tomb_path(path), path + ".centroids",
-              path + ".centroids.next", path + ".preswap",
-              path + ".rebalance.tmp", path + ".compact.tmp",
-              path + ".reshard.tmp"):
-        shutil.rmtree(p, ignore_errors=True)
+    # the whole store — data, tombstones, quantizer, manifest — lives
+    # inside path
+    shutil.rmtree(path, ignore_errors=True)
 
     vecstore.write_ivf_store(
         emb.where(F.col("vec_id") % 10 != 0), path, "vec_id", "embedding",
@@ -2812,10 +2791,10 @@ def ivf_maint_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separator-aware scope (r17, r16 ADVICE): bare startswith(path)
     # would also match a sibling store whose tempdir name merely EXTENDS
     # this prefix (pps_ivfmaint_<key>extra); only this store's own tree
-    # (path + os.sep) and its dot-suffixed sidecars (path + '.') count.
+    # (path + os.sep) counts.
     def _own(p: str) -> bool:
         p = str(p)
-        return p == path or p.startswith(path + os.sep) or p.startswith(path + ".")
+        return p == path or p.startswith(path + os.sep)
 
     _crashed_rebalance(
         lambda s, d: d.endswith("_MANIFEST.json") and _own(d),
@@ -2999,7 +2978,7 @@ def _ensure_ivfs_store(spark: SparkSession, sf_dir: str) -> str:
     the fixture where recall actually discriminates and probe counts
     can be tuned; same marker-file pattern as _ensure_ivf_store)."""
     return _ensure_store(
-        spark, sf_dir, "ivfsstore", "ncent=16 structured", (".centroids",),
+        spark, sf_dir, "ivfsstore", "ncent=16 structured",
         lambda emb, path: vecstore.write_ivf_store(
             similarity.structured_embeddings(emb).select(
                 "vec_id", F.col("embedding_s").alias("embedding")

@@ -6,10 +6,13 @@ quant arm could only TIE the exact arm; a store-reading scorer pays the
 encode once at ingest and every query after that moves 64 packed int8
 bytes per row instead of 64 floats).
 
-Store layouts (both hive-partitioned on ``shard = pmod(xxhash64(id), n)``
-via the existing partitioned sink — a reader filtering on shard prunes at
-plan time, and the write demonstrates the ingest path a 100 TB corpus
-would use):
+Store layout: every store is ONE directory whose ``_MANIFEST.json``
+names its live versions (see the snapshot-manifest notes below) — the
+data ``_data-v<N>``, hive-partitioned on ``shard = pmod(xxhash64(id),
+n)`` (or on the IVF ``cell``) via the existing partitioned sink, so a
+reader filtering on the partition column prunes at plan time; the
+tombstone set ``_tombs-v<N>``; and, for IVF stores, the coarse quantizer
+``_cents-v<N>``. Nothing lives beside the store directory.
 
 - **int8 store** (:func:`write_vector_store`): one row per vector —
   ``(id, scale double, norm double, codes binary)`` where ``codes`` is
@@ -23,8 +26,10 @@ would use):
   semantics.
 - **PQ store** (:func:`write_pq_store`): ``(id, codes binary, rn2
   double)`` with the m uint8 sub-codes packed into m bytes (8 bytes per
-  vector at m=8 — 32× smaller than 64 float32s), plus the codebooks at
-  ``<path>/_books`` so any session can score without refitting.
+  vector at m=8 — 32× smaller than 64 float32s). The codes are a store
+  at ``<path>/codes``; the codebooks sit at ``<path>/_books`` (and an
+  OPQ rotation at ``<path>/_rotation``) so any session can score
+  without refitting.
 
 Scoring from the store (:func:`quantized_topk_from_store`,
 :func:`pq_topk_from_store`) produces BIT-IDENTICAL results to the
@@ -126,11 +131,12 @@ def write_vector_store(
     partitions. Undecodable vectors keep their row with NULL
     codes/scale/norm: the store is a full mirror of the corpus ids, so
     store-side top-k reproduces the in-flight NULL-tail semantics
-    exactly."""
+    exactly. The write is committed like every rewrite (see
+    :func:`_write_store`)."""
     store = _with_seq(
         _int8_encode(corpus, id_col, vec_col, dim, bits), 0
     ).withColumn("shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards)))
-    write_partitioned(store, path, "shard")
+    _write_store(path, store, "shard")
 
 
 # --- lifecycle: append / delete / load ------------------------------------
@@ -143,42 +149,26 @@ def write_vector_store(
 # deletes are id tombstones filtered out BEFORE top-k selection (so k is
 # never starved by deleted neighbors).
 
-_TOMBSTONES = ".tombstones"
-
-
-def _tomb_path(path: str) -> str:
-    """Tombstones live in a SIBLING directory (``<store>.tombstones``):
-    Spark's file index silently ignores underscore/dot-prefixed entries
-    inside a read path, and a plainly-named subdirectory would be picked
-    up as store data — a sibling is the only layout that is both
-    readable directly and invisible to the store scan."""
-    return path.rstrip("/") + _TOMBSTONES
-
-
 # --- snapshot-isolation manifest (r14, r13 verdict #4) --------------------
 # ONE ``_MANIFEST.json`` inside the store, committed by atomic temp-file
 # + rename, is THE commit point for every rewrite — the same protocol
 # the streaming corpus loop adopted in r13 (streaming/corpus.py:120).
 # It records which artifact versions are live:
 #
-#   {"txn": N, "data": "." | "_data-v<N>",
-#    "tombs": null | ".tombstones" | "_tombs-v<N>",
-#    "cents": null | ".centroids" | "_cents-v<N>"}
+#   {"txn": N, "data": "_data-v<N>",
+#    "tombs": null | "_tombs-v<N>", "cents": null | "_cents-v<N>"}
 #
-# ``"."`` / ``".tombstones"`` / ``".centroids"`` denote the LEGACY
-# in-place layout (data at the store root, sidecars as siblings) — a
-# fresh write produces it and needs no manifest; the first REWRITE
-# (compact / re-shard / rebalance) stages a complete ``_data-v<txn+1>``
-# (plus ``_cents-v`` for a rebalance) INSIDE the store — the leading
-# underscore makes staged versions invisible to any legacy root scan —
-# and flips the manifest in one rename. Readers resolve the live
+# Every write is a rewrite: the first write of a store is a rewrite of
+# an empty one. Each stages a complete ``_data-v<txn+1>`` (plus
+# ``_cents-v`` for an IVF write or rebalance) INSIDE the store and
+# flips the manifest in one rename. Readers resolve the live
 # version from the manifest with ZERO directory listings and never see
 # a torn state: a crash before the rename leaves the old snapshot
 # fully live (staging is an invisible orphan), a crash after it leaves
 # the new snapshot fully live (superseded dirs are invisible garbage).
 # recover_store / _sweep_store classify every directory purely from
-# manifest-vs-version-id arithmetic — no `.preswap` aside trees, no
-# `_MOVED` marker archaeology, no multi-step teardown ordering proofs.
+# manifest-vs-version-id arithmetic — no aside trees, no marker
+# archaeology, no multi-step teardown ordering proofs.
 #
 # Writer contract: ONE writer at a time (same as the corpus loop and
 # every LSM store without a lock service). The contract is ENFORCED
@@ -248,25 +238,20 @@ def _read_store_manifest(path: str) -> "dict | None":
         )
 
 
-def _init_store_manifest(path: str) -> dict:
-    """The current view as a manifest: the committed one, or the legacy
-    in-place layout derived WITHOUT moving anything (migration is a
-    pure bookkeeping step — the first rewrite commits it)."""
-    import os
-
+def _live_manifest(path: str) -> dict:
+    """The committed manifest, or a clear error: a directory without one
+    holds no committed store (at most the staging of a first write that
+    crashed before its commit, which :func:`recover_store` discards)."""
     man = _read_store_manifest(path)
-    if man is not None:
-        return dict(man)
-    base = path.rstrip("/")
-    return {
-        "txn": 0,
-        "data": ".",
-        "tombs": ".tombstones" if os.path.isdir(_tomb_path(base)) else None,
-        "cents": ".centroids" if os.path.isdir(base + ".centroids") else None,
-    }
+    if man is None:
+        raise FileNotFoundError(
+            f"no committed store at {path!r}: it has no _MANIFEST.json"
+        )
+    return man
 
 
 _UNREAD = object()
+_KEEP = object()
 
 
 class ConcurrentStoreWriteError(RuntimeError):
@@ -366,64 +351,50 @@ def _commit_store_manifest(path: str, man: dict, expect_txn=_UNREAD) -> None:
 
 
 def _data_dir(path: str, man=_UNREAD) -> str:
-    """The live data directory — the store root for the legacy layout,
-    the manifest's versioned directory otherwise. Pass ``man`` when the
+    """The live data directory the manifest names. Pass ``man`` when the
     caller already read the manifest (a reader resolving data AND
     tombstones must use ONE read, or a commit landing between two reads
     hands it a torn pair)."""
     import os
 
     if man is _UNREAD:
-        man = _read_store_manifest(path)
-    base = path.rstrip("/")
-    if man is None or man["data"] == ".":
-        return base
-    return os.path.join(base, man["data"])
+        man = _live_manifest(path)
+    return os.path.join(path.rstrip("/"), man["data"])
 
 
 def _tombs_dir(path: str, man=_UNREAD) -> "str | None":
     """The live tombstone directory, or None when the manifest records
-    no tombstones. Legacy stores (no manifest) use the sibling. See
-    :func:`_data_dir` on passing ``man``."""
+    no tombstones. See :func:`_data_dir` on passing ``man``."""
     import os
 
     if man is _UNREAD:
-        man = _read_store_manifest(path)
-    base = path.rstrip("/")
-    if man is None:
-        return _tomb_path(base)
+        man = _live_manifest(path)
     t = man.get("tombs")
-    if t is None:
-        return None
-    if t == ".tombstones":
-        return _tomb_path(base)
-    return os.path.join(base, t)
+    return None if t is None else os.path.join(path.rstrip("/"), t)
 
 
 def _retained_dirs(man: dict) -> set:
     """Versioned directory names held by the manifest's ``retain`` list
     (superseded snapshots kept for in-flight readers — r14 ADVICE): the
     sweep must not touch them."""
-    out = set()
-    for snap in man.get("retain") or []:
-        for key in ("data", "tombs", "cents"):
-            d = snap.get(key)
-            if d and _VERSIONED.match(d):
-                out.add(d)
-    return out
+    return {
+        snap[key]
+        for snap in man.get("retain") or []
+        for key in ("data", "tombs", "cents")
+        if snap.get(key)
+    }
 
 
 def _sweep_store(path: str) -> tuple:
     """Garbage-collect everything the manifest does not reference:
     staged-but-uncommitted versions (id > txn — a rewrite crashed
-    before its commit), superseded versions and legacy root data /
-    sibling sidecars (a rewrite crashed after its commit, or simply
-    has not been swept), and a torn ``_MANIFEST.json.tmp``. Versions in
-    the manifest's ``retain`` list are NOT garbage — they are kept for
-    in-flight readers until :func:`vacuum_store` or a later rewrite
-    ages them out. Purely manifest-driven and idempotent. Returns
-    (uncommitted_dropped, garbage_dropped) booleans. No-op on a
-    manifest-less store."""
+    before its commit), superseded versions (a rewrite crashed after
+    its commit, or simply has not been swept), and a torn
+    ``_MANIFEST.json.tmp``. Versions in the manifest's ``retain`` list
+    are NOT garbage — they are kept for in-flight readers until
+    :func:`vacuum_store` or a later rewrite ages them out. Purely
+    manifest-driven and idempotent. Returns (uncommitted_dropped,
+    garbage_dropped) booleans."""
     import os
     import shutil
 
@@ -434,38 +405,20 @@ def _sweep_store(path: str) -> tuple:
     if os.path.isfile(tmp_man):
         os.remove(tmp_man)
         uncommitted = True
-    if man is None:
-        # legacy store: versioned dirs can only be pre-commit staging
-        for d in list(os.listdir(base)) if os.path.isdir(base) else []:
-            if _VERSIONED.match(d):
-                shutil.rmtree(os.path.join(base, d))
-                uncommitted = True
-        return uncommitted, garbage
-    keep = {man["data"], man.get("tombs"), man.get("cents")}
-    keep |= _retained_dirs(man)
-    for d in os.listdir(base):
+    # no manifest: a first write crashed before its commit, so every
+    # version directory is its staging
+    txn = -1 if man is None else int(man["txn"])
+    keep = set() if man is None else (
+        {man["data"], man.get("tombs"), man.get("cents")} | _retained_dirs(man)
+    )
+    for d in os.listdir(base) if os.path.isdir(base) else []:
         m = _VERSIONED.match(d)
         if m and d not in keep:
             shutil.rmtree(os.path.join(base, d))
-            if int(m.group(2)) > int(man["txn"]):
+            if int(m.group(2)) > txn:
                 uncommitted = True
             else:
                 garbage = True
-    if man["data"] != ".":
-        for d in os.listdir(base):
-            if d.startswith(("shard=", "cell=")):
-                shutil.rmtree(os.path.join(base, d))
-                garbage = True
-    if man.get("tombs") != ".tombstones" and os.path.isdir(_tomb_path(base)):
-        shutil.rmtree(_tomb_path(base))
-        garbage = True
-    if (
-        man.get("cents") is not None
-        and man["cents"] != ".centroids"
-        and os.path.isdir(base + ".centroids")
-    ):
-        shutil.rmtree(base + ".centroids")
-        garbage = True
     return uncommitted, garbage
 
 
@@ -506,9 +459,7 @@ def _store_rows(path: str, part: str = "shard") -> int:
 
 def _max_seq(path: str, part: str = "shard") -> int:
     """Largest ``seq`` in the store, read from parquet FOOTER column
-    statistics (no data pages touched, no Spark job). A store written
-    before the lifecycle layer has no seq column — it reads as epoch 0,
-    which is exactly how :func:`load_vector_store` treats it."""
+    statistics (no data pages touched, no Spark job)."""
     import glob
     import os
 
@@ -517,11 +468,10 @@ def _max_seq(path: str, part: str = "shard") -> int:
     best = 0
     for f in glob.glob(os.path.join(_data_dir(path), f"{part}=*", "*.parquet")):
         md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        if "seq" not in idx:
-            continue
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        col = names.index("seq")
         for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx["seq"]).statistics
+            st = md.row_group(rg).column(col).statistics
             if st is not None and st.max is not None:
                 best = max(best, int(st.max))
     return best
@@ -532,26 +482,25 @@ def _with_seq(df: DataFrame, seq: int) -> DataFrame:
 
 
 def recover_store(path: str) -> str:
-    """Recover a store whose rewrite (re-shard / compact / IVF
+    """Recover a store whose write or rewrite (re-shard / compact / IVF
     rebalance) crashed at ANY point, purely from manifest state — the
     r14 protocol has exactly two crash classes and both are decided by
     version-id arithmetic against the committed ``txn``:
 
     - ``"rolled_back"`` — staged-but-uncommitted version directories
-      (id > txn, or any versioned dir on a manifest-less legacy store,
-      or a torn ``_MANIFEST.json.tmp``) were discarded: the rewrite
-      never committed, the live snapshot was never touched, and the
-      store is byte-identical to its pre-rewrite state. Re-run the
-      rewrite to retry.
+      (id > txn, or every versioned dir of a first write that never
+      committed a manifest, or a torn ``_MANIFEST.json.tmp``) were
+      discarded: the rewrite never committed, the live snapshot was
+      never touched, and the store is byte-identical to its
+      pre-rewrite state (no store at all, for a first write). Re-run
+      the write to retry.
     - ``"rolled_forward"`` — the manifest committed but superseded
       directories were still present (the crash hit between the commit
       rename and the sweep): they are swept and the store equals a
       completed rewrite. Nothing is replayed — the commit ALREADY
       flipped data, tombstones, and quantizer together, which is the
       entire point of the single-manifest protocol.
-    - ``"clean"`` — nothing to do (a dangling legacy
-      ``.centroids.next`` from the pre-r14 protocol is discarded as
-      pre-commit staging, preserving the old semantics).
+    - ``"clean"`` — nothing to do.
 
     A torn FINAL ``_MANIFEST.json`` (possible only on filesystems whose
     rename is not atomic — e.g. some network mounts losing power mid-
@@ -559,22 +508,11 @@ def recover_store(path: str) -> str:
     ``_MANIFEST.json.bak`` (r14 ADVICE, low) and classified
     ``"rolled_back"``: the interrupted commit never happened. With no
     readable ``.bak`` the original refusal stands.
-
-    A store interrupted under the PRE-r14 rename-swap protocol (a
-    ``.preswap`` aside tree exists) is refused loudly rather than
-    guessed at — that protocol's states cannot arise from this code.
     """
     import json
     import os
-    import shutil
 
     base = path.rstrip("/")
-    if os.path.isdir(base + ".preswap"):
-        raise ValueError(
-            f"{base + '.preswap'!r} exists: this store was interrupted "
-            "under the pre-r14 rename-swap protocol, which this version "
-            "no longer replays — restore it manually"
-        )
     restored = False
     try:
         _read_store_manifest(base)
@@ -598,13 +536,6 @@ def recover_store(path: str) -> str:
         _fsync_path(base)
         restored = True
     uncommitted, garbage = _sweep_store(base)
-    # legacy pre-r14 staging: a quantizer staged beside a store with no
-    # in-flight rewrite would pair new centroids with the old layout —
-    # discard, never promote
-    for sfx in (".centroids.next", ".reshard.tmp", ".compact.tmp",
-                ".rebalance.tmp"):
-        if os.path.isdir(base + sfx):
-            shutil.rmtree(base + sfx)
     if restored or uncommitted:
         return "rolled_back"
     if garbage:
@@ -612,17 +543,20 @@ def recover_store(path: str) -> str:
     return "clean"
 
 
-def _rewrite_store(path: str, stage, *, part: str, clear_tombs: bool,
-                   new_cents=None,
+def _rewrite_store(path: str, stage, *, clear_tombs: bool,
+                   new_cents=_KEEP,
                    retain_versions: "int | None" = None) -> None:
-    """Shared commit path for every store rewrite: derive the next txn,
-    let ``stage(data_dir)`` write the complete new data version (and
-    write the staged quantizer when ``new_cents`` is given), fsync the
-    staged contents (power-loss durability — the manifest must never be
-    more durable than the version it references), then flip the manifest
-    in ONE atomic FENCED rename and sweep. A crash before the rename
-    leaves the old snapshot fully live; after it, fully the new one —
-    there is no intermediate state for readers at any point.
+    """Shared commit path for every store write and rewrite: derive the
+    next txn (1 for a store without a manifest — a first write is a
+    rewrite of an empty store), let ``stage(data_dir)`` write the
+    complete new data version (and write the staged quantizer when
+    ``new_cents`` is a centroid list; None records no quantizer, the
+    default keeps the live one), fsync the staged contents (power-loss
+    durability — the manifest must never be more durable than the
+    version it references), then flip the manifest in ONE atomic FENCED
+    rename and sweep. A crash before the rename leaves the old snapshot
+    fully live; after it, fully the new one — there is no intermediate
+    state for readers at any point.
 
     ``retain_versions``: how many superseded snapshots to keep on disk
     for in-flight readers (r14 ADVICE, medium — a lazy Spark plan
@@ -630,9 +564,7 @@ def _rewrite_store(path: str, stage, *, part: str, clear_tombs: bool,
     execution, so the default immediate sweep requires scans to finish
     before a rewrite). With N>0 the previous snapshot's versioned dirs
     enter the manifest's ``retain`` list (oldest aged out beyond N and
-    swept); legacy root-layout data cannot be retained — the first
-    migrating rewrite always reclaims the root (documented one-time
-    caveat). An explicit int also persists as the store's
+    swept). An explicit int also persists as the store's
     ``retain_policy`` in the manifest; the default ``None`` means "keep
     the current policy", so a maintenance writer that doesn't pass the
     flag cannot silently sweep snapshots a previous
@@ -641,52 +573,48 @@ def _rewrite_store(path: str, stage, *, part: str, clear_tombs: bool,
     a per-writer flag)."""
     import os
 
-    if os.path.isdir(path.rstrip("/") + ".preswap"):
-        # a pre-r14 rename-swap crash left part of the old layout aside:
-        # the root is INCOMPLETE, and committing a manifest over it would
-        # make the loss permanent — same refusal as recover_store
-        raise ValueError(
-            f"{path.rstrip('/') + '.preswap'!r} exists: this store was "
-            "interrupted under the pre-r14 rename-swap protocol; restore "
-            "it manually before rewriting"
-        )
-    man = _init_store_manifest(path)
-    expect_txn = (
-        None if _read_store_manifest(path) is None else int(man["txn"])
-    )
+    committed = _read_store_manifest(path)
+    man = dict(committed or {"txn": 0, "tombs": None, "cents": None})
+    expect_txn = None if committed is None else int(man["txn"])
     txn = int(man["txn"]) + 1
     base = path.rstrip("/")
     data_name = f"_data-v{txn:05d}"
     stage(os.path.join(base, data_name))
     _fsync_tree(os.path.join(base, data_name))
-    prev_snap = {
-        "txn": int(man["txn"]),
-        "data": man["data"],
-        "tombs": man.get("tombs"),
-        "cents": man.get("cents"),
-    }
     if retain_versions is None:
         retain_versions = int(man.get("retain_policy") or 0)
     else:
         man["retain_policy"] = int(retain_versions)
     retain = list(man.get("retain") or [])
-    if retain_versions > 0 and any(
-        d and _VERSIONED.match(d)
-        for d in (prev_snap["data"], prev_snap["tombs"], prev_snap["cents"])
-    ):
-        retain.insert(0, prev_snap)
+    if retain_versions > 0 and committed is not None:
+        retain.insert(0, {key: man.get(key)
+                          for key in ("txn", "data", "tombs", "cents")})
     man["retain"] = retain[:retain_versions]
     man["txn"] = txn
     man["data"] = data_name
     if clear_tombs:
         man["tombs"] = None
-    if new_cents is not None:
+    if new_cents is None:
+        man["cents"] = None
+    elif new_cents is not _KEEP:
         cents_name = f"_cents-v{txn:05d}"
         _write_centroids_dir(os.path.join(base, cents_name), new_cents)
         _fsync_tree(os.path.join(base, cents_name))
         man["cents"] = cents_name
     _commit_store_manifest(base, man, expect_txn=expect_txn)
     _sweep_store(base)
+
+
+def _write_store(path: str, df: DataFrame, part: str, cents=None) -> None:
+    """Write ``df`` as the whole store at ``path``, partitioned on
+    ``part``, with IVF quantizer ``cents`` (None for the hash-sharded
+    layouts): one :func:`_rewrite_store` commit, so a write over an
+    existing store replaces its data, tombstones and quantizer
+    together."""
+    _rewrite_store(
+        path, lambda d: write_partitioned(df, d, part),
+        clear_tombs=True, new_cents=cents,
+    )
 
 
 def vacuum_store(path: str, retain_versions: int = 0) -> bool:
@@ -697,7 +625,7 @@ def vacuum_store(path: str, retain_versions: int = 0) -> bool:
     ``retain_versions>0`` — Delta's VACUUM, without the time-based
     window (snapshots are aged by count; callers wanting wall-clock
     retention schedule the vacuum). Returns True when anything was
-    reclaimed. No-op (False) on a manifest-less legacy store.
+    reclaimed.
 
     The vacuum is itself a WRITER: it sweeps first (so a crashed
     rewrite's staged orphan keeps its txn-accurate classification,
@@ -706,11 +634,8 @@ def vacuum_store(path: str, retain_versions: int = 0) -> bool:
     instead of publishing a manifest whose staged data the vacuum's
     sweep just removed (self-review r15: a txn-preserving vacuum was
     invisible to the single-writer fence)."""
-    man = _read_store_manifest(path)
-    if man is None:
-        return False
     _sweep_store(path)
-    man = _read_store_manifest(path)
+    man = _live_manifest(path)
     retain = list(man.get("retain") or [])
     if len(retain) > retain_versions:
         begun = int(man["txn"])
@@ -758,19 +683,9 @@ def append_vector_store(
     enc = _with_seq(_int8_encode(new_vectors, id_col, vec_col, dim, bits), seq)
     if total > rows_per_shard * shards:
         new_shards = max(shards + 1, -(-total // rows_per_shard))
-        # mergeSchema (r11 ADVICE, medium): a store mixing pre-lifecycle
-        # (seq-less) and appended (seq-ful) files can otherwise infer a
-        # seq-less schema from one footer, after which resetting every
-        # row to epoch 0 would let standing tombstones (tseq >= 1)
-        # permanently shadow live upserted rows through the rewrite
-        base = spark.read.option("mergeSchema", "true").parquet(
-            _data_dir(path)
-        ).drop("shard")
-        if "seq" not in base.columns:  # pre-lifecycle store: epoch 0
-            base = _with_seq(base, 0)
-        base = base.withColumn(
-            "seq", F.coalesce(F.col("seq"), F.lit(0).cast("long"))
-        )
+        # every row keeps its seq, so upserted rows stay newer than the
+        # tombstones that shadow their old versions
+        base = spark.read.parquet(_data_dir(path)).drop("shard")
         merged = base.unionByName(enc).withColumn(
             "shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(new_shards))
         )
@@ -778,15 +693,12 @@ def append_vector_store(
         # survive the commit (clear_tombs=False)
         _rewrite_store(
             path, lambda d: write_partitioned(merged, d, "shard"),
-            part="shard", clear_tombs=False,
+            clear_tombs=False,
         )
         return new_shards
     out = enc.withColumn(
         "shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards))
     )
-    # appending to a pre-lifecycle store would mix seq-less and seq-ful
-    # files; promote the schema by rewriting nothing — readers coalesce a
-    # missing seq to 0 via mergeSchema at load
     out.write.mode("append").partitionBy("shard").parquet(_data_dir(path))
     return shards
 
@@ -795,9 +707,11 @@ def delete_from_vector_store(
     spark: SparkSession, path: str, ids, id_col: str = "vec_id"
 ) -> None:
     """Tombstone the given ids (list or single-column DataFrame): an
-    id-sized append to ``<path>.tombstones`` — the store's data files
-    are immutable. Each tombstone records the store's CURRENT max seq:
-    it shadows every row of that id at or below that epoch, while a
+    id-sized append to the live tombstone set the manifest names — the
+    store's data files are immutable. A store without one (after a
+    write, compaction or rebalance) gets a fresh ``_tombs-v<N>`` set in
+    one manifest commit. Each tombstone records the store's CURRENT max
+    seq: it shadows every row of that id at or below that epoch, while a
     LATER append of the same id (higher seq) outlives it — LSM
     semantics, so no tombstone ever needs editing. Readers
     (:func:`load_vector_store`) apply tombstones with a broadcast join
@@ -834,8 +748,8 @@ def delete_from_vector_store(
     })
     tpath = _tombs_dir(path)
     if tpath is None:
-        # manifest store whose tombstone set was cleared (compaction /
-        # rebalance): open a fresh versioned set and commit it — the
+        # no live tombstone set (a write, compaction or rebalance cleared
+        # it): open a fresh versioned set and commit it — the
         # manifest stays the single source of truth for readers. Crash
         # semantics: a crash before the commit leaves an orphan dir the
         # sweep discards (the delete simply never happened — retry);
@@ -846,7 +760,7 @@ def delete_from_vector_store(
         # bump would alias it into "superseded" and a later recover_store
         # would misreport rolled_forward for a rewrite that rolled back
         _sweep_store(path)
-        man = _init_store_manifest(path)
+        man = dict(_live_manifest(path))
         txn = int(man["txn"]) + 1
         name = f"_tombs-v{txn:05d}"
         tpath = os.path.join(path.rstrip("/"), name)
@@ -887,11 +801,11 @@ def write_ivf_store(
     """Materialize the IVF-flat store: raw vectors + their exact l2 norm,
     hive-partitioned by nearest-centroid cell (the deterministic
     md5-sampled quantizer — a trained k-means slots in unchanged); the
-    centroids persist driver-side at ``<path>.centroids`` so scoring
-    sessions never refit. Bit-parity contract: scoring from the store
-    equals ``similarity.ivf_topk`` on the same corpus (same centroids,
-    same probe and cosine expressions — float64 parquet roundtrips
-    exactly)."""
+    centroids persist as the store's ``_cents-v<N>`` version, committed
+    with the data, so scoring sessions never refit. Bit-parity contract:
+    scoring from the store equals ``similarity.ivf_topk`` on the same
+    corpus (same centroids, same probe and cosine expressions — float64
+    parquet roundtrips exactly)."""
     from parallel_pandas_spark.operators.similarity import (
         ivf_assign, ivf_centroids,
     )
@@ -906,14 +820,14 @@ def write_ivf_store(
         ),
         0,
     )
-    write_partitioned(c, path, "cell")
-    _write_centroids(path, cents)
+    _write_store(path, c, "cell", cents)
 
 
 def _write_centroids_dir(cpath: str, cents: list) -> None:
-    """Write the quantizer into an explicit directory — cleared first,
-    because read_ivf_centroids merges every file it finds and a stale
-    quantizer beside a new one would duplicate cids."""
+    """Write the quantizer into a staged ``_cents-v<N>`` directory —
+    cleared first, because read_ivf_centroids merges every file it
+    finds and a stale quantizer beside a new one would duplicate
+    cids."""
     import os
     import shutil
     import uuid
@@ -933,31 +847,23 @@ def _write_centroids_dir(cpath: str, cents: list) -> None:
     )
 
 
-def _write_centroids(path: str, cents: list, suffix: str = ".centroids") -> None:
-    """Legacy-layout quantizer sidecar at ``<path><suffix>`` — initial
-    writes use it; rewrites stage a versioned ``_cents-v<txn>`` through
-    :func:`_rewrite_store` instead."""
-    _write_centroids_dir(path.rstrip("/") + suffix, cents)
-
-
 def read_ivf_centroids(path: str) -> list:
     """The persisted coarse quantizer, as similarity.ivf_centroids
     returns it (float64 roundtrips exactly, so assignments and probe
     distances rebuilt from disk equal the fit-time ones bit-for-bit).
-    Resolved through the manifest when one exists — after a rebalance
-    the quantizer and the cell layout flip TOGETHER in its commit, so a
-    reader can never pair new centroids with old cells."""
+    Resolved through the manifest — after a rebalance the quantizer and
+    the cell layout flip TOGETHER in its commit, so a reader can never
+    pair new centroids with old cells. ``path`` is an IVF store or an
+    IVF-PQ store, whose quantizer is a version of its ``codes`` store."""
     import glob
     import os
 
-    man = _read_store_manifest(path)
-    base = path.rstrip("/")
-    if man is None or man.get("cents") in (None, ".centroids"):
-        cdir = base + ".centroids"
-    else:
-        cdir = os.path.join(base, man["cents"])
-
     import pyarrow.parquet as pq
+
+    base = path.rstrip("/")
+    if os.path.isdir(os.path.join(base, "_books")):
+        base = os.path.join(base, "codes")
+    cdir = os.path.join(base, _live_manifest(base)["cents"])
 
     files = sorted(glob.glob(os.path.join(cdir, "*.parquet")))
     rows = []
@@ -1086,7 +992,7 @@ def rebalance_ivf_store(
     )
     _rewrite_store(
         path, lambda d: write_partitioned(merged, d, "cell"),
-        part="cell", clear_tombs=True, new_cents=cents,
+        clear_tombs=True, new_cents=cents,
         retain_versions=retain_versions,
     )
     return ivf_skew_ratio(ivf_cell_rows(path))
@@ -1177,10 +1083,10 @@ def compact_vector_store(
     same shard count; cell-partitioned layouts (IVF, and the IVF-PQ
     store's ``<path>/codes``) keep each row's stored ``cell`` —
     centroids are NOT retrained (that is :func:`rebalance_ivf_store`'s
-    job), so the quantizer sidecars stay valid as-is. Returns the live
-    row count. Scoring before vs after is identical by construction
-    (pinned in tests): compaction changes bytes on disk, not the live
-    row multiset."""
+    job), so the committed quantizer version and the PQ codebooks stay
+    valid as-is. Returns the live row count. Scoring before vs after is
+    identical by construction (pinned in tests): compaction changes
+    bytes on disk, not the live row multiset."""
     part = _part_col(path)
     live = _with_seq(load_vector_store(spark, path, id_col), 0)
     if live.limit(1).count() == 0:
@@ -1202,7 +1108,7 @@ def compact_vector_store(
         write_partitioned(merged, d, part)
         staged_rows["n"] = _dir_rows(d, part)
 
-    _rewrite_store(path, _stage, part=part, clear_tombs=True,
+    _rewrite_store(path, _stage, clear_tombs=True,
                    retain_versions=retain_versions)
     return staged_rows["n"]
 
@@ -1229,22 +1135,14 @@ def load_vector_store(
     read after any lifecycle operation; :func:`quantized_topk_from_store`
     calls it automatically when given a path. The ``seq`` bookkeeping
     column is dropped from the result. Data and tombstone locations
-    resolve through the snapshot manifest when one exists (r14): a
-    reader can never observe a half-published rewrite — it sees the
-    version set of exactly one committed transaction."""
-    import os
-
-    man = _read_store_manifest(path)  # ONE read: data+tombs of one txn
+    resolve through the snapshot manifest (r14): a reader can never
+    observe a half-published rewrite — it sees the version set of
+    exactly one committed transaction. A path with no committed
+    manifest raises FileNotFoundError."""
+    man = _live_manifest(path)  # ONE read: data+tombs of one txn
     tpath = _tombs_dir(path, man)
-    has_tombs = tpath is not None and os.path.isdir(tpath)
-    # mergeSchema: an appended store can mix pre-lifecycle (seq-less)
-    # and current files; missing seq reads as NULL -> epoch 0
-    base = spark.read.option("mergeSchema", "true").parquet(
-        _data_dir(path, man))
-    if "seq" not in base.columns:
-        base = _with_seq(base, 0)
-    base = base.withColumn("seq", F.coalesce(F.col("seq"), F.lit(0).cast("long")))
-    if has_tombs:
+    base = spark.read.parquet(_data_dir(path, man))
+    if tpath is not None:
         tombs = spark.read.parquet(tpath).groupBy(id_col).agg(
             F.max("seq").alias("__tseq")
         )
@@ -1426,9 +1324,6 @@ def write_pq_store(
     codes at ``<path>/_books`` so scoring sessions never refit.
     Undecodable vectors are DROPPED (the fused scorer's documented ANN
     store policy)."""
-    import numpy as np
-    import pandas as pd
-
     if ks > 256:
         # check the cheap argument bound BEFORE the codebook fit — the
         # fit runs a corpus sample collect plus optional Lloyd passes
@@ -1439,7 +1334,7 @@ def write_pq_store(
     store = _with_seq(
         _pq_encode_df(corpus, books, id_col, vec_col, dim), 0
     ).withColumn("shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards)))
-    write_partitioned(store, f"{path}/codes", "shard")
+    _write_store(f"{path}/codes", store, "shard")
     _write_books(corpus.sparkSession, path, books)
 
 
@@ -1600,12 +1495,13 @@ def pq_topk_from_store(
 # The standard billion-vector layout (Jégou et al., "Product Quantization
 # for Nearest Neighbor Search", IEEE TPAMI 2011 — IVFADC): PQ gives the
 # compact codes (m bytes per vector), IVF gives the probe-limited scan.
-# Composed here as PQ codes hive-partitioned by IVF cell with both
-# quantizers as sidecars: a query reads nprobe cells' directories of
+# Composed here as PQ codes hive-partitioned by IVF cell: the coarse
+# quantizer is a version of the ``<path>/codes`` store, the codebooks
+# sit at ``<path>/_books``. A query reads nprobe cells' directories of
 # 8-byte codes — partition pruning AND 32x byte reduction multiply.
 
 def _write_rotation(path: str, R) -> None:
-    """Persist the OPQ rotation sidecar at ``<path>.rotation`` (one row
+    """Persist the OPQ rotation at ``<path>/_rotation`` (one row
     per output component: its literal column of R). Static once
     written: compaction/rebalance rewrite data files, never the
     rotation — codes stay valid because they encode ROTATED vectors."""
@@ -1616,7 +1512,7 @@ def _write_rotation(path: str, R) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rpath = path.rstrip("/") + ".rotation"
+    rpath = os.path.join(path, "_rotation")
     shutil.rmtree(rpath, ignore_errors=True)
     os.makedirs(rpath)
     cols = [[float(R[i][j]) for i in range(len(R))] for j in range(len(R))]
@@ -1637,8 +1533,7 @@ def read_rotation(path: str):
 
     import pyarrow.parquet as pq
 
-    files = sorted(glob.glob(os.path.join(path.rstrip("/") + ".rotation",
-                                          "*.parquet")))
+    files = sorted(glob.glob(os.path.join(path, "_rotation", "*.parquet")))
     if not files:
         return None
     cols: dict = {}
@@ -1673,8 +1568,9 @@ def write_ivfpq_store(
     (``similarity.ivf_centroids``) and the PQ codebooks
     (``similarity.pq_codebooks``) on the corpus, encode in ONE Arrow
     pass carrying each row's cell, and hive-partition the m-byte codes
-    by cell; books persist at ``<path>/_books`` and the coarse quantizer
-    at ``<path>.centroids``. Bit-parity contract (pinned in tests):
+    by cell into the store ``<path>/codes``, whose committed ``cents``
+    version is the coarse quantizer; books persist at ``<path>/_books``.
+    Bit-parity contract (pinned in tests):
     scoring from the store equals ``similarity.pq_topk`` with the SAME
     books restricted to each query's probed cells.
 
@@ -1682,7 +1578,7 @@ def write_ivfpq_store(
     ``similarity.opq_train`` or a seeded orthogonal stand-in): the
     corpus is rotated BEFORE fitting/encoding with the bit-replayable
     JVM fold (``similarity.rotate_vectors``) and the matrix persists at
-    ``<path>.rotation`` so scoring sessions rotate queries identically
+    ``<path>/_rotation`` so scoring sessions rotate queries identically
     — rotation is a pure pre-transform, every downstream stage is
     unchanged."""
     from parallel_pandas_spark.operators.similarity import ivf_centroids
@@ -1694,11 +1590,11 @@ def write_ivfpq_store(
         _write_rotation(path, rotation)
     else:
         # an unrotated rebuild over a previously OPQ-rotated path must
-        # drop the stale sidecar — readers apply it unconditionally, so
+        # drop the stale rotation — readers apply it unconditionally, so
         # leaving it would rotate queries against unrotated codes
         import shutil
 
-        shutil.rmtree(path.rstrip("/") + ".rotation", ignore_errors=True)
+        shutil.rmtree(f"{path}/_rotation", ignore_errors=True)
     cents = ivf_centroids(corpus, id_col, vec_col, num_centroids)
     books = similarity.pq_codebooks(
         corpus, id_col, vec_col, m=m, ks=ks, dim=dim, iters=iters
@@ -1706,9 +1602,8 @@ def write_ivfpq_store(
     store = _with_seq(
         _pq_encode_df(corpus, books, id_col, vec_col, dim, cents=cents), 0
     )
-    write_partitioned(store, f"{path}/codes", "cell")
+    _write_store(f"{path}/codes", store, "cell", cents)
     _write_books(corpus.sparkSession, path, books)
-    _write_centroids(path, cents)
 
 
 def append_ivfpq_store(
@@ -1719,8 +1614,9 @@ def append_ivfpq_store(
 ) -> None:
     """Cell-aligned PQ append with BOTH persisted quantizers at the next
     seq epoch — delete-then-append upserts exactly as in the other
-    stores (tombstones live at ``<path>/codes.tombstones`` and
-    delete_from_vector_store detects the cell partition layout)."""
+    stores (delete through ``delete_from_vector_store(spark,
+    f"{path}/codes", ...)``, which detects the cell partition
+    layout)."""
     spark = new_vectors.sparkSession
     R = read_rotation(path)
     if R is not None:
@@ -1765,7 +1661,7 @@ def ivfpq_topk_from_store(
 
     books = read_pq_books(spark, store_path)
     cents = read_ivf_centroids(store_path)
-    # OPQ sidecar: queries and the re-rank vectors enter the SAME
+    # OPQ rotation: queries and the re-rank vectors enter the SAME
     # rotated space the codes were fit in (rotation preserves cosine;
     # the re-rank uses rotated values so the SQL replay stays
     # bit-twinned). The CORPUS side rotates AFTER the candidate join
@@ -1843,9 +1739,9 @@ def ivfpq_topk_from_store(
         probe_map[qid] = np.array(sorted(cid for _, cid in ds[:nprobe]))
     probes = sorted({int(c) for v in probe_map.values() for c in v})
     # ``store_df`` (r17, r16 verdict #5): a resident session holds the
-    # loaded store DataFrame (its file index and merged schema) across
+    # loaded store DataFrame (its file index and schema) across
     # scoring calls instead of re-running load_vector_store's
-    # mergeSchema footer job (~0.15 s of fixed overhead per call).
+    # footer job (~0.15 s of fixed overhead per call).
     # Passing a DataFrame makes lifecycle visibility the caller's
     # responsibility, exactly like quantized_topk_from_store's
     # DataFrame form; the probe-set partition predicate is still
@@ -2173,7 +2069,7 @@ def tune_probes(
 
     # live rows per cell — ONE aggregate over the tombstone-shadowed
     # store; drives the probed-fraction report for every candidate.
-    # The loaded store DataFrame (manifest resolution + mergeSchema
+    # The loaded store DataFrame (manifest resolution + schema
     # footer job + file index) is held in ``live`` and reused by every
     # consumer below — the per-nprobe loop previously re-ran
     # load_vector_store once per candidate, a fixed-cost job per

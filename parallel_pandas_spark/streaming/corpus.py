@@ -41,11 +41,11 @@ Snapshot versioning here rewrites the full artifact per batch for
 byte-level simplicity; visibility is SNAPSHOT-ISOLATED by a single-file
 JSON manifest (r13): the atomic ``_MANIFEST.json`` rename is the commit
 point for batch writes AND compactions, readers resolve versions from
-it without directory listings or per-version ``_SUCCESS`` scans, and a
-crash anywhere before the rename leaves orphan directories no reader
-sees. A production deployment swaps this single-writer manifest for a
-format with native snapshot isolation (Iceberg/Delta) without touching
-the maintenance logic. Loop state is BOUNDED by
+it without directory listings, and a crash anywhere before the rename
+leaves orphan directories no reader sees (a work dir without a manifest
+is empty). A production deployment swaps this single-writer manifest
+for a format with native snapshot isolation (Iceberg/Delta) without
+touching the maintenance logic. Loop state is BOUNDED by
 :func:`compact_corpus_artifacts` (changelog compaction): outstanding
 rollup deltas fold into an exact state snapshot and superseded artifact
 versions are vacuumed, so neither the read-out's merge set nor the
@@ -111,40 +111,19 @@ def _version_id(d: str) -> int:
     return int(os.path.basename(d)[1:])
 
 
-def _versions(art_dir: str) -> list:
-    """COMMITTED version directories, ascending by batch id — the
-    LEGACY (manifest-less) resolution path. Committed means Spark's
-    ``_SUCCESS`` marker is present: a write killed partway leaves a
-    partial ``b<j>`` without it, and treating that as a real version
-    would serve truncated data (for compaction snapshots it would be
-    permanent — the fold would never re-run and the folded deltas would
-    be vacuumed; see compact_corpus_artifacts)."""
-    out = []
-    for d in glob.glob(os.path.join(art_dir, "b*")):
-        try:
-            _version_id(d)
-        except ValueError:
-            continue
-        if os.path.isfile(os.path.join(d, "_SUCCESS")):
-            out.append(d)
-    return sorted(out, key=_version_id)
-
-
 # --- snapshot-isolation manifest (r13, r12 verdict #7) ------------------
 # One JSON file at <work_dir>/_MANIFEST.json is the COMMIT POINT for the
 # whole loop: {"txn", "docindex": [ids], "corpus": [ids], "deltas":
 # [ids], "state": id|null}. It is written via temp-file + os.rename
 # (atomic on one filesystem), so readers see either the old or the new
 # snapshot — never a torn one — and resolve versions WITHOUT directory
-# listings or per-version _SUCCESS scans. Artifact directories become
-# visible only when a manifest transaction references them: a crash
-# anywhere between the Spark writes and the manifest rename leaves
-# orphan directories that no reader resolves and the next vacuum
-# removes. This is the hand-rolled step toward the Iceberg/Delta seam
-# SCALE.md names — the maintenance logic reads through the same two
-# helpers either way. A manifest-less work_dir (pre-r13 layout, or
-# hand-built test fixtures) falls back to the legacy directory scan and
-# is migrated to a manifest by its next write.
+# listings. Artifact directories become visible only when a manifest
+# transaction references them: a crash anywhere between the Spark
+# writes and the manifest rename leaves orphan directories that no
+# reader resolves and the next vacuum removes. This is the hand-rolled
+# step toward the Iceberg/Delta seam SCALE.md names — the maintenance
+# logic reads through the same two helpers either way. A work_dir
+# without a manifest has committed nothing: every artifact is empty.
 
 
 def _manifest_path(work_dir: str) -> str:
@@ -162,22 +141,10 @@ def _read_manifest(work_dir: str) -> "dict | None":
 
 
 def _init_manifest(work_dir: str) -> dict:
-    """The current view as a manifest: read the committed one, or derive
-    it from the legacy directory scan (migration; empty for a fresh
-    work_dir)."""
-    man = _read_manifest(work_dir)
-    if man is not None:
-        return man
-    scan = {
-        art: [_version_id(d) for d in _versions(os.path.join(work_dir, art))]
-        for art in ("docindex", "corpus", "delta", "state")
-    }
-    return {
-        "txn": 0,
-        "docindex": scan["docindex"],
-        "corpus": scan["corpus"],
-        "deltas": scan["delta"],
-        "state": scan["state"][-1] if scan["state"] else None,
+    """The committed manifest, or the empty one of a work_dir that has
+    committed nothing yet."""
+    return _read_manifest(work_dir) or {
+        "txn": 0, "docindex": [], "corpus": [], "deltas": [], "state": None,
     }
 
 
@@ -213,16 +180,12 @@ def _commit_manifest(work_dir: str, man: dict, expect_txn=None) -> None:
 
 
 def _live_ids(work_dir: str, art: str) -> list:
-    """Committed version ids of an artifact, ascending — from the
-    manifest when one exists (no directory listing, no _SUCCESS scan),
-    else the legacy scan."""
-    man = _read_manifest(work_dir)
-    if man is not None:
-        if art == "state":
-            return [man["state"]] if man.get("state") is not None else []
-        key = "deltas" if art == "delta" else art
-        return sorted(man.get(key, []))
-    return [_version_id(d) for d in _versions(os.path.join(work_dir, art))]
+    """Committed version ids of an artifact, ascending, from the
+    manifest (no directory listing)."""
+    man = _init_manifest(work_dir)
+    if art == "state":
+        return [] if man["state"] is None else [man["state"]]
+    return sorted(man["deltas" if art == "delta" else art])
 
 
 def _art_dir(work_dir: str, art: str, vid: int) -> str:
@@ -312,9 +275,7 @@ def run_corpus_refresh_stream(
         # artifact writes (r16 verdict #6): the fused docindex+corpus
         # frame is written into a staging dir whose partition
         # directories are renamed into the standard layout — readers see
-        # byte-identical per-artifact directories (plus the _SUCCESS
-        # marker the legacy manifest-less resolution expects, created
-        # after the completed staging write). delta has its own schema
+        # byte-identical per-artifact directories. delta has its own schema
         # and overlaps on a second driver thread (guide §2.6). The
         # commit point is still ONLY the manifest rename below: a crash
         # between renames leaves orphan directories no reader resolves.
@@ -343,9 +304,6 @@ def run_corpus_refresh_stream(
             if os.path.isdir(src):
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.rename(src, dst)
-                # staging write completed above => data is complete; the
-                # marker keeps the legacy commit invariant
-                open(os.path.join(dst, "_SUCCESS"), "w").close()
             else:
                 # dynamic partitioning emits no directory for an EMPTY
                 # artifact (a feed that deletes every doc) — write it
@@ -444,10 +402,10 @@ def compact_corpus_artifacts(
 
     Crash/replay safety (same single-writer assumption as the per-batch
     artifact writes — run it between stream runs, not concurrently):
-    deltas are deleted only AFTER the snapshot that folds them is fully
-    committed (Spark's ``_SUCCESS`` marker); a crash during the
-    snapshot write leaves a marker-less partial that version resolution
-    ignores and the next compaction purges and re-folds — the fold
+    deltas are deleted only AFTER the manifest commits the snapshot
+    that folds them; a crash during the snapshot write leaves a partial
+    no manifest references, which version resolution ignores and the
+    next compaction purges and re-folds — the fold
     source is never lost before its result is durable. Vacuum deletes
     only versions older than the ``keep_last`` newest, and ``keep_last
     >= 2`` keeps the predecessor a restart replay of batch H reads
@@ -469,26 +427,19 @@ def compact_corpus_artifacts(
     # inputs at — the commit below refuses if a concurrent writer moved it
     begun_txn = int(_init_manifest(work_dir)["txn"])
     # purge snapshots a crashed fold left UNCOMMITTED — unreferenced by
-    # the manifest (legacy: no _SUCCESS) — so the fold below re-runs
-    # from the still-present deltas
+    # the manifest — so the fold below re-runs from the still-present
+    # deltas
     committed_state = set(_live_ids(work_dir, "state"))
     for d in glob.glob(os.path.join(st_dir, "b*")):
         try:
             vid = _version_id(d)
         except ValueError:
             continue
-        if vid not in committed_state or not os.path.isfile(
-            os.path.join(d, "_SUCCESS")
-        ):
+        if vid not in committed_state:
             shutil.rmtree(d)
     de_ids = _live_ids(work_dir, "delta")
-    # anchor the fold to the newest DELTA, not the newest corpus: under
-    # the manifest the two commit atomically, but a LEGACY (manifest-
-    # less) layout's mid-batch crash can leave the corpus one version
-    # ahead — folding "up to" that corpus would stamp a snapshot id
-    # whose delta was never merged, and the replayed delta would then
-    # be ignored forever (silent loss). The corpus AT the delta horizon
-    # always exists (written before it).
+    # fold up to the newest committed delta; its batch committed the
+    # corpus version of the same id
     horizon = de_ids[-1] if de_ids else -1
     co = (
         spark.read.schema(DOC_INDEX_SCHEMA).parquet(

@@ -39,6 +39,19 @@ def jvm_stderr(capfd, request):
     return read
 
 
+def fresh_store_from_quantizer(src: str, dst: str) -> None:
+    """Commit an empty store at ``dst`` whose IVF quantizer is the one
+    committed in ``src`` (an IVF store, or an IVF-PQ store's root). A
+    test fills it through the append path to get a reference store that
+    shares ``src``'s centroids."""
+    from parallel_pandas_spark.operators import vecstore
+
+    vecstore._rewrite_store(
+        dst, os.makedirs, clear_tombs=True,
+        new_cents=vecstore.read_ivf_centroids(src),
+    )
+
+
 @pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL

@@ -3,8 +3,7 @@
 - high: delete issued AFTER an append on an IVF (cell-partitioned) store
   must shadow the appended rows — the tombstone epoch must come from the
   store's ACTUAL partition layout, not an assumed ``shard=*`` glob.
-- medium: the re-shard rewrite must mergeSchema a store mixing
-  pre-lifecycle (seq-less) and appended (seq-ful) files, or upserted
+- medium: the re-shard rewrite must carry each row's seq, or upserted
   rows silently reset to epoch 0 and stay shadowed forever (row loss).
 - low: store rewrites must be crash-safe (r14: the original aside-marker
   protocol is superseded by the snapshot manifest — an interrupted
@@ -27,7 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from parallel_pandas_spark.operators import rollup, vecstore  # noqa: E402
 from parallel_pandas_spark.sources import load_table  # noqa: E402
-from parallel_pandas_spark.sources.loaders import write_partitioned  # noqa: E402
+from tests.conftest import fresh_store_from_quantizer  # noqa: E402
 
 
 def _emb(spark, n=40, d=8):
@@ -58,32 +57,23 @@ def test_ivf_delete_after_append_shadows_appended_rows(spark, sf_small, tmp_path
     assert not {r.neighbor_id for r in got.collect()} & set(dead)
     # and scoring equals a rebuild (same persisted centroids) from the
     # surviving corpus, ingested through the cell-aligned append path
-    import shutil
     surv = old.unionByName(new.where(~F.col("vec_id").isin(dead)))
     ref = str(tmp_path / "ivf_ref")
-    shutil.copytree(store + ".centroids", ref + ".centroids")
+    fresh_store_from_quantizer(store, ref)
     vecstore.append_ivf_store(surv, ref, "vec_id", "embedding")
     want = vecstore.ivf_topk_from_store(
         spark, ref, queries, "vec_id", "embedding", k=5, nprobe=16)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def _write_prelifecycle_store(spark, emb, store, dim, shards=2):
-    """A store as an older (pre-lifecycle) version wrote it: codes, no
-    ``seq`` column at all."""
-    enc = vecstore._int8_encode(emb, "vec_id", "embedding", dim, 8).withColumn(
-        "shard", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(shards)))
-    write_partitioned(enc, store, "shard")
-
-
 def test_reshard_merges_mixed_seq_schema_without_row_loss(spark, tmp_path):
-    """The r11 medium finding: re-shard read the store without
-    mergeSchema; on a store mixing seq-less and seq-ful files, inference
-    could pick a seq-less footer, after which every row reset to epoch 0
-    and standing tombstones permanently shadowed live upserted rows."""
+    """The r11 medium finding: an upserted row must survive a re-shard.
+    If the rewrite reset every row to epoch 0, the standing tombstone
+    would permanently shadow the live upserted row."""
     emb = _emb(spark, 40)
     store = str(tmp_path / "vs")
-    _write_prelifecycle_store(spark, emb, store, dim=8)
+    vecstore.write_vector_store(
+        emb, store, "vec_id", "embedding", dim=8, shards=2)
     # upsert id 5: tombstone (epoch 0), then append the new row (epoch 1)
     vecstore.delete_from_vector_store(spark, store, [5], "vec_id")
     upd = spark.createDataFrame(
@@ -112,19 +102,18 @@ def test_interrupted_rewrite_never_blocks_retry(spark, tmp_path):
     """r14 update of the r12 'leftover marker blocks rewrites' guard:
     under the manifest protocol an interrupted rewrite leaves only
     orphaned staging that the retry OVERWRITES — no marker, no manual
-    unblock step, and no stray staging after the retry commits. (A
-    pre-r14 ``.preswap`` aside is still refused loudly by
-    recover_store — pinned in test_recover_store_r12.)"""
+    unblock step, and no stray staging after the retry commits."""
     emb = _emb(spark, 20)
     store = str(tmp_path / "vs")
     vecstore.write_vector_store(emb, store, "vec_id", "embedding", dim=8, shards=2)
-    os.makedirs(store + "/_data-v00001/shard=0")  # crashed staging
+    staged = f"_data-v{vecstore._read_store_manifest(store)['txn'] + 1:05d}"
+    os.makedirs(f"{store}/{staged}/shard=0")  # crashed staging
     assert vecstore.compact_vector_store(spark, store, "vec_id") == 20
     man = vecstore._read_store_manifest(store)
-    assert man["txn"] == 1 and man["data"] == "_data-v00001"
+    assert man["data"] == staged
     # no orphans left behind by the committed rewrite's sweep
     assert [d for d in os.listdir(store) if d.startswith("_data-v")] == [
-        "_data-v00001"]
+        staged]
 
 
 def test_negate_state_raises_on_prefix_colliding_key(spark):

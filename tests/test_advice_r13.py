@@ -43,6 +43,7 @@ def test_recover_classifies_torn_manifest_tmp(spark, tmp_path, monkeypatch):
     store, emb = _store_with_tombstones(spark, tmp_path)
     q = emb.where(F.col("vec_id") < 3)
     before = _topk(spark, store, q)
+    man_before = vecstore._read_store_manifest(store)
     real_dump = json.dump
 
     def boom(obj, fh, *a, **k):
@@ -55,7 +56,7 @@ def test_recover_classifies_torn_manifest_tmp(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="injected"):
         vecstore.compact_vector_store(spark, store, "vec_id")
     monkeypatch.undo()
-    assert not os.path.isfile(vecstore._store_manifest_path(store))
+    assert vecstore._read_store_manifest(store) == man_before
     assert _topk(spark, store, q) == before
     assert vecstore.recover_store(store) == "rolled_back"
     assert not os.path.isfile(vecstore._store_manifest_path(store) + ".tmp")
@@ -68,7 +69,7 @@ def test_unreadable_committed_manifest_refused_loudly(spark, tmp_path):
     protocol (commits are write-then-rename from birth) — readers must
     refuse to guess rather than silently fall back to a stale layout."""
     store, emb = _store_with_tombstones(spark, tmp_path)
-    vecstore.compact_vector_store(spark, store, "vec_id")
+    os.remove(vecstore._store_manifest_path(store) + ".bak")  # none to restore
     with open(vecstore._store_manifest_path(store), "w") as fh:
         fh.write('{"txn": ')
     with pytest.raises(ValueError, match="unreadable store manifest"):

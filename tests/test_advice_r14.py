@@ -1,7 +1,7 @@
 """Round-14 ADVICE regressions (all five items from ADVICE.md r13):
 
-1. write_ivfpq_store(rotation=None) removes a pre-existing `.rotation`
-   sidecar — rebuilding an unrotated store over a previously OPQ-rotated
+1. write_ivfpq_store(rotation=None) removes a pre-existing `_rotation`
+   — rebuilding an unrotated store over a previously OPQ-rotated
    path must not leave readers rotating queries against unrotated codes.
 2. opq_train rejects dim % m != 0 instead of feeding uninitialized
    trailing columns to the Procrustes SVD.
@@ -46,7 +46,7 @@ def test_unrotated_rebuild_drops_stale_rotation_sidecar(
         emb, store, "vec_id", "embedding", m=8, ks=16, dim=64,
         num_centroids=4, rotation=R)
     assert vecstore.read_rotation(store) is not None
-    # rebuild UNROTATED over the same path: sidecar must disappear so
+    # rebuild UNROTATED over the same path: rotation must disappear so
     # queries score in the same (identity) space the codes encode
     vecstore.write_ivfpq_store(
         emb, store, "vec_id", "embedding", m=8, ks=16, dim=64,

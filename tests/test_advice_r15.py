@@ -127,7 +127,7 @@ def test_torn_final_manifest_restores_from_bak(spark, sf_small, tmp_path):
     snapshot's files are still on disk — recover_store restores the last
     committed manifest from the .bak and rolls the torn commit back."""
     _emb, path = _mk_ivf(spark, sf_small, tmp_path)
-    n = vs.compact_vector_store(spark, path)  # commit #1 (no prior bak)
+    n = vs.compact_vector_store(spark, path)
     good = dict(vs._read_store_manifest(path))
     # commit #2 whose rename tears: the .bak was written, the staged
     # version exists, the sweep never ran — simulated by no-op'ing the
@@ -153,8 +153,7 @@ def test_torn_final_manifest_restores_from_bak(spark, sf_small, tmp_path):
 
 
 def test_recover_refuses_torn_manifest_without_bak(spark, sf_small, tmp_path):
-    _emb, path = _mk_ivf(spark, sf_small, tmp_path)
-    vs.compact_vector_store(spark, path)  # single commit: no .bak yet
+    _emb, path = _mk_ivf(spark, sf_small, tmp_path)  # one commit: no .bak
     mp = vs._store_manifest_path(path)
     assert not os.path.isfile(mp + ".bak")
     with open(mp, "w") as fh:

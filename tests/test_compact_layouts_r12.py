@@ -41,11 +41,12 @@ def test_compact_ivf_store_reclaims_tombstones_bit_identically(
         os.path.basename(d)
         for d in glob.glob(vecstore._data_dir(store) + "/cell=*")
     )
+    tombs = vecstore._tombs_dir(store)
     n = vecstore.compact_vector_store(spark, store, "vec_id")
     assert n == emb.count() - len(dead)
     # tombstones physically gone, cell layout and centroids untouched
     # (the live data now resolves through the manifest's version dir)
-    assert not os.path.isdir(vecstore._tomb_path(store))
+    assert not os.path.isdir(tombs)
     assert vecstore._tombs_dir(store) is None
     assert (
         sorted(
@@ -87,12 +88,15 @@ def test_compact_ivfpq_codes_reclaims_tombstones_bit_identically(
             ).collect(),
         )
     )
+    tombs = vecstore._tombs_dir(f"{store}/codes")
+    cents = vecstore._read_store_manifest(f"{store}/codes")["cents"]
     n = vecstore.compact_vector_store(spark, f"{store}/codes", "vec_id")
     assert n == emb.count() - len(dead)
-    assert not os.path.isdir(vecstore._tomb_path(f"{store}/codes"))
-    # both quantizer sidecars survive in place
+    assert not os.path.isdir(tombs)
+    # both quantizers survive in place
     assert os.path.isdir(f"{store}/_books")
-    assert os.path.isdir(store + ".centroids")
+    assert vecstore._read_store_manifest(f"{store}/codes")["cents"] == cents
+    assert os.path.isdir(f"{store}/codes/{cents}")
     after = sorted(
         map(
             tuple,

@@ -1,6 +1,7 @@
 """Round-12: the unified IVF-PQ store (vecstore.write_ivfpq_store /
-ivfpq_topk_from_store) — PQ codes hive-partitioned by IVF cell, both
-quantizers as sidecars (the standard billion-vector IVFADC layout).
+ivfpq_topk_from_store) — PQ codes hive-partitioned by IVF cell, with
+both quantizers persisted in the store (the standard billion-vector
+IVFADC layout).
 Contract: scoring from the store bit-matches similarity.pq_topk with the
 SAME (stored) codebooks restricted to each query's probed cells, probe
 pruning reaches the scan as literal PartitionFilters, and the lifecycle
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from parallel_pandas_spark.operators import similarity, vecstore  # noqa: E402
 from parallel_pandas_spark.sources import load_table  # noqa: E402
+from tests.conftest import fresh_store_from_quantizer  # noqa: E402
 
 _K, _POOL, _NPROBE = 5, 50, 4
 
@@ -95,13 +97,12 @@ def test_ivfpq_append_and_delete_after_append(spark, sf_small, tmp_path):
     assert len(rows) == 4 * _K
     assert not {r.neighbor_id for r in rows} & set(dead)
     # append used the PERSISTED books + quantizer: codes bit-equal a
-    # store written fresh with the same sidecars over the survivors
+    # store written fresh with the same quantizers over the survivors
     import shutil
     surv = old.unionByName(new.where(~F.col("vec_id").isin(dead)))
     ref = str(tmp_path / "ivfpq_ref")
-    os.makedirs(ref)
+    fresh_store_from_quantizer(store, f"{ref}/codes")
     shutil.copytree(f"{store}/_books", f"{ref}/_books")
-    shutil.copytree(store + ".centroids", ref + ".centroids")
     vecstore.append_ivfpq_store(surv, ref, "vec_id", "embedding")
     want = vecstore.ivfpq_topk_from_store(
         spark, ref, emb, queries, "vec_id", "embedding",

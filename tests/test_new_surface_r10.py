@@ -233,10 +233,11 @@ def test_vector_store_is_compact_and_pruned(spark, sf_small, tmp_path):
     emb = load_table(spark, sf_small, "embeddings")
     store = str(tmp_path / "vs_sz")
     vecstore.write_vector_store(emb, store, "vec_id", "embedding", dim=64)
-    st = spark.read.parquet(store)
+    data = vecstore._data_dir(store)
+    st = spark.read.parquet(data)
     lens = st.select(F.length("codes").alias("l")).distinct().collect()
     assert [r["l"] for r in lens] == [64]
-    assert len(glob.glob(f"{store}/shard=*")) == 8
+    assert len(glob.glob(f"{data}/shard=*")) == 8
     pruned = st.where(F.col("shard") == 3)
     txt = explain.explain_str(pruned)
     assert "PartitionFilters" in txt and "shard" in txt.split("PartitionFilters")[1][:200]
@@ -262,7 +263,7 @@ def test_pq_store_bit_parity_fixture(spark, sf_small, tmp_path):
     assert g == sorted(map(tuple, ref.collect()))
     assert len(g) == 50
     # the code store is m=8 bytes per vector
-    st = spark.read.parquet(f"{store}/codes")
+    st = spark.read.parquet(vecstore._data_dir(f"{store}/codes"))
     lens = st.select(F.length("codes").alias("l")).distinct().collect()
     assert [r["l"] for r in lens] == [8]
 

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 
 import pytest
@@ -97,7 +96,7 @@ def test_recover_clean_store_is_noop(spark, tmp_path):
     before = _topk(spark, store, q)
     assert vecstore.recover_store(store) == "clean"
     assert _topk(spark, store, q) == before
-    assert os.path.isdir(vecstore._tomb_path(store))  # untouched
+    assert os.path.isdir(vecstore._tombs_dir(store))  # untouched
 
 
 def test_recover_discards_staged_only_rewrite(spark, tmp_path):
@@ -107,10 +106,12 @@ def test_recover_discards_staged_only_rewrite(spark, tmp_path):
     store, emb = _store_with_tombstones(spark, tmp_path)
     q = emb.where(F.col("vec_id") < 3)
     before = _topk(spark, store, q)
-    os.makedirs(store + "/_data-v00001/shard=0")
+    txn = vecstore._read_store_manifest(store)["txn"]
+    staged = f"{store}/_data-v{txn + 1:05d}"
+    os.makedirs(staged + "/shard=0")
     assert _topk(spark, store, q) == before  # orphan invisible
     assert vecstore.recover_store(store) == "rolled_back"
-    assert not os.path.isdir(store + "/_data-v00001")
+    assert not os.path.isdir(staged)
     assert _topk(spark, store, q) == before
     assert vecstore.compact_vector_store(spark, store, "vec_id") == 38
 
@@ -122,18 +123,21 @@ def test_recover_rolls_back_crash_before_commit(spark, tmp_path, monkeypatch):
     store, emb = _store_with_tombstones(spark, tmp_path)
     q = emb.where(F.col("vec_id") < 3)
     before = _topk(spark, store, q)
+    man_before = vecstore._read_store_manifest(store)
     _crash_on_manifest_commit(monkeypatch)
     with pytest.raises(RuntimeError, match="injected"):
         vecstore.compact_vector_store(spark, store, "vec_id")
     monkeypatch.undo()
     # staging exists but no manifest was published
-    assert any(d.startswith("_data-v") for d in os.listdir(store))
-    assert vecstore._read_store_manifest(store) is None
+    data = [d for d in os.listdir(store) if d.startswith("_data-v")]
+    assert len(data) == 2
+    assert vecstore._read_store_manifest(store) == man_before
     assert _topk(spark, store, q) == before  # reader never needed recovery
 
     assert vecstore.recover_store(store) == "rolled_back"
-    assert not any(d.startswith("_data-v") for d in os.listdir(store))
-    assert os.path.isdir(vecstore._tomb_path(store))
+    assert [d for d in os.listdir(store) if d.startswith("_data-v")] == [
+        man_before["data"]]
+    assert os.path.isdir(vecstore._tombs_dir(store))
     assert _topk(spark, store, q) == before
     assert vecstore.compact_vector_store(spark, store, "vec_id") == 38
     assert _topk(spark, store, q) == before
@@ -150,6 +154,7 @@ def test_recover_rolls_forward_crash_after_commit(
     store, emb = _store_with_tombstones(spark, tmp_path)
     ref, _ = _store_with_tombstones(spark, tmp_path, name="ref")
     q = emb.where(F.col("vec_id") < 3)
+    tombs = vecstore._tombs_dir(store)
     _crash_on_sweep(monkeypatch)
     with pytest.raises(RuntimeError, match="injected"):
         vecstore.compact_vector_store(spark, store, "vec_id")
@@ -157,13 +162,12 @@ def test_recover_rolls_forward_crash_after_commit(
     man = vecstore._read_store_manifest(store)
     assert man["data"].startswith("_data-v") and man["tombs"] is None
     # the reader already serves the committed snapshot, pre-recovery:
-    # the sibling tombstone dir still exists but the manifest says None
-    assert os.path.isdir(vecstore._tomb_path(store))
+    # the old tombstone dir still exists but the manifest says None
+    assert os.path.isdir(tombs)
     assert vecstore.load_vector_store(spark, store, "vec_id").count() == 38
 
     assert vecstore.recover_store(store) == "rolled_forward"
-    assert not os.path.isdir(vecstore._tomb_path(store))
-    assert not any(d.startswith("shard=") for d in os.listdir(store))
+    assert not os.path.isdir(tombs)
     assert vecstore.compact_vector_store(spark, ref, "vec_id") == 38
     assert _topk(spark, store, q) == _topk(spark, ref, q)
 
@@ -177,6 +181,7 @@ def test_torn_manifest_tmp_never_shadows_the_commit(
     store, emb = _store_with_tombstones(spark, tmp_path)
     q = emb.where(F.col("vec_id") < 3)
     before = _topk(spark, store, q)
+    man_before = vecstore._read_store_manifest(store)
     real_dump = json.dump
 
     def boom(obj, fh, *a, **k):
@@ -190,7 +195,7 @@ def test_torn_manifest_tmp_never_shadows_the_commit(
         vecstore.compact_vector_store(spark, store, "vec_id")
     monkeypatch.undo()
     # ...but never under the final name
-    assert not os.path.isfile(vecstore._store_manifest_path(store))
+    assert vecstore._read_store_manifest(store) == man_before
     assert os.path.isfile(vecstore._store_manifest_path(store) + ".tmp")
     assert _topk(spark, store, q) == before
 
@@ -210,15 +215,13 @@ def test_orphan_directories_invisible_and_swept(spark, tmp_path):
     vecstore.compact_vector_store(spark, store, "vec_id")  # -> manifest txn 1
     before = _topk(spark, store, q)
     man_before = vecstore._read_store_manifest(store)
-    # orphans: uncommitted future staging, superseded past garbage, and
-    # stray legacy root data
+    # orphans: uncommitted future staging and superseded past garbage
     os.makedirs(store + "/_data-v00999/shard=0")
     os.makedirs(store + "/_tombs-v00998")
-    os.makedirs(store + "/shard=7")
     assert _topk(spark, store, q) == before  # all invisible
     assert vecstore.load_vector_store(spark, store, "vec_id").count() == 38
     assert vecstore.recover_store(store) == "rolled_back"  # future staging
-    for d in ("_data-v00999", "_tombs-v00998", "shard=7"):
+    for d in ("_data-v00999", "_tombs-v00998"):
         assert not os.path.isdir(os.path.join(store, d)), d
     assert vecstore._read_store_manifest(store) == man_before
     assert _topk(spark, store, q) == before
@@ -230,8 +233,7 @@ def test_recover_never_promotes_stale_staged_quantizer(
     """A quantizer staged for a rebalance that never committed must be
     DISCARDED — in the r14 protocol it is the ``_cents-v<txn>`` orphan
     (and the commit flips cents+data together, so the old torn-pair
-    promotion hazard is structurally gone). A legacy pre-r14
-    ``.centroids.next`` is likewise discarded, never promoted."""
+    promotion hazard is structurally gone)."""
     from parallel_pandas_spark.sources import load_table
 
     emb = load_table(spark, sf_small, "embeddings")
@@ -256,18 +258,18 @@ def test_recover_never_promotes_stale_staged_quantizer(
     with pytest.raises(RuntimeError, match="injected"):
         vecstore.rebalance_ivf_store(spark, store, "vec_id", num_centroids=4)
     monkeypatch.undo()
-    assert any(d.startswith("_cents-v") for d in os.listdir(store))
+    live = vecstore._read_store_manifest(store)["cents"]
+
+    def _cents_dirs():
+        return sorted(d for d in os.listdir(store) if d.startswith("_cents-v"))
+
+    assert len(_cents_dirs()) == 2 and live in _cents_dirs()
     assert vecstore.read_ivf_centroids(store) == before_cents  # reader: old
 
     assert vecstore.recover_store(store) == "rolled_back"
-    assert not any(d.startswith("_cents-v") for d in os.listdir(store))
+    assert _cents_dirs() == [live]
     assert vecstore.read_ivf_centroids(store) == before_cents
     assert _ivf_topk() == before
-    # and the legacy stray: discarded as pre-commit staging
-    vecstore._write_centroids(store, [(0, [0.0] * 64)], suffix=".centroids.next")
-    assert vecstore.recover_store(store) == "clean"
-    assert not os.path.isdir(store + ".centroids.next")
-    assert vecstore.read_ivf_centroids(store) == before_cents
 
 
 def test_recover_reshard_preserves_tombstones(spark, tmp_path, monkeypatch):
@@ -281,6 +283,7 @@ def test_recover_reshard_preserves_tombstones(spark, tmp_path, monkeypatch):
         emb, store, "vec_id", "embedding", dim=8, shards=2
     )
     vecstore.delete_from_vector_store(spark, store, [3, 17], "vec_id")
+    tombs = vecstore._read_store_manifest(store)["tombs"]
     feed = spark.createDataFrame(
         [(100 + i, [float(i)] * 8) for i in range(5)],
         "vec_id long, embedding array<double>",
@@ -294,8 +297,8 @@ def test_recover_reshard_preserves_tombstones(spark, tmp_path, monkeypatch):
 
     assert vecstore.recover_store(store) == "rolled_forward"
     man = vecstore._read_store_manifest(store)
-    assert man["tombs"] == ".tombstones"  # NOT dropped
-    assert os.path.isdir(vecstore._tomb_path(store))
+    assert man["tombs"] == tombs  # NOT dropped
+    assert os.path.isdir(vecstore._tombs_dir(store))
     live = vecstore.load_vector_store(spark, store, "vec_id")
     assert live.count() == 43  # 40 - 2 deleted + 5 appended
     assert live.where(F.col("vec_id").isin([3, 17])).count() == 0
@@ -388,29 +391,6 @@ def test_recover_rebalance_forward_has_new_quantizer_and_cells(
         )
     )
     assert got == want
-
-
-def test_legacy_preswap_is_refused_loudly(spark, tmp_path):
-    """A store interrupted under the pre-r14 rename-swap protocol is not
-    silently guessed at — recover_store raises with instructions."""
-    store, emb = _store_with_tombstones(spark, tmp_path)
-    os.makedirs(store + ".preswap")
-    with pytest.raises(ValueError, match="pre-r14"):
-        vecstore.recover_store(store)
-    shutil.rmtree(store + ".preswap")
-    assert vecstore.recover_store(store) == "clean"
-
-
-def test_rewrite_refuses_legacy_preswap(spark, tmp_path):
-    """A leftover pre-r14 aside means the root is INCOMPLETE — a rewrite
-    committing a manifest over it would make the loss permanent, so it
-    must refuse exactly like recover_store does."""
-    store, emb = _store_with_tombstones(spark, tmp_path)
-    os.makedirs(store + ".preswap")
-    with pytest.raises(ValueError, match="pre-r14"):
-        vecstore.compact_vector_store(spark, store, "vec_id")
-    shutil.rmtree(store + ".preswap")
-    assert vecstore.compact_vector_store(spark, store, "vec_id") == 38
 
 
 def test_crashed_delete_orphan_never_rides_next_commit(

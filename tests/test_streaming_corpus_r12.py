@@ -12,6 +12,8 @@ import os
 import pathlib
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
@@ -88,14 +90,14 @@ def _members(df):
 
 
 def _assert_committed_layout(work):
-    """Layout invariants the readers (and the legacy _versions scan) rely
-    on: per-version directories with a _SUCCESS marker, and no staging
-    leftovers from the fused docindex+corpus write."""
+    """Layout invariants the readers rely on: a directory for every
+    version the manifest commits, and no staging leftovers from the
+    fused docindex+corpus write."""
     for art in ("docindex", "corpus", "delta"):
-        vers = glob.glob(os.path.join(work, art, "b*"))
+        vers = sc._live_ids(work, art)
         assert vers, art
-        for d in vers:
-            assert os.path.isfile(os.path.join(d, "_SUCCESS")), d
+        for v in vers:
+            assert os.path.isdir(sc._art_dir(work, art, v)), (art, v)
     assert not glob.glob(os.path.join(work, ".staging_b*"))
 
 
@@ -205,6 +207,28 @@ def _final_map(spark, base_state, work):
     return {r["lang"]: tuple(r)[1:] for r in fin.collect()}
 
 
+def test_first_batch_crash_before_commit_leaves_nothing_committed(
+    spark, tmp_path, monkeypatch
+):
+    """The first batch writes its artifact directories, then crashes
+    before its manifest commit: the work dir has committed nothing, and
+    the restarted loop replays the batch and matches the rebuild."""
+    base_di, base_state, work, run = _setup_loop(spark, tmp_path)
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash: manifest commit")
+
+    monkeypatch.setattr(sc, "_commit_manifest", boom)
+    with pytest.raises(Exception, match="injected"):
+        run(stop=1)
+    monkeypatch.undo()
+    assert os.path.isdir(sc._art_dir(work, "docindex", 0))  # written...
+    assert sc._live_ids(work, "docindex") == []  # ...never committed
+    run()
+    _, co, _ = sc.corpus_stream_readout(spark, base_state, work, _SPEC)
+    assert _members(co) == _members(_rebuild(spark, base_di)[1])
+
+
 def test_compaction_bounds_state_and_preserves_readout(spark, tmp_path):
     """Fold + vacuum after the loop completes: the delta set empties,
     old artifact versions go, and the read-out (now served straight
@@ -253,75 +277,11 @@ def test_compaction_mid_stream_then_restart_bit_equals_rebuild(
     assert got == want and len(got) >= 3
 
 
-def test_compaction_anchors_to_delta_horizon_on_midbatch_crash(
-    spark, tmp_path
-):
-    """LEGACY (manifest-less) layout: a batch writes docindex -> corpus
-    -> delta with no atomic commit, so a crash between the corpus and
-    delta writes of the LAST batch leaves the corpus one version ahead.
-    Compaction must fold only up to the newest DELTA (refreshing
-    against the corpus at that same version), so the replayed batch's
-    delta is not silently discarded as already-folded. (Under the r13
-    manifest this window cannot exist — the manifest rename commits all
-    three together — but pre-manifest work dirs migrate through this
-    exact path.)"""
-    import shutil
-
-    base_di, base_state, work, run = _setup_loop(spark, tmp_path)
-    run()
-    import glob as g
-
-    os.remove(os.path.join(work, "_MANIFEST.json"))  # pre-r13 layout
-    last_delta = sorted(g.glob(work + "/delta/b*"))[-1]
-    shutil.rmtree(last_delta)  # the crash window: corpus ahead of delta
-    res = sc.compact_corpus_artifacts(spark, base_state, work, _SPEC)
-    assert res["deltas_folded"] == 3
-    # snapshot id is the delta horizon, one behind the newest corpus
-    snap = sorted(g.glob(work + "/state/b*"))[-1]
-    newest_co = sorted(g.glob(work + "/corpus/b*"))[-1]
-    assert int(snap.rsplit("b", 1)[1]) == int(newest_co.rsplit("b", 1)[1]) - 1
-    # the replay (here: the runner re-delivering nothing new — rewrite
-    # the delta by hand as a replay would) is still merged by read-outs
-    # simulate the replay: recompute batch 4's delta exactly as the
-    # runner's write_batch does (snapshot below 4 = the retained b3)
-    from parallel_pandas_spark.operators import cdc
-
-    di3 = spark.read.parquet(sorted(g.glob(work + "/docindex/b*"))[-2])
-    co3 = spark.read.parquet(sorted(g.glob(work + "/corpus/b*"))[-2])
-    feed4 = spark.createDataFrame(_slices()[3], sc.DOC_CHANGES_SCHEMA)
-    changes = cdc.cdc_compact(
-        feed4, ["doc_id"], ["ts"], drop_deleted=False).drop("ts")
-    _, _, added, removed = incremental.refresh_corpus(
-        di3, co3, changes, id_col="doc_id", fp_col="fp")
-    delta4 = rollup.agg_state(added, ["lang"], _SPEC).unionByName(
-        rollup.negate_state(
-            rollup.agg_state(removed, ["lang"], _SPEC),
-            ["n_chars"], keys=["lang"]))
-    delta4.write.mode("overwrite").parquet(last_delta)
-    # ...and commits it, as write_batch's manifest transaction does
-    # (compaction migrated the dir to a manifest)
-    man = sc._init_manifest(work)
-    b4 = int(os.path.basename(last_delta)[1:])
-    man["deltas"] = sorted(set(man["deltas"]) | {b4})
-    man["txn"] += 1
-    sc._commit_manifest(work, man)
-
-    eff, keep = _rebuild(spark, base_di)
-    got = _final_map(spark, base_state, work)
-    want = {
-        r["lang"]: tuple(r)[1:]
-        for r in rollup.finalize(
-            rollup.agg_state(keep, ["lang"], _SPEC), ["lang"], _SPEC
-        ).collect()
-    }
-    assert got == want
-
-
 def test_compaction_purges_uncommitted_snapshot_and_refolds(
     spark, tmp_path
 ):
-    """A fold killed mid-write leaves a state snapshot without Spark's
-    _SUCCESS marker. Version resolution must ignore it and the next
+    """A fold killed mid-write leaves a state snapshot no manifest
+    references. Version resolution must ignore it and the next
     compaction must purge it and re-fold from the still-present deltas
     — treating the partial as committed would skip the fold AND vacuum
     the only data that could rebuild it (permanent corruption)."""

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from parallel_pandas_spark.operators import vecstore  # noqa: E402
 from parallel_pandas_spark.sources import load_table  # noqa: E402
+from tests.conftest import fresh_store_from_quantizer  # noqa: E402
 
 _K = 5
 
@@ -144,11 +145,12 @@ def test_compact_reclaims_tombstones_without_changing_results(spark, tmp_path):
     vecstore.append_vector_store(upd, store, "vec_id", "embedding", dim=8)
     queries = emb.where(F.col("vec_id") < 3)
     before = _topk(spark, store, queries)
+    tombs = vecstore._tombs_dir(store)
     n_live = vecstore.compact_vector_store(spark, store, "vec_id")
     # 50 - 3 deleted + 1 re-appended = 48 physical live rows
     assert n_live == 48
     assert vecstore._store_rows(store) == 48
-    assert not os.path.isdir(vecstore._tomb_path(store))
+    assert not os.path.isdir(tombs)
     assert _topk(spark, store, queries) == before
 
 
@@ -173,8 +175,7 @@ def test_pq_append_uses_persisted_books_and_upserts(spark, sf_small, tmp_path):
     enc = vecstore._with_seq(
         vecstore._pq_encode_df(emb, books, "vec_id", "embedding", 64), 0
     ).withColumn("shard", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(8)))
-    from parallel_pandas_spark.sources.loaders import write_partitioned
-    write_partitioned(enc, f"{ref}/codes", "shard")
+    vecstore._write_store(f"{ref}/codes", enc, "shard")
     want = sorted(map(tuple, vecstore.pq_topk_from_store(
         spark, ref, emb, queries, "vec_id", "embedding", k=_K, pool=50
     ).collect()))
@@ -229,12 +230,11 @@ def test_ivf_store_append_delete_upsert(spark, sf_small, tmp_path):
     got = sorted(map(tuple, vecstore.ivf_topk_from_store(
         spark, store, queries, "vec_id", "embedding", k=5, nprobe=4).collect()))
     # rebuild from the surviving corpus, REUSING the persisted centroids
-    # (the quantizer is fixed at fit time): copy the quantizer sidecar,
-    # ingest everything via the cell-aligned append path
+    # (the quantizer is fixed at fit time): start a store from the
+    # committed quantizer, ingest everything via the cell-aligned append
     surv = old.where(~F.col("vec_id").isin(2, 11)).unionByName(new).unionByName(upd)
     ref = str(tmp_path / "ivf_ref")
-    import shutil
-    shutil.copytree(store + ".centroids", ref + ".centroids")
+    fresh_store_from_quantizer(store, ref)
     vecstore.append_ivf_store(surv, ref, "vec_id", "embedding")
     want = sorted(map(tuple, vecstore.ivf_topk_from_store(
         spark, ref, queries, "vec_id", "embedding", k=5, nprobe=4).collect()))

@@ -59,10 +59,13 @@ def test_drift_rebalance_restores_balance_and_bit_matches_rebuild(
         feed, store, "vec_id", "embedding")  # no guard: no rebalance
     r_skew = vecstore.ivf_skew_ratio(vecstore.ivf_cell_rows(store))
     assert r_skew > 3.0  # the drifted feed really did pile up
+    tombs = vecstore._tombs_dir(store)
     r_new = vecstore.rebalance_ivf_store(spark, store, "vec_id")
     assert r_new < r_skew  # re-drawn quantizer split the whale region
-    assert not os.path.isdir(store + ".tombstones")  # resolved + dropped
-    assert not os.path.isdir(store + ".centroids.next")
+    assert not os.path.isdir(tombs)  # resolved + dropped
+    man = vecstore._read_store_manifest(store)
+    assert [d for d in os.listdir(store) if d.startswith("_cents-v")] == [
+        man["cents"]]
     # deletes survived the rebalance
     live = vecstore.load_vector_store(spark, store, "vec_id")
     assert live.where(F.col("vec_id").isin(5, 17)).count() == 0
